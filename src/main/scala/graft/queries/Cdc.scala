@@ -26,9 +26,8 @@ import graft.stream.TableStore
 object Cdc {
 
   /** The shared 5-batch CDC derivation (batch = event_id % 5): upsert
-    * and tombstone frames per batch, used by q44 (merge), q130 (A4
-    * stats) and q131 (T6 force refresh) so all three exercise the SAME
-    * workload.
+    * and tombstone frames per batch, shared by every batch-merge entry
+    * so all of them exercise the SAME workload.
     */
   private def cdcBatches(s: SparkSession, d: String)
       : (Int => DataFrame, Int => DataFrame) = {
@@ -392,22 +391,14 @@ object Cdc {
       import graft.stream.Ivm
       val root = Files.createTempDirectory("graft-ivm-").toString
       val store = new TableStore(s, s"$root/store", "user_id")
-      val ev = Tables.events(s, d).withColumn("batch", pmod(col("event_id"), lit(5)))
-      def upserts(b: Int) = ev.filter(col("batch") === b)
-        .filter(col("event_type") =!= "error")
-        .select(col("user_id"), col("event_type").as("last_type"),
-          col("value").as("last_value"),
-          struct(col("ts"), col("event_id")).as("seq"))
-      def tombstones(b: Int) = ev.filter(col("batch") === b)
-        .filter(col("event_type") === "error")
-        .select(col("user_id"))
+      val (upserts, tombstones) = cdcBatches(s, d)
 
       var view: Option[org.apache.spark.sql.DataFrame] = None
       for (b <- 0 until 5) {
         val prev = store.snapshot("state")
         store.merge("state", upserts(b), tombstones(b), s"batch_$b")
         val next = Ivm.applyDelta(
-          view, prev, Ivm.lastWins(upserts(b), "user_id"),
+          view, prev, TableStore.lastWins(upserts(b), "user_id"),
           tombstones(b).unionByName(upserts(b).select("user_id")),
           "user_id", "last_type", "last_value")
         next.write.mode("overwrite").parquet(s"$root/view/v${b + 1}")
@@ -447,15 +438,7 @@ object Cdc {
     (s, d) => {
       val root = Files.createTempDirectory("graft-tt-").toString
       val store = new TableStore(s, root, "user_id")
-      val ev = Tables.events(s, d).withColumn("batch", pmod(col("event_id"), lit(5)))
-      def upserts(b: Int) = ev.filter(col("batch") === b)
-        .filter(col("event_type") =!= "error")
-        .select(col("user_id"), col("event_type").as("last_type"),
-          col("value").as("last_value"),
-          struct(col("ts"), col("event_id")).as("seq"))
-      def tombstones(b: Int) = ev.filter(col("batch") === b)
-        .filter(col("event_type") === "error")
-        .select(col("user_id"))
+      val (upserts, tombstones) = cdcBatches(s, d)
       for (b <- 0 until 5)
         store.merge("state", upserts(b), tombstones(b), s"batch_$b")
 
@@ -566,16 +549,9 @@ object Cdc {
     (s, d) => {
       val root = Files.createTempDirectory("graft-vac-").toString
       val store = new TableStore(s, root, "user_id")
-      val ev = Tables.events(s, d).withColumn("batch", pmod(col("event_id"), lit(5)))
+      val (upserts, tombstones) = cdcBatches(s, d)
       for (b <- 0 until 5)
-        store.merge("state",
-          ev.filter(col("batch") === b && col("event_type") =!= "error")
-            .select(col("user_id"), col("event_type").as("last_type"),
-              col("value").as("last_value"),
-              struct(col("ts"), col("event_id")).as("seq")),
-          ev.filter(col("batch") === b && col("event_type") === "error")
-            .select(col("user_id")),
-          s"batch_$b")
+        store.merge("state", upserts(b), tombstones(b), s"batch_$b")
       val removed = store.vacuum("state", keepLast = 2)
       require(store.snapshotAt("state", 3).isEmpty,
         "vacuumed version must be unreadable")
@@ -620,21 +596,14 @@ object Cdc {
     (s, d) => {
       val root = Files.createTempDirectory("graft-se-").toString
       val store = new TableStore(s, root, "user_id")
-      val ev = Tables.events(s, d).withColumn("batch", pmod(col("event_id"), lit(5)))
-      def base(b: Int) = ev
-        .filter(col("batch") === b && col("event_type") =!= "error")
-        .select(col("user_id"), col("event_type").as("last_type"),
-          col("value").as("last_value"),
-          struct(col("ts"), col("event_id")).as("seq"))
+      val (upserts, tombstones) = cdcBatches(s, d)
       for (b <- 0 until 5) {
         val ups =
-          if (b < 2) base(b)
-          else base(b).withColumn("channel",
+          if (b < 2) upserts(b)
+          else upserts(b).withColumn("channel",
             concat(lit("ch_"), pmod(col("seq.event_id"), lit(3L)).cast("string")))
-        store.merge("state", ups,
-          ev.filter(col("batch") === b && col("event_type") === "error")
-            .select(col("user_id")),
-          s"batch_$b", allowSchemaEvolution = true)
+        store.merge("state", ups, tombstones(b), s"batch_$b",
+          allowSchemaEvolution = true)
       }
       store.snapshot("state").get
         .groupBy("last_type", "channel")

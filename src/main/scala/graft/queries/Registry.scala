@@ -52,18 +52,8 @@ object Sql {
   */
 object Scratch {
 
-  def rmTree(root: String): Unit = {
-    val p = java.nio.file.Paths.get(root)
-    if (java.nio.file.Files.exists(p)) {
-      val stream = java.nio.file.Files.walk(p)
-      try {
-        val it = stream
-          .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .iterator()
-        while (it.hasNext) java.nio.file.Files.deleteIfExists(it.next())
-      } finally stream.close()
-    }
-  }
+  def rmTree(root: String): Unit =
+    graft.util.Dirs.rmTree(java.nio.file.Paths.get(root))
 
   /** Land a frame as ONE file in `landingDir` under a sortable name
     * with an explicit modTime — the file-stream fixture pattern every

@@ -1,7 +1,6 @@
 package graft.stream
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** INCREMENTAL VIEW MAINTENANCE for distributive aggregates over a
@@ -29,19 +28,10 @@ import org.apache.spark.sql.functions._
   */
 object Ivm {
 
-  /** Within-batch last-wins dedup — TableStore.merge's rule, exposed
-    * so the view maintenance sees exactly the rows the merge applies.
-    */
-  def lastWins(upserts: DataFrame, keyCol: String): DataFrame = {
-    val w = Window.partitionBy(col(keyCol)).orderBy(col("seq").desc)
-    upserts.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .drop("__rn", "seq")
-  }
-
   /** One maintenance step. `view` is None before the first batch;
     * `prevSnapshot` is the table state BEFORE this merge (None on
-    * bootstrap); `dedupedUpserts` the batch's surviving rows;
+    * bootstrap); `dedupedUpserts` the batch's surviving rows
+    * ([[TableStore.lastWins]], the rows the merge applies);
     * `removedKeys` every key leaving the old snapshot (tombstones ∪
     * upsert keys, any single column). Returns the new view
     * (groupCol, n_keys, sum_dec) — caller materializes it (the

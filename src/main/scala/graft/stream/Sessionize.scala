@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import EventTime.micros
 
 /** Gap-based sessionization of the event stream, in both execution
   * models:
@@ -60,14 +61,6 @@ object Sessionize extends Serializable {
         graft.functions.Portable.dsum6(col("value")).as("total_value"))
       .orderBy("user_id", "sess_id")
   }
-
-  /** Full microsecond precision (shared concern with
-    * [[StreamAsOf]]): `Timestamp.getTime` alone truncates to
-    * milliseconds, which would make streaming gap comparisons coarser
-    * than the batch form's `unix_micros`.
-    */
-  private def micros(t: Timestamp): Long =
-    EventTime.micros(t)
 
   private def tsFromMicros(us: Long): Timestamp = {
     val t = new Timestamp(us / 1000000L * 1000L)

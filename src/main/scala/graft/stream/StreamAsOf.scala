@@ -3,6 +3,7 @@ package graft.stream
 import java.sql.Timestamp
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import EventTime.micros
 
 /** Streaming backward as-of join — the third execution model of the
   * as-of family ([[graft.ops.AsOf]] composes it from a window,
@@ -41,13 +42,6 @@ object StreamAsOf extends Serializable {
     * Encoder, as with [[Sessionize.SessState]]).
     */
   case class LastRight(tsUs: Long, seq: Long, payload: Double, lastSeenUs: Long)
-
-  /** Full microsecond precision — `Timestamp.getTime` alone truncates
-    * to milliseconds, which would coarsen as-of comparisons against
-    * microsecond event data.
-    */
-  private def micros(t: Timestamp): Long =
-    EventTime.micros(t)
 
   def backward(
       events: Dataset[Tagged],

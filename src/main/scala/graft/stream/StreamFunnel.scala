@@ -3,6 +3,7 @@ package graft.stream
 import java.sql.Timestamp
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import EventTime.micros
 
 /** Streaming FUNNEL — the incremental form of q101's strict-sequence
   * conversion analysis: each key runs a monotone stage machine
@@ -28,9 +29,6 @@ object StreamFunnel extends Serializable {
   case class Transition(key: Long, stage: Int, ts_us: Long, seq: Long)
   /** Keyed state (public for the state Encoder). */
   case class FunnelState(stage: Int, stageTsUs: Long, lastSeenUs: Long)
-
-  private def micros(t: Timestamp): Long =
-    EventTime.micros(t)
 
   /** `nStages`-stage funnel over a stream of staged events (stage ∈
     * 1..nStages; emit one Transition per stage advance).

@@ -4,6 +4,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import EventTime.micros
 
 /** Streaming SCD TYPE-2 change capture — the incremental form of q99's
   * batch history build: each key watches its attribute stream and
@@ -62,9 +63,6 @@ object StreamScd2 extends Serializable {
       key: Long, version: Long, state: String, ts_us: Long, seq: Long)
   /** Keyed state (public for the state Encoder). */
   case class Scd2State(current: String, version: Long)
-
-  private def micros(t: Timestamp): Long =
-    EventTime.micros(t)
 
   /** Unseeded mode: never-evicted state (see the class doc for why
     * eviction without a seed source would corrupt version numbering).

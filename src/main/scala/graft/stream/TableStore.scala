@@ -1,8 +1,11 @@
 package graft.stream
 
-import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import java.nio.file.{Files, Path, Paths}
+import scala.concurrent.Await
+import scala.concurrent.duration._
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.util.Dirs
 
 /** Keyed snapshot table with CDC MERGE semantics on plain parquet
   * (SURVEY T2/T3; reference behavior: pubmed.py:483-548,
@@ -18,6 +21,19 @@ import org.apache.spark.sql.functions._
   * matching the reference's apply order: DeleteCitation tombstones
   * first, then `ON CONFLICT DO UPDATE` upserts (pubmed.py:533-546) —
   * so an upsert in the same batch as a tombstone re-inserts the key.
+  *
+  * Last-wins ([[TableStore.lastWins]], the one definition merge and
+  * the incremental view maintenance share): the highest `seq` wins;
+  * rows tied on `seq` are ordered by their data columns in column
+  * order, so the pick never depends on partitioning or arrival order;
+  * a null `seq` sorts below every value, so a key whose `seq` is all
+  * null still keeps one whole row.
+  *
+  * Session rule: a merge builds every frame — the base snapshot read
+  * included — in the UPSERTS' session, so the snapshot write runs in
+  * the session its batch-stat observations are registered on. Inside
+  * a streaming `foreachBatch` that is the batch's cloned session, not
+  * the store's.
   *
   * Exactly-once per file (T2): every applied batch appends its
   * `source_filename` to an update_log table; re-applying a logged file
@@ -77,30 +93,24 @@ final class TableStore(spark: SparkSession, root: String, keyCol: String) {
     * Hidden `.staging-*` / `.crashed-*` dirs never match the `v`
     * prefix and are invisible here by construction.
     */
-  private def versions(table: String): Seq[Int] = {
-    val dir = Paths.get(tableDir(table))
-    if (!Files.exists(dir)) Seq.empty
-    else {
-      val stream = Files.list(dir)
-      try {
-        val it = stream.iterator()
-        val buf = scala.collection.mutable.ArrayBuffer[Int]()
-        while (it.hasNext) {
-          val p = it.next()
-          val name = p.getFileName.toString
-          if (name.startsWith("v") &&
-              Files.exists(p.resolve("_SUCCESS")))
-            buf += name.drop(1).toInt
-        }
-        buf.toSeq.sorted
-      } finally stream.close()
-    }
-  }
+  private def versions(table: String): Seq[Int] =
+    Dirs.list(Paths.get(tableDir(table)))
+      .filter(p => p.getFileName.toString.startsWith("v") &&
+        Files.exists(p.resolve("_SUCCESS")))
+      .map(_.getFileName.toString.drop(1).toInt)
+      .sorted
+
+  private def versionDir(table: String, v: Int): Path =
+    Paths.get(tableDir(table), s"v$v")
+
+  /** A fresh hidden staging dir for an attempt at version `v`. */
+  private def stagingDir(table: String, v: Int): Path =
+    Paths.get(tableDir(table), s".staging-v$v-${java.util.UUID.randomUUID()}")
 
   /** Latest committed snapshot, or None before the first merge. */
   def snapshot(table: String): Option[DataFrame] =
     versions(table).lastOption.map(v =>
-      spark.read.parquet(s"${tableDir(table)}/v$v"))
+      spark.read.parquet(versionDir(table, v).toString))
 
   /** TIME TRAVEL: the snapshot as of merge `version` (1-based — the
     * state after the version-th applied batch), or None if that
@@ -112,7 +122,7 @@ final class TableStore(spark: SparkSession, root: String, keyCol: String) {
     */
   def snapshotAt(table: String, version: Int): Option[DataFrame] =
     versions(table).find(_ == version).map(v =>
-      spark.read.parquet(s"${tableDir(table)}/v$v"))
+      spark.read.parquet(versionDir(table, v).toString))
 
   /** RETENTION: drop all but the newest `keepLast` snapshot versions —
     * the vacuum that bounds the q112 time-travel horizon (exactly the
@@ -124,32 +134,17 @@ final class TableStore(spark: SparkSession, root: String, keyCol: String) {
   def vacuum(table: String, keepLast: Int): Int = {
     require(keepLast >= 1, "must keep at least the current snapshot")
     val drop = versions(table).dropRight(keepLast)
-    drop.foreach { v =>
-      val dir = Paths.get(s"${tableDir(table)}/v$v")
-      val stream = Files.walk(dir)
-      try {
-        val it = stream.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .iterator()
-        while (it.hasNext) Files.deleteIfExists(it.next())
-      } finally stream.close()
-    }
+    drop.foreach(v => Dirs.rmTree(versionDir(table, v)))
     // Reap orphaned .staging-*/.crashed-* dirs left by crashed
     // writers (inert junk — never reader-visible). A LIVE writer's
-    // staging can be swept too; its claim then fails NoSuchFile and
-    // the merge retries, so vacuum stays safe to run concurrently.
-    val td = Paths.get(tableDir(table))
-    if (Files.exists(td)) {
-      val stream = Files.list(td)
-      try {
-        val it = stream.iterator()
-        while (it.hasNext) {
-          val p = it.next()
-          val n = p.getFileName.toString
-          if (n.startsWith(".staging-") || n.startsWith(".crashed-"))
-            rmTree(p)
-        }
-      } finally stream.close()
-    }
+    // staging can be swept too; the merge treats that as a lost claim
+    // and retries, so vacuum stays safe to run concurrently.
+    Dirs.list(Paths.get(tableDir(table)))
+      .filter { p =>
+        val n = p.getFileName.toString
+        n.startsWith(".staging-") || n.startsWith(".crashed-")
+      }
+      .foreach(Dirs.rmTree)
     drop.size
   }
 
@@ -205,26 +200,14 @@ final class TableStore(spark: SparkSession, root: String, keyCol: String) {
     * cheap "has any writer appended?" fingerprint the cache-miss path
     * compares against the listing its cache was read under).
     */
-  private def listLogFiles(): Set[String] = {
-    val dir = Paths.get(logDir)
-    if (!Files.exists(dir)) Set.empty
-    else {
-      val stream = Files.list(dir)
-      try {
-        val it = stream.iterator()
-        val buf = Set.newBuilder[String]
-        while (it.hasNext) {
-          val n = it.next().getFileName.toString
-          // exactly the names appendLog writes: a legacy parquet log
-          // dir (pre-round-16 layout) or any foreign file must not be
-          // read as JSONL — updateLog()'s spark scan is similarly
-          // name-scoped by the same convention
-          if (n.startsWith("log-") && n.endsWith(".json")) buf += n
-        }
-        buf.result()
-      } finally stream.close()
-    }
-  }
+  private def listLogFiles(): Set[String] =
+    Dirs.list(Paths.get(logDir)).map(_.getFileName.toString)
+      // exactly the names appendLog writes: a legacy parquet log dir
+      // (pre-round-16 layout) or any foreign file must not be read as
+      // JSONL — updateLog()'s spark scan is similarly name-scoped by
+      // the same convention
+      .filter(n => n.startsWith("log-") && n.endsWith(".json"))
+      .toSet
 
   /** Append one applied-file record: write the JSON line to a hidden
     * temp file and claim its final name with ONE atomic move — the
@@ -347,57 +330,28 @@ final class TableStore(spark: SparkSession, root: String, keyCol: String) {
     * re-ingest must use fresh source_filenames — exactly the
     * reference's wipe-and-reprocess flow.
     */
-  def forceRefresh(table: String): Unit = {
-    def rm(p: java.nio.file.Path): Unit = {
-      if (Files.isDirectory(p)) {
-        val stream = Files.list(p)
-        val children =
-          try {
-            val it = stream.iterator()
-            val buf = scala.collection.mutable.ArrayBuffer[java.nio.file.Path]()
-            while (it.hasNext) buf += it.next()
-            buf.toSeq
-          } finally stream.close()
-        children.foreach(rm)
-      }
-      Files.deleteIfExists(p)
-    }
-    rm(Paths.get(tableDir(table)))
-  }
+  def forceRefresh(table: String): Unit =
+    Dirs.rmTree(Paths.get(tableDir(table)))
 
-  /** Batch-stat count from an observation that rode the merge write,
-    * with a bounded wait: QueryExecutionListener events are delivered
-    * async, and for a merge nested inside a STREAMING foreachBatch the
-    * nested execution's end event never reaches the listener bus at
-    * all — `Observation.get` would block forever (empirically: the
-    * StreamIngest path). After ~1s, fall back to one small count()
-    * action; the count feeds only the A4 stats counters, so merge
-    * correctness is unaffected and the extra job occurs only where
-    * observation cannot deliver.
+  /** Batch-stat count from an observation that rode the merge write.
+    * The metrics arrive through the write session's async listener
+    * bus, typically a few ms after the action returns; the bound only
+    * turns a lost event into a loud failure instead of a hang. An
+    * empty row means the optimizer pruned the observed subtree as
+    * empty, so it counts 0. (One case undercounts: AQE drops the
+    * tombstone side of a SHUFFLED anti-join whose base snapshot
+    * turns out empty; at nightly batch sizes the key side is
+    * broadcast and never dropped that way.)
     */
-  private def observedCount(obs: org.apache.spark.sql.Observation,
-      input: DataFrame): Long = {
-    // listener delivery is typically a few ms behind the action (the
-    // bus is async); a flat 50 ms poll charged every merge ~100 ms of
-    // pure sleep (round-16 measurement), so back off exponentially:
-    // 2→4→…→50 ms up to the same ~1 s bound before the fallback
-    var waitedMs = 0L
-    var step = 2L
-    while (waitedMs < 1000L) {   // an unresolved observation yields Row.empty
-      org.apache.spark.sql.graftshim.GraftShim.observedOrEmpty(obs) match {
-        case Some(row) if row.length > 0 => return row.getLong(0)
-        case _ =>
-          Thread.sleep(step)
-          waitedMs += step
-          step = math.min(50L, step * 2)
-      }
-    }
-    input.count()
+  private def observedCount(obs: Observation): Long = {
+    val row = Await.result(obs.future, 60.seconds)
+    if (row.length == 0) 0L else row.getLong(0)
   }
 
   /** Test seam for TableStoreRaceSpec: runs between the staging write
-    * and the atomic version claim, the exact window where a racing
-    * writer's commit can land first.
+    * (and its listing) and the staged-bytes resize and atomic version
+    * claim — the window where a racing writer's commit, or a vacuum
+    * sweeping the staging dir, can land first.
     */
   private[graft] var onBeforeCommit: () => Unit = () => ()
 
@@ -411,19 +365,19 @@ final class TableStore(spark: SparkSession, root: String, keyCol: String) {
     * committed dir appears only via this rename, _SUCCESS included,
     * and a non-empty target always fails the rename).
     */
-  private def claimVersion(table: String, v: Int, staging: String): Boolean = {
-    val target = Paths.get(s"${tableDir(table)}/v$v")
+  private def claimVersion(table: String, v: Int, staging: Path): Boolean = {
+    val target = versionDir(table, v)
     if (Files.exists(target) && !Files.exists(target.resolve("_SUCCESS"))) {
       val aside = Paths.get(s"${tableDir(table)}/.crashed-v$v-" +
         java.util.UUID.randomUUID())
       try {
         Files.move(target, aside,
           java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        rmTree(aside)
+        Dirs.rmTree(aside)
       } catch { case _: java.nio.file.NoSuchFileException => () }
     }
     try {
-      Files.move(Paths.get(staging), target,
+      Files.move(staging, target,
         java.nio.file.StandardCopyOption.ATOMIC_MOVE)
       true
     } catch {
@@ -438,61 +392,24 @@ final class TableStore(spark: SparkSession, root: String, keyCol: String) {
     }
   }
 
-  /** Total bytes of the data files under a snapshot version dir
-    * (driver-side walk; markers and hidden files excluded).
+  /** (count, total bytes) of the data files in a snapshot or staging
+    * dir from one directory listing; markers and hidden files
+    * excluded.
     */
-  private def dirDataBytes(dir: java.nio.file.Path): Long =
-    if (!Files.exists(dir)) 0L
-    else {
-      val stream = Files.list(dir)
-      try {
-        val it = stream.iterator()
-        var total = 0L
-        while (it.hasNext) {
-          val p = it.next()
-          val n = p.getFileName.toString
-          if (!n.startsWith(".") && !n.startsWith("_") && Files.isRegularFile(p))
-            total += Files.size(p)
-        }
-        total
-      } finally stream.close()
+  private def dataFiles(dir: Path): (Long, Long) = {
+    val files = Dirs.list(dir).filter { p =>
+      val n = p.getFileName.toString
+      !n.startsWith(".") && !n.startsWith("_") && Files.isRegularFile(p)
     }
-
-  /** Count of data files under a snapshot/staging dir (markers and
-    * hidden files excluded), driver-side.
-    */
-  private def dataFileCount(dir: java.nio.file.Path): Long =
-    if (!Files.exists(dir)) 0L
-    else {
-      val stream = Files.list(dir)
-      try {
-        val it = stream.iterator()
-        var n = 0L
-        while (it.hasNext) {
-          val p = it.next()
-          val name = p.getFileName.toString
-          if (!name.startsWith(".") && !name.startsWith("_") &&
-              Files.isRegularFile(p)) n += 1
-        }
-        n
-      } finally stream.close()
-    }
-
-  private def rmTree(dir: java.nio.file.Path): Unit =
-    if (Files.exists(dir)) {
-      val stream = Files.walk(dir)
-      try {
-        val it = stream
-          .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .iterator()
-        while (it.hasNext) Files.deleteIfExists(it.next())
-      } finally stream.close()
-    }
+    (files.size.toLong, files.map(Files.size).sum)
+  }
 
   /** MERGE one CDC batch. `upserts` must contain `keyCol` plus a `seq`
-    * ordering column for within-batch last-wins (P9); `tombstones` is a
-    * one-column frame of keys to delete. Returns true if applied, false
-    * if `sourceFilename` was already logged (idempotent re-run).
+    * ordering column for within-batch last-wins (P9; tie and null-`seq`
+    * rules at [[TableStore.lastWins]]); `tombstones` is a one-column
+    * frame of keys to delete, built in the upserts' session (class doc,
+    * session rule). Returns true if applied, false if `sourceFilename`
+    * was already logged (idempotent re-run).
     */
   def merge(table: String, upserts: DataFrame, tombstones: DataFrame,
       sourceFilename: String): Boolean =
@@ -509,6 +426,9 @@ final class TableStore(spark: SparkSession, root: String, keyCol: String) {
   def merge(table: String, upserts: DataFrame, tombstones: DataFrame,
       sourceFilename: String, allowSchemaEvolution: Boolean): Boolean = {
     if (isApplied(table, sourceFilename)) return false
+    // Session rule (class doc): the write must run in the session the
+    // observations below register on, which is the upserts' session
+    val session = upserts.sparkSession
 
     // Optimistic-commit loop (class doc, Concurrency contract): each
     // attempt recomputes against the CURRENT snapshot, stages the
@@ -523,31 +443,14 @@ final class TableStore(spark: SparkSession, root: String, keyCol: String) {
       // metrics (CollectMetrics on each input's single-consumption
       // path) — no extra count() actions re-running the upstream
       // lineage. Fresh per attempt: an Observation is single-use.
-      val obsUp = org.apache.spark.sql.Observation()
-      val obsTomb = org.apache.spark.sql.Observation()
+      val obsUp = Observation()
+      val obsTomb = Observation()
 
-      // last-wins within the batch (pubmed.py:492-504, reverse-pop
-      // loop). The observation sits on the union path, which consumes
-      // the raw upserts exactly once (Catalyst clones shared subtrees,
-      // and a duplicated CollectMetrics name is an analysis error).
-      // max_by partial aggregation instead of a row_number window
-      // (round 17, guide §2.3 "aggregate before you shuffle"): the
-      // window shuffled EVERY raw upsert row and then sorted each key
-      // group to keep one row; max_by keeps at most one row per key
-      // per map partition before the exchange and needs no sort.
-      // Equivalent by construction: `seq` is unique per key within a
-      // batch (the API contract every caller satisfies — an ordering
-      // column exists to be unambiguous), so "max_by(seq)" selects
-      // exactly the row row_number()=1 selected under ORDER BY seq
-      // DESC, including struct-typed seq (both compare structs
-      // lexicographically).
-      val dataCols = upserts.columns.filterNot(_ == "seq")
-      val dedupedUpserts = upserts
-        .observe(obsUp, count(lit(1)).as("n"))
-        .groupBy(col(keyCol))
-        .agg(max_by(struct(dataCols.map(col): _*), col("seq")).as("__r"))
-        .select(dataCols.map(c =>
-          if (c == keyCol) col(keyCol) else col("__r").getField(c).as(c)): _*)
+      // The observation sits on the last-wins path, which consumes the
+      // raw upserts exactly once (Catalyst clones shared subtrees, and
+      // a duplicated CollectMetrics name is an analysis error).
+      val dedupedUpserts = TableStore.lastWins(
+        upserts.observe(obsUp, count(lit(1)).as("n")), keyCol)
 
       // The BASE version is read ONCE per attempt and the claim is
       // pinned to base+1: claiming "whatever is latest now + 1"
@@ -574,7 +477,7 @@ final class TableStore(spark: SparkSession, root: String, keyCol: String) {
           // (removed iff key ∈ T ∪ U), and one broadcast build per
           // merge instead of two (round 16; each build is its own job
           // on the nightly path)
-          spark.read.parquet(s"${tableDir(table)}/v$baseV")
+          session.read.parquet(versionDir(table, baseV).toString)
             .join(tombstones
                 .observe(obsTomb, count(lit(1)).as("n"))
                 .select(col(tombstones.columns.head).as(keyCol))
@@ -585,8 +488,6 @@ final class TableStore(spark: SparkSession, root: String, keyCol: String) {
         }
 
       val v = baseV + 1
-      var staging = s"${tableDir(table)}/.staging-v$v-" +
-        java.util.UUID.randomUUID()
       // Output file sizing (nightly tables accumulate versions; a
       // snapshot scattered across one file per upstream task pays
       // listing + footer + open cost on every later read): size the
@@ -603,11 +504,16 @@ final class TableStore(spark: SparkSession, root: String, keyCol: String) {
         math.max(1L, math.min(1 << 20, bytes / targetFileBytes + 1))
       val sized =
         if (bootstrap) next
-        else {
-          val prevBytes = dirDataBytes(Paths.get(s"${tableDir(table)}/v$baseV"))
-          next.coalesce(fileTarget(prevBytes).toInt)
-        }
-      sized.write.mode(SaveMode.Overwrite).parquet(staging)
+        else next.coalesce(fileTarget(dataFiles(versionDir(table, baseV))._2).toInt)
+      var staging = stagingDir(table, v)
+      sized.write.mode(SaveMode.Overwrite).parquet(staging.toString)
+      val upsertsSeen = observedCount(obsUp)
+      // Bootstrap: tombstones are a no-op and never execute, so the
+      // observation never fires — count them with one small extra
+      // job, first merge of a table's life only.
+      val tombstonesSeen =
+        if (bootstrap) tombstones.count() else observedCount(obsTomb)
+
       // Correct the sizing from the ACTUAL staged bytes (round 17):
       // sizing from the previous version under-sizes a merge that
       // grows the table (a doubling merge writes ~256 MB files until
@@ -617,27 +523,28 @@ final class TableStore(spark: SparkSession, root: String, keyCol: String) {
       // the claim — a second job only on large-growth merges, never on
       // the steady-state nightly path (the check itself is one
       // driver-side listing).
-      val stagedBytes = dirDataBytes(Paths.get(staging))
-      val stagedFiles = dataFileCount(Paths.get(staging))
-      if (stagedFiles > 0 && stagedBytes > 2L * targetFileBytes * stagedFiles) {
-        val resized = s"${tableDir(table)}/.staging-v$v-" +
-          java.util.UUID.randomUUID()
-        spark.read.parquet(staging)
-          .repartition(fileTarget(stagedBytes).toInt)
-          .write.mode(SaveMode.Overwrite).parquet(resized)
-        rmTree(Paths.get(staging))
-        staging = resized
-      }
-      onBeforeCommit()
-      if (claimVersion(table, v, staging)) {
+      val resized = stagingDir(table, v)
+      val claimed =
+        try {
+          val (stagedFiles, stagedBytes) = dataFiles(staging)
+          onBeforeCommit()
+          if (stagedFiles > 0 && stagedBytes > 2L * targetFileBytes * stagedFiles) {
+            session.read.parquet(staging.toString)
+              .repartition(fileTarget(stagedBytes).toInt)
+              .write.mode(SaveMode.Overwrite).parquet(resized.toString)
+            Dirs.rmTree(staging)
+            staging = resized
+          }
+          claimVersion(table, v, staging)
+        } catch {
+          // a concurrent vacuum() swept the staging dir mid-resize: the
+          // same lost claim claimVersion reports for a swept dir
+          case _: Exception if !Files.exists(staging) => false
+        }
+      if (claimed) {
         mergedBatches.add(1)
-        mergedUpserts.add(observedCount(obsUp, upserts))
-        // Bootstrap: tombstones are a no-op and never execute, so the
-        // observation never fires — count them with one small extra
-        // job, first merge of a table's life only.
-        mergedTombstones.add(
-          if (bootstrap) tombstones.count()
-          else observedCount(obsTomb, tombstones))
+        mergedUpserts.add(upsertsSeen)
+        mergedTombstones.add(tombstonesSeen)
 
         val logFile = appendLog(table, sourceFilename)
         appliedCache(table) += sourceFilename
@@ -648,7 +555,8 @@ final class TableStore(spark: SparkSession, root: String, keyCol: String) {
         cacheListing.keys.foreach(t => cacheListing(t) += logFile)
         return true
       }
-      rmTree(Paths.get(staging))
+      Dirs.rmTree(staging)
+      Dirs.rmTree(resized)
       // the winner may have applied THIS file (same-file race): the
       // exactly-once gate re-checks the log before the next attempt
       if (isApplied(table, sourceFilename)) return false
@@ -681,21 +589,51 @@ final class TableStore(spark: SparkSession, root: String, keyCol: String) {
       attempt += 1
       val vs = versions(table)
       require(vs.nonEmpty, s"no snapshot to compact for table $table")
-      val cur = spark.read.parquet(s"${tableDir(table)}/v${vs.last}")
+      val cur = spark.read.parquet(versionDir(table, vs.last).toString)
       val v = vs.last + 1
-      val staging = s"${tableDir(table)}/.staging-v$v-" +
-        java.util.UUID.randomUUID()
+      val staging = stagingDir(table, v)
       cur.repartition(numFiles).write
-        .mode(SaveMode.Overwrite).parquet(staging)
+        .mode(SaveMode.Overwrite).parquet(staging.toString)
       onBeforeCommit()
       // same optimistic claim as merge: losing means a writer
       // committed a NEWER snapshot — compacting the stale one would
       // be wasted work, so recompute from the fresh latest
       if (claimVersion(table, v, staging)) return v
-      rmTree(Paths.get(staging))
+      Dirs.rmTree(staging)
       require(attempt < 16,
         s"compaction of $table lost $attempt version claims in a row")
     }
     -1 // unreachable
+  }
+}
+
+object TableStore {
+
+  /** Within-batch LAST-WINS (P9; the reference's reverse-pop loop,
+    * pubmed.py:492-504): one row per `keyCol`, the one with the highest
+    * `seq`. The single definition [[TableStore.merge]] and the
+    * incremental view maintenance ([[Ivm]], q111) share, so both always
+    * see the same surviving rows.
+    *
+    * Ties: rows with equal `seq` are ordered by their data columns in
+    * column order, so the pick depends only on the rows' values —
+    * never on partitioning or arrival order. Nulls: a null `seq` sorts
+    * below every value, so a key whose `seq` is all null still keeps
+    * one whole row (the tie rule picks it), not NULL columns.
+    *
+    * One `max` over struct(seq, row) — a partial aggregation keeps at
+    * most one row per key per map partition before the exchange, with
+    * no window sort (round 17: aggregate before you shuffle). Returns
+    * every column but `seq`, in input order.
+    */
+  def lastWins(upserts: DataFrame, keyCol: String): DataFrame = {
+    val dataCols = upserts.columns.filterNot(_ == "seq")
+    val row = col("__w").getField("row")
+    upserts
+      .groupBy(col(keyCol))
+      .agg(max(struct(col("seq"), struct(dataCols.map(col): _*).as("row")))
+        .as("__w"))
+      .select(dataCols.map(c =>
+        if (c == keyCol) col(keyCol) else row.getField(c).as(c)): _*)
   }
 }

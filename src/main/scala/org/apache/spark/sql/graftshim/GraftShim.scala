@@ -13,16 +13,6 @@ object GraftShim {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
-  /** Bounded-wait observation read (≤100ms): `getRowOrEmpty` is
-    * `private[sql]`, but it is the only safe way to consume observed
-    * metrics from a context where the listener event may never arrive
-    * (a merge nested in a streaming foreachBatch). `getOrEmpty` is NOT
-    * usable for this: on a missing row it maps over `Row.empty.schema`,
-    * which is null → NPE.
-    */
-  def observedOrEmpty(obs: org.apache.spark.sql.Observation): Option[org.apache.spark.sql.Row] =
-    obs.getRowOrEmpty
-
   /** Build a DataFrame from a custom LogicalPlan node (the entry every
     * custom-operator library needs; `Dataset.ofRows` is `private[sql]`).
     */

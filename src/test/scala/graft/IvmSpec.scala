@@ -9,8 +9,9 @@ import graft.stream.{Ivm, TableStore}
 /** The incremental-view delta rule pinned against full recompute after
   * EVERY batch of an adversarial CDC stream: key migration between
   * groups, group death (count → 0 must drop the row), tombstone+upsert
-  * of the same key in one batch (re-insert), within-batch last-wins,
-  * and value churn that only exact-decimal cancellation survives.
+  * of the same key in one batch (re-insert), within-batch last-wins
+  * (tied `seq` included: merge and view must pick the same row), and
+  * value churn that only exact-decimal cancellation survives.
   */
 class IvmSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -43,10 +44,15 @@ class IvmSpec extends AnyFunSuite {
       (2, "d", 4L, "", 0.0, 8L), (2, "d", 3L, "", 0.0, 9L),
       (2, "u", 3L, "a", -7.25, 10L),
       // batch 3: everything lands in one group; exact cancellation
-      (3, "u", 1L, "a", -10.5, 11L), (3, "u", 2L, "a", -0.1, 12L)
+      (3, "u", 1L, "a", -10.5, 11L), (3, "u", 2L, "a", -0.1, 12L),
+      // batch 4: tied seq within a key — key 1 has two rows in
+      // different groups, key 2 two values in one group; the view
+      // only matches the merge if both break the tie the same way
+      (4, "u", 1L, "d", 3.0, 20L), (4, "u", 1L, "b", 4.0, 20L),
+      (4, "u", 2L, "a", 1.25, 21L), (4, "u", 2L, "a", 8.5, 21L)
     )
     var view: Option[DataFrame] = None
-    for (b <- 0 to 3) {
+    for (b <- 0 to 4) {
       val rows = streamRows.filter(_._1 == b)
       val ups = rows.filter(_._2 == "u")
         .map(r => (r._3, r._4, r._5, r._6))
@@ -54,7 +60,7 @@ class IvmSpec extends AnyFunSuite {
       val tombs = rows.filter(_._2 == "d").map(_._3).toDF("user_id")
       val prev = store.snapshot("state")
       store.merge("state", ups, tombs, s"b$b")
-      val next = Ivm.applyDelta(view, prev, Ivm.lastWins(ups, "user_id"),
+      val next = Ivm.applyDelta(view, prev, TableStore.lastWins(ups, "user_id"),
         tombs.unionByName(ups.select("user_id")),
         "user_id", "last_type", "last_value")
       next.write.mode("overwrite").parquet(s"$root/view/v$b")

@@ -51,6 +51,11 @@ class StreamIngestSpec extends AnyFunSuite {
     // T5: the maintained count matview reflects the final snapshot
     val mv = spark.read.parquet(store.matviewDir("t")).collect()
     assert(mv.length === 1 && mv.head.getLong(0) === 1L)
+    // A4: the batch counters ride the streamed merges (3 files, 5 raw
+    // upsert rows, 2 raw tombstone rows)
+    assert(store.mergedBatches.value === 3L)
+    assert(store.mergedUpserts.value === 5L)
+    assert(store.mergedTombstones.value === 2L)
   }
 
   test("restarted stream re-delivery is idempotent (update_log gates)") {

@@ -3,6 +3,7 @@ package graft
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
 import graft.stream.TableStore
 
 /** TRUE concurrent-writer interleavings for [[TableStore]]'s
@@ -106,6 +107,33 @@ class TableStoreRaceSpec extends AnyFunSuite {
     assert(state(a) === Map("k1" -> "x"))
     assert(a.snapshot("t").isDefined)
     assert(a.snapshotAt("t", 2).isEmpty, "no second version may exist")
+  }
+
+  test("vacuum sweeping the staging dir mid-resize is a lost claim: retried") {
+    // a tiny conf'd file-size target makes every staged snapshot
+    // "oversized", so the staged-bytes resize re-reads the staging dir
+    spark.conf.set("spark.graft.snapshot.targetFileBytes", "1024")
+    try {
+      val root = freshRoot()
+      val a = new TableStore(spark, root, "k")
+      val b = new TableStore(spark, root, "k")
+      assert(a.merge("t", ups(("base", "0", 1)), dels(), "f0"))
+      // the seam runs after A's staging listing and before the resize
+      // reads the dir back: B's vacuum sweeps it there, once
+      val attempts = new java.util.concurrent.atomic.AtomicInteger(0)
+      a.onBeforeCommit = () =>
+        if (attempts.getAndIncrement() == 0) b.vacuum("t", keepLast = 1)
+      val big = spark.range(500).select(concat(lit("k"), col("id")).as("k"),
+        concat(lit("x" * 200), col("id")).as("v"), col("id").as("seq"))
+      assert(a.merge("t", big.repartition(1), dels(), "f1"),
+        "the swept attempt must retry and commit, not fail the job")
+      assert(attempts.get === 2, "exactly one retry after the sweep")
+      assert(a.snapshot("t").get.count() === 501)
+      assert(a.snapshotAt("t", 2).isDefined && a.snapshotAt("t", 3).isEmpty,
+        "the retry commits v2; the swept attempt leaves no version")
+      assert(a.mergedBatches.value === 2L && a.mergedUpserts.value === 501L,
+        "a swept attempt must not move the batch counters")
+    } finally spark.conf.unset("spark.graft.snapshot.targetFileBytes")
   }
 
   test("unsynchronized stress: interleaved writers serialize, nothing lost") {

@@ -41,6 +41,27 @@ class TableStoreSpec extends AnyFunSuite {
     assert(state(s) === Map("a" -> "last"))
   }
 
+  test("tied seq keeps the same row at 1 or 8 input partitions") {
+    // ties break by the data columns in column order: "z" is the max v
+    val rows = Seq(("a", "x", 7L), ("a", "z", 7L), ("a", "y", 7L),
+      ("b", "q", 2L), ("b", "p", 2L), ("b", "old", 1L))
+    val picks = Seq(1, 8).map { n =>
+      val s = freshStore()
+      s.merge("t", rows.toDF("k", "v", "seq").repartition(n), dels(), "f0")
+      state(s)
+    }
+    assert(picks.head === Map("a" -> "z", "b" -> "q"))
+    assert(picks.last === picks.head)
+  }
+
+  test("all-null seq keeps a whole row; a non-null seq beats null") {
+    val s = freshStore()
+    val rows = Seq[(String, String, Option[Long])](("a", "x", None),
+      ("a", "y", None), ("b", "late", Some(1L)), ("b", "null-seq", None))
+    s.merge("t", rows.toDF("k", "v", "seq"), dels(), "f0")
+    assert(state(s) === Map("a" -> "y", "b" -> "late"))
+  }
+
   test("tombstone + upsert in the same batch re-inserts (reference order)") {
     val s = freshStore()
     s.merge("t", ups(("a", "0", 1)), dels(), "f0")
