@@ -24,6 +24,16 @@ import org.apache.spark.sql.Dataset
   * plans, benches and censuses are byte-identical to the direct calls
   * this helper replaced.
   *
+  * An eager reliable checkpoint evaluates the subtree ONCE: Spark 4.1
+  * writes the checkpoint files in the same job that computes the rows
+  * (`RDD.doCheckpoint`, no separate counting job), so no persist is
+  * needed in front of it (ReuseSpec counts the evaluations). Reliable
+  * checkpoint files are NOT removed when the pinned Dataset goes away
+  * (`spark.cleaner.referenceTracking.cleanCheckpoints` is off by
+  * default): they accumulate under the checkpoint dir for the life of
+  * the session, so a deployment that sets the reliable conf owns that
+  * directory's cleanup.
+  *
   * Both branches are EAGER and both are recomputed inside every query
   * invocation — nothing persists across bench runs (the no-caching
   * contract; `cleanSession` unpersists the blocks between runs).

@@ -196,18 +196,31 @@ final class TableStore(spark: SparkSession, root: String, keyCol: String) {
 
   private val jsonMapper = new com.fasterxml.jackson.databind.ObjectMapper()
 
-  /** Non-hidden log file names currently in the log directory (the
-    * cheap "has any writer appended?" fingerprint the cache-miss path
-    * compares against the listing its cache was read under).
+  /** Log file names currently in the log directory (the cheap "has
+    * any writer appended?" fingerprint the cache-miss path compares
+    * against the listing its cache was read under).
+    *
+    * Exactly the names appendLog writes: a legacy parquet log dir
+    * (pre-round-16 layout) or any foreign file must not be read as
+    * JSONL — updateLog()'s spark scan is name-scoped by the same
+    * convention. Such entries are ignored, so the files they record
+    * would be re-applied; the first listing that meets one prints a
+    * warning, once per store instance, from the same listing (no
+    * extra filesystem call). Hidden names are in-flight appends.
     */
-  private def listLogFiles(): Set[String] =
-    Dirs.list(Paths.get(logDir)).map(_.getFileName.toString)
-      // exactly the names appendLog writes: a legacy parquet log dir
-      // (pre-round-16 layout) or any foreign file must not be read as
-      // JSONL — updateLog()'s spark scan is similarly name-scoped by
-      // the same convention
-      .filter(n => n.startsWith("log-") && n.endsWith(".json"))
-      .toSet
+  private def listLogFiles(): Set[String] = {
+    val (logs, other) = Dirs.list(Paths.get(logDir)).map(_.getFileName.toString)
+      .partition(n => n.startsWith("log-") && n.endsWith(".json"))
+    other.find(!_.startsWith(".")).foreach { n =>
+      if (warnedForeignLog.compareAndSet(false, true))
+        System.err.println(s"[graft] warn: update log $logDir holds entries that " +
+          s"are not log-*.json (e.g. $n; the pre-round-16 parquet layout?); they " +
+          "are ignored, so the files they record as applied will be re-applied")
+    }
+    logs.toSet
+  }
+
+  private val warnedForeignLog = new java.util.concurrent.atomic.AtomicBoolean(false)
 
   /** Append one applied-file record: write the JSON line to a hidden
     * temp file and claim its final name with ONE atomic move — the

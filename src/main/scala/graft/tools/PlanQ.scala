@@ -1,5 +1,5 @@
 // Deliberately in the default package so the sbt invocation stays
-// `runMain PlanQ ...` (like ExplainQ/Plans, the dev-loop plan tools).
+// `runMain PlanQ ...` (like Plans, the dev-loop plan tool).
 object PlanQ {
   def main(args: Array[String]): Unit = {
     // optional leading sfDir argument (a path contains '/'); query

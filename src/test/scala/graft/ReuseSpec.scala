@@ -40,4 +40,26 @@ class ReuseSpec extends AnyFunSuite {
       spark.conf.unset("spark.graft.checkpoint.reliable")
     }
   }
+
+  test("reliable mode evaluates the pinned subtree once per row") {
+    spark.sparkContext.setCheckpointDir(Files.createTempDirectory("reuse-ckpt-").toString)
+    spark.conf.set("spark.graft.checkpoint.reliable", "true")
+    try {
+      val evals = spark.sparkContext.longAccumulator("reuse-evals")
+      val counted = udf { (x: Long) => evals.add(1); x * 3 }
+      val n = 200
+      val pinned = graft.ops.Reuse.pin(
+        spark.range(0, n, 1, 4).select(col("id"), counted(col("id")).as("t")))
+      // the eager checkpoint ran the UDF once per row: the checkpoint
+      // files are written by the job that computes the rows
+      assert(evals.value === n)
+      // consumers read the checkpoint files, not the subtree
+      assert(pinned.collect().map(r => r.getLong(1)).sorted.toSeq ===
+        (0L until n).map(_ * 3))
+      assert(pinned.count() === n)
+      assert(evals.value === n)
+    } finally {
+      spark.conf.unset("spark.graft.checkpoint.reliable")
+    }
+  }
 }

@@ -129,6 +129,39 @@ class TableStoreSpec extends AnyFunSuite {
     assert(s.snapshotAt("t", 3).isDefined)
   }
 
+  test("legacy parquet entries in the update log warn once per store") {
+    val root = Files.createTempDirectory("ts-spec-").toString
+    val logDir = java.nio.file.Paths.get(root, "_update_log")
+    Files.createDirectories(logDir)
+    Files.write(logDir.resolve("part-00000-legacy.snappy.parquet"), Array[Byte](0, 1, 2))
+    def warnings(body: => Unit): Seq[String] = {
+      val buf = new java.io.ByteArrayOutputStream()
+      val saved = System.err
+      System.setErr(new java.io.PrintStream(buf, true, "UTF-8"))
+      try body finally System.setErr(saved)
+      buf.toString("UTF-8").linesIterator.filter(_.startsWith("[graft] warn:")).toSeq
+    }
+    val s = new TableStore(spark, root, "k")
+    val first = warnings {
+      s.merge("t", ups(("a", "1", 1)), dels(), "f0")
+      s.merge("t", ups(("b", "2", 1)), dels(), "f1")
+      s.merge("t", ups(("a", "CLOBBER", 1)), dels(), "f0") // gated
+    }
+    assert(first.size === 1)
+    assert(first.head.contains("part-00000-legacy.snappy.parquet"))
+    // the legacy file is ignored: the JSONL log still gates exactly once
+    assert(state(s) === Map("a" -> "1", "b" -> "2"))
+    assert(s.appliedFiles("t") === Set("f0", "f1"))
+    // once per instance: a second store over the same root warns again,
+    // a store over a clean log never does
+    assert(warnings(new TableStore(spark, root, "k").appliedFiles()).size === 1)
+    assert(warnings {
+      val clean = freshStore()
+      clean.merge("t", ups(("a", "1", 1)), dels(), "f0")
+      clean.appliedFiles()
+    }.isEmpty)
+  }
+
   test("snapshot sizing corrects from staged bytes on a growth merge") {
     // round 17: sizing from the PREVIOUS version under-sizes a merge
     // that grows the table; the post-write check must rewrite the
