@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.execution.SparkStrategy
+import graft.plans.{AsOfJoinStrategy, RangeJoinStrategy, TopKStrategy}
 
 /** Session-extension entry point: makes every graft native expression
   * callable from pure SQL, so a `spark.sql(...)`-only user gets the
@@ -12,8 +14,9 @@ import org.apache.spark.sql.SparkSessionExtensions
   * }}}
   *
   * For a session that already exists (notebooks, tests), use
-  * [[graft.functions.GraftFunctions.register]] /
-  * [[graft.plans.NativeAsOf.ensureRegistered]] instead.
+  * [[graft.functions.GraftFunctions.register]] for the functions; the
+  * native entries (`NativeAsOf`, `NativeRange`, `NativeTopK`) add the
+  * strategies themselves through [[GraftExtensions.ensureRegistered]].
   *
   * The extension surface is deliberately small: almost every operator
   * is expressed through the declarative DataFrame API (so Catalyst
@@ -30,8 +33,23 @@ import org.apache.spark.sql.SparkSessionExtensions
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     graft.functions.GraftFunctions.all.foreach(ext.injectFunction)
-    ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
-    ext.injectPlannerStrategy(_ => graft.plans.RangeJoinStrategy)
-    ext.injectPlannerStrategy(_ => graft.plans.TopKStrategy)
+    GraftExtensions.strategies.foreach(st => ext.injectPlannerStrategy(_ => st))
+  }
+}
+
+object GraftExtensions {
+
+  /** The planner strategies for graft's whole-operator nodes. */
+  val strategies: Seq[SparkStrategy] =
+    Seq(AsOfJoinStrategy, RangeJoinStrategy, TopKStrategy)
+
+  /** Idempotently adds [[strategies]] to a live session through the
+    * public `experimental.extraStrategies` hook; every native entry
+    * calls it before planning its node.
+    */
+  def ensureRegistered(spark: SparkSession): Unit = {
+    val missing = strategies.filterNot(spark.experimental.extraStrategies.contains)
+    if (missing.nonEmpty)
+      spark.experimental.extraStrategies = spark.experimental.extraStrategies ++ missing
   }
 }

@@ -78,11 +78,9 @@ object Portable {
   /** Array[Float] -> Array[Double] elementwise. */
   def toDouble(a: Column): Column = transform(a, x => x.cast("double"))
 
-  /** Cosine similarity of two float-array columns, computed entirely in
-    * doubles and rounded to 6 decimals for cross-engine determinism.
+  /** Cosine similarity of two double arrays, rounded to 6 decimals for
+    * cross-engine determinism.
     */
-  def cosine6(a: Column, b: Column): Column = {
-    val da = toDouble(a); val db = toDouble(b)
-    round(dot(da, db) / sqrt(norm2(da) * norm2(db)), 6)
-  }
+  def cos6(a: Column, b: Column): Column =
+    round(dot(a, b) / sqrt(norm2(a) * norm2(b)), 6)
 }

@@ -156,11 +156,11 @@ object RhOps {
     * so the probed operator runs much narrower buckets (1/8 the
     * expected size) and lets the multi-bit probe set supply the
     * reach. The (+3, T=2·ppb) point is the measured round-14 frontier
-    * optimum: on the LshProbe grid it is the cheapest schedule
-    * holding tau=0.35 threshold-pair recall ≥ 65% at ALL of sf0.1 /
-    * sf1 / 2×-sf1 (89.0% / 73.5% / 67.1%) — every cheaper config at
-    * the third width reads < 65%. Oracle form: `least(24, prm.ppb
-    * + 3)` (with ppb the unprobed width).
+    * optimum (sym frontier: bench/lsh_width5_frontier_r16.txt), the
+    * cheapest schedule holding tau=0.35 threshold-pair recall ≥ 65%
+    * at ALL of sf0.1 / sf1 / 2×-sf1 (89.0% / 73.5% / 67.1%) — every
+    * cheaper config at the third width reads < 65%. Oracle form:
+    * `least(24, prm.ppb + 3)` (with ppb the unprobed width).
     */
   def probedPlanesFor(n: Long): Int =
     math.min(maxPlanesPerBand, planesFor(n) + 3)

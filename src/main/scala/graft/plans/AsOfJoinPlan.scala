@@ -61,10 +61,8 @@ case class AsOfJoin(
     copy(left = newLeft, right = newRight)
 }
 
-/** Plans [[AsOfJoin]] to [[AsOfJoinExec]]; injected via
-  * `spark.experimental.extraStrategies` (public API) by
-  * [[NativeAsOf.ensureRegistered]] and via `spark.sql.extensions` →
-  * [[graft.GraftExtensions]].
+/** Plans [[AsOfJoin]] to [[AsOfJoinExec]]; one of
+  * [[graft.GraftExtensions.strategies]].
   */
 object AsOfJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {

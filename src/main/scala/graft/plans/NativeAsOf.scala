@@ -14,16 +14,6 @@ import org.apache.spark.sql.graftshim.GraftShim
   */
 object NativeAsOf {
 
-  /** Idempotently adds the planner strategy to the session via the
-    * public `experimental.extraStrategies` hook (the
-    * `spark.sql.extensions` build-time path in
-    * [[graft.GraftExtensions]] covers spark-submit users).
-    */
-  def ensureRegistered(spark: org.apache.spark.sql.SparkSession): Unit =
-    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfJoinStrategy
-
   def backward(
       left: DataFrame,
       right: DataFrame,
@@ -32,7 +22,7 @@ object NativeAsOf {
       rightSeqCol: String,
       payloadCols: Seq[String]): DataFrame = {
     val spark = left.sparkSession
-    ensureRegistered(spark)
+    graft.GraftExtensions.ensureRegistered(spark)
     val lPlan = left.queryExecution.analyzed
     // Re-alias every right-side attribute: when both inputs derive from
     // the same source (the common events-joined-to-events case) the two

@@ -15,14 +15,6 @@ import org.apache.spark.sql.graftshim.GraftShim
   */
 object NativeRange {
 
-  /** Idempotently adds the planner strategy to the session (the
-    * [[NativeAsOf.ensureRegistered]] pattern).
-    */
-  def ensureRegistered(spark: org.apache.spark.sql.SparkSession): Unit =
-    if (!spark.experimental.extraStrategies.contains(RangeJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ RangeJoinStrategy
-
   def pointsInIntervals(
       points: DataFrame,
       tsCol: String,
@@ -30,7 +22,7 @@ object NativeRange {
       startCol: String,
       endCol: String): DataFrame = {
     val spark = points.sparkSession
-    ensureRegistered(spark)
+    graft.GraftExtensions.ensureRegistered(spark)
     val pPlan = points.queryExecution.analyzed
     // re-alias the interval side so shared exprIds from a common
     // source cannot bind ambiguously (NativeAsOf's rule)

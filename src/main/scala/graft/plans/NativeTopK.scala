@@ -15,14 +15,6 @@ import org.apache.spark.sql.types.LongType
   */
 object NativeTopK {
 
-  /** Idempotently adds the planner strategy to the session (the
-    * [[NativeAsOf.ensureRegistered]] pattern).
-    */
-  def ensureRegistered(spark: org.apache.spark.sql.SparkSession): Unit =
-    if (!spark.experimental.extraStrategies.contains(TopKStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKStrategy
-
   /** @param order (column, ascending) pairs; must form a total order
     *              for deterministic ranks (the window form's contract)
     */
@@ -33,7 +25,7 @@ object NativeTopK {
       k: Int,
       rankName: String = "rank"): DataFrame = {
     val spark = df.sparkSession
-    ensureRegistered(spark)
+    graft.GraftExtensions.ensureRegistered(spark)
     val plan: LogicalPlan = df.queryExecution.analyzed
     def attrOf(name: String) =
       plan.output.find(_.name == name).getOrElse(

@@ -64,9 +64,8 @@ case class RangeJoin(
     copy(points = newLeft, intervals = newRight)
 }
 
-/** Plans [[RangeJoin]] to [[BroadcastRangeJoinExec]]; injected beside
-  * [[AsOfJoinStrategy]] via `experimental.extraStrategies` and
-  * `spark.sql.extensions` → [[graft.GraftExtensions]].
+/** Plans [[RangeJoin]] to [[BroadcastRangeJoinExec]]; one of
+  * [[graft.GraftExtensions.strategies]].
   */
 object RangeJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {

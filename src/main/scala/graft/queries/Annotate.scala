@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import graft.annotate.{Minimap, SchwartzHearst}
+import Sql.quote
 
 /** CORRECTNESS entries for the algorithmic annotators (Schwartz-Hearst
   * F4, minimap F5), exercised THROUGH Spark as UDFs over fixture rows.
@@ -19,8 +20,6 @@ import graft.annotate.{Minimap, SchwartzHearst}
   * in the port breaks the hash match.
   */
 object Annotate {
-
-  private def sqlS(s: String): String = "'" + s.replace("'", "''") + "'"
 
   // ---- q42: Schwartz-Hearst abbreviation mining ------------------------------
 
@@ -58,7 +57,7 @@ object Annotate {
         .select(col("fid"), col("p._1").as("abbrev"), col("p._2").as("definition"))
         .orderBy("fid", "abbrev"),
     Some("SELECT CAST(fid AS BIGINT) AS fid, abbrev, definition FROM (VALUES " +
-      goldenPairs.map { case (f, a, df) => s"($f, ${sqlS(a)}, ${sqlS(df)})" }
+      goldenPairs.map { case (f, a, df) => s"($f, ${quote(a)}, ${quote(df)})" }
         .mkString(", ") +
       ") t(fid, abbrev, definition) ORDER BY fid, abbrev"))
 
@@ -114,7 +113,7 @@ object Annotate {
           col("c._3").as("mesh_term"))
         .orderBy("fid", "cui"),
     Some("SELECT CAST(fid AS BIGINT) AS fid, cui, mesh_ui, mesh_term FROM (VALUES " +
-      goldenConcepts.map { case (f, c, u, t) => s"($f, ${sqlS(c)}, ${sqlS(u)}, ${sqlS(t)})" }
+      goldenConcepts.map { case (f, c, u, t) => s"($f, ${quote(c)}, ${quote(u)}, ${quote(t)})" }
         .mkString(", ") +
       ") t(fid, cui, mesh_ui, mesh_term) ORDER BY fid, cui"))
 

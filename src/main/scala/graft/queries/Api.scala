@@ -4,17 +4,13 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
 import graft.query.Pico
+import Sql.meshSql
 
 /** API-layer entries: autocomplete over the real term table (A3/O2)
   * and the show_trial keyed-lookup cascade (cnxapp.py:327-402, incl.
   * the F18 dash→slash DOI unescaping).
   */
 object Api {
-
-  private val h32w = "CAST('0x' || substr(md5(w), 1, 8) AS BIGINT)"
-  private def meshSql(k: Int): String =
-    s"list_transform(list_filter(string_split(text, ' '), w -> $h32w % 3 = $k), " +
-      s"w -> struct_pack(cui := 'C' || CAST($h32w % 100 AS VARCHAR), cui_str := w))"
 
   private val termsCte =
     s"""ann AS (SELECT doc_id,

@@ -4,14 +4,13 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.annotate.Annotator
 import graft.domain.Rules
+import Sql.quote
 
 /** Remaining SURVEY §2 operators: registry-links m:n linkage (J4/U4),
   * the /meta endpoint (A1/S13/F16), and the annotate-new-records
   * pipeline (P8 + batched enrichment + P10 guard).
   */
 object Coverage {
-
-  private def sqlS(s: String): String = "'" + s.replace("'", "''") + "'"
 
   // ---- q51: registry links m:n (ictrp.py:386-419) ---------------------------
 
@@ -44,10 +43,10 @@ object Coverage {
         .orderBy("regid", "pmid")
     },
     Some(s"""WITH pubs(pmid, ab, regids) AS (VALUES ${pubs.map(p =>
-        s"(${sqlS(p.pmid)}, ${sqlS(p.ab)}, ${p.regids.map(sqlS).mkString("[", ", ", "]")})")
+        s"(${quote(p.pmid)}, ${quote(p.ab)}, ${p.regids.map(quote).mkString("[", ", ", "]")})")
         .mkString(", ")}),
       trials(regid, ti) AS (VALUES ${trials.map(t =>
-        s"(${sqlS(t.regid)}, ${sqlS(t.ti)})").mkString(", ")}),
+        s"(${quote(t.regid)}, ${quote(t.ti)})").mkString(", ")}),
       links AS (SELECT pmid, unnest(list_distinct(list_concat(regids,
           regexp_extract_all(ab, '${Rules.registryIdPattern}')))) AS regid
         FROM pubs)
@@ -148,7 +147,7 @@ object Coverage {
         .orderBy("pmid")
     },
     Some(s"""WITH fx(pmid, status, indexing_method, clf_score) AS (VALUES ${scored.map(r =>
-        s"(${sqlS(r.pmid)}, ${sqlS(r.status)}, ${sqlS(r.indexing_method)}, ${r.clf_score})")
+        s"(${quote(r.pmid)}, ${quote(r.status)}, ${quote(r.indexing_method)}, ${r.clf_score})")
         .mkString(", ")}),
       g AS (SELECT *, (status = 'MEDLINE' AND indexing_method <> 'Automated') AS ptyp FROM fx)
       SELECT pmid,

@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.Portable._
@@ -898,63 +899,85 @@ object Curation {
     "q148_bpe_train",
     (s, d) => {
       import s.implicits._
-      val wf = Tables.documents(s, d)
-        .select(explode(split(col("text"), " ")).as("word"))
-        .groupBy("word").agg(count(lit(1)).as("freq"))
-        .persist()
-      def pairsOf(c: org.apache.spark.sql.Column) = {
-        val t = split(trim(c), " ")
-        zip_with(slice(t, lit(1), size(t) - 1), slice(t, lit(2), size(t) - 1),
-          (a, b) => concat(a, lit(" "), b))
-      }
-      def rep4(c: org.apache.spark.sql.Column, pair: String) = {
-        val pat = lit(" " + pair + " ")
-        val repl = lit(" " + pair.replace(" ", "") + " ")
-        (1 to 4).foldLeft(c)((acc, _) => replace(acc, pat, repl))
-      }
-      var spaced = wf.select(
-        concat(lit(" "), regexp_replace(col("word"), "(.)", "$1 ")).as("s"),
-        col("freq"))
-      val merges = scala.collection.mutable.ArrayBuffer.empty[(Long, String, Long)]
-      for (r <- 1 to 5) {
-        val top = spaced
-          .select(explode(pairsOf(col("s"))).as("p"), col("freq"))
-          .groupBy("p").agg(sum(col("freq")).as("c"))
-          .orderBy(col("c").desc, col("p"))
-          .limit(1).head()
-        merges += ((r.toLong, top.getString(0), top.getLong(1)))
-        spaced = spaced.withColumn("s", rep4(col("s"), top.getString(0)))
-      }
-      wf.unpersist(blocking = false)
-      merges.toSeq.toDF("round", "pair", "wcount")
+      bpeMerges(Tables.documents(s, d)).zipWithIndex
+        .map { case ((pair, c), i) => (i + 1L, pair, c) }
+        .toDF("round", "pair", "wcount")
     },
-    Some {
-      def rep4(sc: String, p: String) = {
-        val pat = s"' ' || $p || ' '"
-        val rep = s"' ' || replace($p, ' ', '') || ' '"
-        (1 to 4).foldLeft(sc)((acc, _) => s"replace($acc, $pat, $rep)")
-      }
-      val ctes = scala.collection.mutable.ArrayBuffer(
-        """w0 AS (SELECT word, count(*) AS freq FROM (
-          SELECT unnest(string_split(text, ' ')) AS word FROM documents)
+    Some(bpeMergeCtes("").mkString("WITH ", ",\n", "\n") +
+      (1 to 5).map(r =>
+        s"SELECT CAST($r AS BIGINT) AS round, p AS pair, c AS wcount FROM m$r")
+        .mkString(" UNION ALL ") + " ORDER BY round"))
+
+  /** q148's trainer, shared with q188: the (word, freq) vocabulary of
+    * `docs.text`, cached for the rounds, then 5 rounds of "merge the
+    * most frequent adjacent pair" (ties by pair text). Returns each
+    * round's (pair, weighted count).
+    */
+  private def bpeMerges(docs: DataFrame): Seq[(String, Long)] = {
+    val wf = docs
+      .select(explode(split(col("text"), " ")).as("word"))
+      .groupBy("word").agg(count(lit(1)).as("freq"))
+      .persist()
+    val t = split(trim(col("s")), " ")
+    val pairs = zip_with(slice(t, lit(1), size(t) - 1), slice(t, lit(2), size(t) - 1),
+      (a, b) => concat(a, lit(" "), b))
+    var spaced = wf.select(spelled(col("word")).as("s"), col("freq"))
+    val merges = for (_ <- 1 to 5) yield {
+      val top = spaced
+        .select(explode(pairs).as("p"), col("freq"))
+        .groupBy("p").agg(sum(col("freq")).as("c"))
+        .orderBy(col("c").desc, col("p"))
+        .limit(1).head()
+      spaced = spaced.withColumn("s", rep4(col("s"), top.getString(0)))
+      (top.getString(0), top.getLong(1))
+    }
+    wf.unpersist(blocking = false)
+    merges
+  }
+
+  /** A word as its space-separated symbols with a leading space. */
+  private def spelled(word: Column): Column =
+    concat(lit(" "), regexp_replace(word, "(.)", "$1 "))
+
+  /** Applies one BPE merge to a [[spelled]] string: 4 boundary-marked
+    * replace-all passes collapse any run of up to 2^4 copies of `pair`.
+    */
+  private def rep4(c: Column, pair: String): Column = {
+    val pat = lit(" " + pair + " ")
+    val repl = lit(" " + pair.replace(" ", "") + " ")
+    (1 to 4).foldLeft(c)((acc, _) => replace(acc, pat, repl))
+  }
+
+  /** DuckDB twin of [[rep4]]: SQL string `sc`, pair column `p`. */
+  private def rep4Sql(sc: String, p: String): String = {
+    val pat = s"' ' || $p || ' '"
+    val rep = s"' ' || replace($p, ' ', '') || ' '"
+    (1 to 4).foldLeft(sc)((acc, _) => s"replace($acc, $pat, $rep)")
+  }
+
+  /** DuckDB twin of [[bpeMerges]] as CTEs: `w0`/`s0` build the spelled
+    * vocabulary of the documents `where` selects (a WHERE clause or
+    * ""), and round r's merge is `m<r>(p, c)`.
+    */
+  private def bpeMergeCtes(where: String): scala.collection.mutable.ArrayBuffer[String] = {
+    val ctes = scala.collection.mutable.ArrayBuffer(
+      s"""w0 AS (SELECT word, count(*) AS freq FROM (
+          SELECT unnest(string_split(text, ' ')) AS word FROM documents$where)
           GROUP BY 1)""",
-        """s0 AS (SELECT ' ' || regexp_replace(word, '(.)', '\1 ', 'g') AS s,
+      """s0 AS (SELECT ' ' || regexp_replace(word, '(.)', '\1 ', 'g') AS s,
           freq FROM w0)""")
-      val sel = scala.collection.mutable.ArrayBuffer.empty[String]
-      for (r <- 1 to 5) {
-        ctes += s"""pc$r AS (SELECT p, CAST(sum(freq) AS BIGINT) AS c FROM (
+    for (r <- 1 to 5) {
+      ctes += s"""pc$r AS (SELECT p, CAST(sum(freq) AS BIGINT) AS c FROM (
           SELECT unnest(list_transform(range(1, len(t)),
               i -> t[i] || ' ' || t[i+1])) AS p, freq
           FROM (SELECT string_split(trim(s), ' ') AS t, freq FROM s${r - 1}))
           GROUP BY 1)"""
-        ctes += s"m$r AS (SELECT p, c FROM pc$r ORDER BY c DESC, p LIMIT 1)"
-        ctes += s"""s$r AS (SELECT ${rep4(s"s${r - 1}.s", s"m$r.p")} AS s, freq
+      ctes += s"m$r AS (SELECT p, c FROM pc$r ORDER BY c DESC, p LIMIT 1)"
+      ctes += s"""s$r AS (SELECT ${rep4Sql(s"s${r - 1}.s", s"m$r.p")} AS s, freq
           FROM s${r - 1} CROSS JOIN m$r)"""
-        sel += s"SELECT CAST($r AS BIGINT) AS round, p AS pair, c AS wcount FROM m$r"
-      }
-      "WITH " + ctes.mkString(",\n") + "\n" +
-        sel.mkString(" UNION ALL ") + " ORDER BY round"
-    })
+    }
+    ctes
+  }
 
   // ---- q174: held-out trigram LM with stupid backoff -----------------------
 
@@ -1092,41 +1115,13 @@ object Curation {
   private val q188BpeFertility = Q(
     "q188_bpe_fertility",
     (s, d) => {
-      val trainOn = col("doc_id") % 10 < 8
-      val wf = Tables.documents(s, d).filter(trainOn)
-        .select(explode(split(col("text"), " ")).as("word"))
-        .groupBy("word").agg(count(lit(1)).as("freq"))
-        .persist()
-      def pairsOf(c: org.apache.spark.sql.Column) = {
-        val t = split(trim(c), " ")
-        zip_with(slice(t, lit(1), size(t) - 1), slice(t, lit(2), size(t) - 1),
-          (a, b) => concat(a, lit(" "), b))
-      }
-      def rep4(c: org.apache.spark.sql.Column, pair: String) = {
-        val pat = lit(" " + pair + " ")
-        val repl = lit(" " + pair.replace(" ", "") + " ")
-        (1 to 4).foldLeft(c)((acc, _) => replace(acc, pat, repl))
-      }
-      var spaced = wf.select(
-        concat(lit(" "), regexp_replace(col("word"), "(.)", "$1 ")).as("s"),
-        col("freq"))
-      val merges = scala.collection.mutable.ArrayBuffer.empty[String]
-      for (_ <- 1 to 5) {
-        val top = spaced
-          .select(explode(pairsOf(col("s"))).as("p"), col("freq"))
-          .groupBy("p").agg(sum(col("freq")).as("c"))
-          .orderBy(col("c").desc, col("p"))
-          .limit(1).head()
-        merges += top.getString(0)
-        spaced = spaced.withColumn("s", rep4(col("s"), top.getString(0)))
-      }
-      wf.unpersist(blocking = false)
+      val merges = bpeMerges(Tables.documents(s, d).filter(col("doc_id") % 10 < 8))
+        .map(_._1)
       val held = Tables.documents(s, d).filter(col("doc_id") % 10 >= 8)
         .select(col("doc_id"), explode(split(col("text"), " ")).as("word"))
         .groupBy("doc_id", "word").agg(count(lit(1)).as("cnt"))
       val vocabSpaced = merges.foldLeft(
-        held.select(col("word")).distinct().withColumn("s",
-          concat(lit(" "), regexp_replace(col("word"), "(.)", "$1 "))))(
+        held.select(col("word")).distinct().withColumn("s", spelled(col("word"))))(
         (df, p) => df.withColumn("s", rep4(col("s"), p)))
       val tokLen = vocabSpaced
         .select(col("word"), size(split(trim(col("s")), " ")).cast("long")
@@ -1139,28 +1134,7 @@ object Curation {
         .orderBy("doc_id")
     },
     Some {
-      def rep4(sc: String, p: String) = {
-        val pat = s"' ' || $p || ' '"
-        val rep = s"' ' || replace($p, ' ', '') || ' '"
-        (1 to 4).foldLeft(sc)((acc, _) => s"replace($acc, $pat, $rep)")
-      }
-      val ctes = scala.collection.mutable.ArrayBuffer(
-        """w0 AS (SELECT word, count(*) AS freq FROM (
-          SELECT unnest(string_split(text, ' ')) AS word FROM documents
-          WHERE doc_id % 10 < 8)
-          GROUP BY 1)""",
-        """s0 AS (SELECT ' ' || regexp_replace(word, '(.)', '\1 ', 'g') AS s,
-          freq FROM w0)""")
-      for (r <- 1 to 5) {
-        ctes += s"""pc$r AS (SELECT p, CAST(sum(freq) AS BIGINT) AS c FROM (
-          SELECT unnest(list_transform(range(1, len(t)),
-              i -> t[i] || ' ' || t[i+1])) AS p, freq
-          FROM (SELECT string_split(trim(s), ' ') AS t, freq FROM s${r - 1}))
-          GROUP BY 1)"""
-        ctes += s"m$r AS (SELECT p, c FROM pc$r ORDER BY c DESC, p LIMIT 1)"
-        ctes += s"""s$r AS (SELECT ${rep4(s"s${r - 1}.s", s"m$r.p")} AS s, freq
-          FROM s${r - 1} CROSS JOIN m$r)"""
-      }
+      val ctes = bpeMergeCtes("\n          WHERE doc_id % 10 < 8")
       ctes += """hw AS (SELECT doc_id, word, CAST(count(*) AS BIGINT) AS cnt
         FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS word
           FROM documents WHERE doc_id % 10 >= 8)
@@ -1169,7 +1143,7 @@ object Curation {
         ' ' || regexp_replace(word, '(.)', '\1 ', 'g') AS s
         FROM (SELECT DISTINCT word FROM hw))"""
       for (r <- 1 to 5)
-        ctes += s"""h$r AS (SELECT word, ${rep4(s"h${r - 1}.s", s"m$r.p")} AS s
+        ctes += s"""h$r AS (SELECT word, ${rep4Sql(s"h${r - 1}.s", s"m$r.p")} AS s
           FROM h${r - 1} CROSS JOIN m$r)"""
       ctes += """tl AS (SELECT word,
         CAST(len(string_split(trim(s), ' ')) AS BIGINT) AS ntok FROM h5)"""
@@ -1217,9 +1191,7 @@ object Curation {
       val denseW = Window.orderBy(col("cos_sim").desc, col("doc_id"))
       val dense = e.filter(col("vec_id") > 0)
         .crossJoin(broadcast(qv))
-        .select(col("vec_id").as("doc_id"),
-          round(dot(col("v"), col("qv")) /
-            sqrt(norm2(col("v")) * norm2(col("qv"))), 6).as("cos_sim"))
+        .select(col("vec_id").as("doc_id"), cos6(col("v"), col("qv")).as("cos_sim"))
         .orderBy(col("cos_sim").desc, col("doc_id")).limit(50)
         .select(col("doc_id"), row_number().over(denseW).cast("long")
           .as("dense_rank"))

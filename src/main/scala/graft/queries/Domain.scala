@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import graft.domain.Rules
+import Sql.quote
 
 /** Trialstreamer domain operators (SURVEY §2.8, VERDICT items F3-F15)
   * over inline fixtures.
@@ -17,12 +18,8 @@ object Domain {
 
   // ---- fixture→SQL rendering -------------------------------------------------
 
-  private def sqlS(s: String): String =
-    if (s == null) "CAST(NULL AS VARCHAR)"
-    else "'" + s.replace("'", "''") + "'"
-
   private def sqlList(ss: Seq[String]): String =
-    ss.map(sqlS).mkString("[", ", ", "]")
+    ss.map(quote).mkString("[", ", ", "]")
 
   // ---- q31: is_rct rules + is_recruiting (ictrp.py:66-186) -------------------
 
@@ -45,7 +42,7 @@ object Domain {
     TrialDesign(14, "CROSSOVER TRIAL", "Recruiting"))
 
   private val trialDesignValues = trialDesigns.map(t =>
-    s"(${t.fid}, ${sqlS(t.study_design)}, ${sqlS(t.recruitment_status)})").mkString(", ")
+    s"(${t.fid}, ${quote(t.study_design)}, ${quote(t.recruitment_status)})").mkString(", ")
 
   private val q31IsRct = Q(
     "q31_is_rct_rules",
@@ -87,7 +84,7 @@ object Domain {
     AbstractRow(11, "Duplicate mention of NCT01234567 and NCT01234567 yields two rows."))
 
   private val abstractValues =
-    abstracts.map(a => s"(${a.fid}, ${sqlS(a.ab)})").mkString(", ")
+    abstracts.map(a => s"(${a.fid}, ${quote(a.ab)})").mkString(", ")
 
   private val q32RegistryIds = Q(
     "q32_registry_ids",
@@ -118,9 +115,9 @@ object Domain {
     RegDate(10, "SLCTR/2015/012", "2015-07-01"))
 
   private val regDateValues =
-    regDates.map(r => s"(${r.fid}, ${sqlS(r.regid)}, ${sqlS(r.date_raw)})").mkString(", ")
+    regDates.map(r => s"(${r.fid}, ${quote(r.regid)}, ${quote(r.date_raw)})").mkString(", ")
 
-  private def sqlInList(ss: Seq[String]): String = ss.map(sqlS).mkString(", ")
+  private def sqlInList(ss: Seq[String]): String = ss.map(quote).mkString(", ")
 
   private val q33RegistryDates = Q(
     "q33_registry_dates",
@@ -159,7 +156,7 @@ object Domain {
     PageRow(7, "555-62"), PageRow(8, "10-9"))
 
   private val pageValues =
-    pageRows.map(p => s"(${p.fid}, ${sqlS(p.pages)})").mkString(", ")
+    pageRows.map(p => s"(${p.fid}, ${quote(p.pages)})").mkString(", ")
 
   private val q34PageRanges = Q(
     "q34_page_ranges",
@@ -195,7 +192,7 @@ object Domain {
     TitleRow(7, "", "[Not Available]."))
 
   private val titleValues =
-    titleRows.map(t => s"(${t.fid}, ${sqlS(t.title)}, ${sqlS(t.vernacular)})").mkString(", ")
+    titleRows.map(t => s"(${t.fid}, ${quote(t.title)}, ${quote(t.vernacular)})").mkString(", ")
 
   private val q35TitleChain = Q(
     "q35_title_chain",
@@ -229,9 +226,9 @@ object Domain {
   private val citeValues = citeRows.map { r =>
     val authors =
       if (r.authors.isEmpty) "CAST([] AS STRUCT(LastName VARCHAR)[])"
-      else r.authors.map(a => s"struct_pack(LastName := ${sqlS(a.LastName)})")
+      else r.authors.map(a => s"struct_pack(LastName := ${quote(a.LastName)})")
         .mkString("[", ", ", "]")
-    s"(${r.fid}, $authors, ${sqlS(r.journal)}, ${r.year})"
+    s"(${r.fid}, $authors, ${quote(r.journal)}, ${r.year})"
   }.mkString(", ")
 
   private val q36Citation = Q(
@@ -264,7 +261,7 @@ object Domain {
     YearRow(7, "1987", "1999"))
 
   private val yearValues =
-    yearRows.map(y => s"(${y.fid}, ${sqlS(y.year_raw)}, ${sqlS(y.medlinedate)})").mkString(", ")
+    yearRows.map(y => s"(${y.fid}, ${quote(y.year_raw)}, ${quote(y.medlinedate)})").mkString(", ")
 
   private val q37YearExtract = Q(
     "q37_year_extract",
@@ -295,7 +292,7 @@ object Domain {
     DoiRow(7, "http://dx.doi.org/10.9999/path/deep:1"))
 
   private val doiValues =
-    doiRows.map(r => s"(${r.fid}, ${sqlS(r.raw)})").mkString(", ")
+    doiRows.map(r => s"(${r.fid}, ${quote(r.raw)})").mkString(", ")
 
   private val q38DoiClean = Q(
     "q38_doi_clean",
@@ -329,7 +326,7 @@ object Domain {
     val secs =
       if (r.sections.isEmpty) "CAST([] AS STRUCT(header VARCHAR, text VARCHAR)[])"
       else r.sections.map(s =>
-        s"struct_pack(header := ${sqlS(s.header)}, text := ${sqlS(s.text)})")
+        s"struct_pack(header := ${quote(s.header)}, text := ${quote(s.text)})")
         .mkString("[", ", ", "]")
     s"(${r.fid}, $secs)"
   }.mkString(", ")

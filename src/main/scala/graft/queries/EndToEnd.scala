@@ -10,6 +10,7 @@ import graft.query.Pico.PicoTerm
 import graft.stream.TableStore
 import graft.Tables
 import graft.functions.Portable.tokens
+import Sql.quote
 
 /** q62: the COMPOSED end-to-end nightly pipeline, one flow over STORED
   * tables (SURVEY §7.3; reference: pubmed.py main update path):
@@ -54,8 +55,6 @@ import graft.functions.Portable.tokens
   * parquet — no stage collects the corpus to the driver.
   */
 object EndToEnd {
-
-  private def sqlS(s: String): String = "'" + s.replace("'", "''") + "'"
 
   /** One fixture article: f = update-file ordinal (1-based), im = None
     * omits the IndexingMethod attribute (parses to "Human").
@@ -222,15 +221,15 @@ ${arts.mkString("\n")}
     },
     Some {
       val srcRows = articles.map { a =>
-        s"(${a.f}, ${sqlS(a.pmid)}, ${sqlS(a.status)}, " +
-          s"${sqlS(a.im.getOrElse("Human"))}, ${sqlS(a.ti)}, " +
+        s"(${a.f}, ${quote(a.pmid)}, ${quote(a.status)}, " +
+          s"${quote(a.im.getOrElse("Human"))}, ${quote(a.ti)}, " +
           s"CAST(${a.year} AS BIGINT))"
       }.mkString(", ")
       val delRows = deletions.toSeq.sortBy(_._1)
-        .flatMap { case (f, ps) => ps.map(p => s"($f, ${sqlS(p)})") }
+        .flatMap { case (f, ps) => ps.map(p => s"($f, ${quote(p)})") }
         .mkString(", ")
       def h32(x: String) = s"CAST('0x' || substr(md5($x), 1, 8) AS BIGINT)"
-      val inList = expansion.map(sqlS).mkString(", ")
+      val inList = expansion.map(quote).mkString(", ")
       s"""WITH src(f, pmid, status, im, ti, year) AS (VALUES $srcRows),
         dels(f, pmid) AS (VALUES $delRows),
         scored AS (SELECT *,
@@ -254,7 +253,7 @@ ${arts.mkString("\n")}
         exck AS (SELECT e.* FROM exc e LEFT JOIN lastdel d ON e.pmid = d.pmid
           WHERE d.df IS NULL OR e.f >= d.df),
         ann AS (SELECT pmid, md5(ti) AS h FROM pubk
-          WHERE pmid <> ${sqlS(doneAnnotated)}),
+          WHERE pmid <> ${quote(doneAnnotated)}),
         ann2 AS (SELECT pmid,
             ${h32("h || '_n'")} % 2000000 AS raw_n,
             CAST(${h32("h || '_p'")} % 100 AS DOUBLE) / 100.0 AS prob,

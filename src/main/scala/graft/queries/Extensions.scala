@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.multimodal.Multimodal
 import graft.search.Ivf
-import graft.functions.Portable.{dot, norm2, toDouble}
+import graft.functions.Portable.{cos6, toDouble}
 
 /** Extension-layer CORRECTNESS entries: IVF approximate-nearest-
   * neighbor search (the indexed scale path beside brute-force q26) and
@@ -108,8 +108,9 @@ object Extensions {
 
   /** q74: the pure-SQL surface, end-to-end through the driver gate —
     * graft's native expressions resolved by the SQL parser (registered
-    * per [[graft.functions.GraftFunctions]] / `spark.sql.extensions=
-    * graft.GraftExtensions`), computing q24's simhash plus shingle
+    * on the live session by [[graft.functions.GraftFunctions.register]];
+    * `spark.sql.extensions=graft.GraftExtensions` injects the same list
+    * at session build), computing q24's simhash plus shingle
     * fingerprint counts with NO Column-API construction at all. Proves
     * a spark.sql-only user gets the same codegen'd operators (and the
     * same values: the oracle is the SQL-side definition).
@@ -265,8 +266,7 @@ object Extensions {
         .select(col("cell"), explode(col("ms")).as("a"), col("ms"))
         .select(col("cell"), col("a"), explode(col("ms")).as("b"))
         .filter(col("a.vec_id") < col("b.vec_id"))
-        .filter(round(dot(col("a.v"), col("b.v")) /
-          sqrt(norm2(col("a.v")) * norm2(col("b.v"))), 6) >= 0.35)
+        .filter(cos6(col("a.v"), col("b.v")) >= 0.35)
         .select(col("cell"), col("b.vec_id").as("b_id")).distinct()
       val prunes = removed.groupBy("cell")
         .agg(count(lit(1)).as("n_removed"), sum(col("b_id")).as("removed_id_sum"))
@@ -464,8 +464,6 @@ object Extensions {
       }
       val assigns = Ivf.assignments(emb, mod)
       val outRoot = new java.io.File(root, "results")
-      def cos6(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-        round(dot(a, b) / sqrt(norm2(a) * norm2(b)), 6)
       val step: (org.apache.spark.sql.DataFrame, Long) => Unit = (batch, id) => {
         val q = batch.select(col("qid"), toDouble(col("embedding")).as("qv"))
         val wProbe = org.apache.spark.sql.expressions.Window

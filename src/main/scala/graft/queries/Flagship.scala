@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.query.Pico
 import graft.query.Pico.{PicoQuery, PicoTerm}
+import Sql.meshSql
 
 /** CORRECTNESS entries for the real-data-model picosearch (struct
   * containment + subtree expansion + arm gating). The oracle SQL is
@@ -11,12 +12,6 @@ import graft.query.Pico.{PicoQuery, PicoTerm}
   * (cnxapp.py:187-219).
   */
 object Flagship {
-
-  private[queries] val h32w = "CAST('0x' || substr(md5(w), 1, 8) AS BIGINT)"
-
-  private def meshSql(k: Int): String =
-    s"list_transform(list_filter(string_split(text, ' '), w -> $h32w % 3 = $k), " +
-      s"w -> struct_pack(cui := 'C' || CAST($h32w % 100 AS VARCHAR), cui_str := w))"
 
   private[queries] val annCte =
     s"""ann AS (SELECT doc_id, lang, source, n_chars,

@@ -161,40 +161,52 @@ object Pipeline {
     */
   private val q22NgramJaccard = Q(
     "q22_ngram_jaccard",
-    (s, d) => {
-      // Pinned ONCE (round 17): `docs` feeds the prefix explode and
-      // BOTH verification join sides — three differently-pruned
-      // subtrees that re-ran the shingle scan (the dominant map work)
-      // per consumer. One materialized tokenized table, three block
-      // reads — the "write the tokenized corpus once" move at scale.
-      val docs = Tables.documents(s, d)
-        .filter(size(tokens(col("text"))) >= 4)
-        .select(col("doc_id"), col("lang"),
-          array_distinct(graft.functions.Hash32.shingleHashes(col("text"))).as("toks"))
-        .transform(graft.ops.Reuse.pin)
+    (s, d) => prefixJaccardPairs(s, d) { _ =>
       // prefix length for t' = 8799/10000, in exact integer arithmetic:
       // L = sz - ceil(8799*sz/10000) + 1
       val sz = size(col("toks"))
       val prefLen = sz - ((sz * 8799L + 9999L) / 10000L).cast("long") + 1
-      val pref = docs.select(col("doc_id"), col("lang"),
-        explode(slice(array_sort(col("toks")), lit(1), prefLen)).as("w"))
-      val cand = graft.ops.Dedup
-        .bucketPairs(pref, "doc_id", Seq("lang", "w"))
-        .distinct()
-      cand
-        .join(docs.select(col("doc_id").as("a_id"), col("toks").as("ta")), "a_id")
-        .join(docs.select(col("doc_id").as("b_id"), col("toks").as("tb")), "b_id")
-        .select(col("a_id"), col("b_id"),
-          size(array_intersect(col("ta"), col("tb"))).cast("long").as("common"),
-          size(col("ta")).cast("long").as("sa"), size(col("tb")).cast("long").as("sb"))
-        .select(col("a_id"), col("b_id"),
-          round(col("common").cast("double") /
-            (col("sa") + col("sb") - col("common")), 6).as("jaccard"))
-        .filter(col("jaccard") >= 0.88)
-        .orderBy("a_id", "b_id")
+      slice(array_sort(col("toks")), lit(1), prefLen)
     },
     Some(jaccardPairsOracle),
     bench = true)
+
+  /** The engine core q22 and q69 share: shingle-set Jaccard ≥ 0.88
+    * pairs within a lang, by prefix filtering. `prefix` gives each
+    * doc's prefix features, under the caller's feature order, from the
+    * `docs` frame (doc_id, lang, toks = distinct shingle hashes);
+    * candidates share a (lang, prefix feature) and are verified by
+    * exact Jaccard.
+    *
+    * `docs` is pinned ONCE (round 17): it feeds `prefix`, the prefix
+    * explode and BOTH verification join sides — differently-pruned
+    * subtrees that re-ran the shingle scan (the dominant map work) per
+    * consumer. One materialized tokenized table, one block read per
+    * consumer — the "write the tokenized corpus once" move at scale.
+    */
+  private[queries] def prefixJaccardPairs(s: SparkSession, d: String)(
+      prefix: DataFrame => Column): DataFrame = {
+    val docs = Tables.documents(s, d)
+      .filter(size(tokens(col("text"))) >= 4)
+      .select(col("doc_id"), col("lang"),
+        array_distinct(graft.functions.Hash32.shingleHashes(col("text"))).as("toks"))
+      .transform(graft.ops.Reuse.pin)
+    val pref = docs.select(col("doc_id"), col("lang"), explode(prefix(docs)).as("w"))
+    val cand = graft.ops.Dedup
+      .bucketPairs(pref, "doc_id", Seq("lang", "w"))
+      .distinct()
+    cand
+      .join(docs.select(col("doc_id").as("a_id"), col("toks").as("ta")), "a_id")
+      .join(docs.select(col("doc_id").as("b_id"), col("toks").as("tb")), "b_id")
+      .select(col("a_id"), col("b_id"),
+        size(array_intersect(col("ta"), col("tb"))).cast("long").as("common"),
+        size(col("ta")).cast("long").as("sa"), size(col("tb")).cast("long").as("sb"))
+      .select(col("a_id"), col("b_id"),
+        round(col("common").cast("double") /
+          (col("sa") + col("sb") - col("common")), 6).as("jaccard"))
+      .filter(col("jaccard") >= 0.88)
+      .orderBy("a_id", "b_id")
+  }
 
   /** All-pairs shingle-Jaccard ≥ 0.88 oracle — the output DEFINITION
     * shared by q22 (h32-ordered prefix filter) and q69 (ascending-df
@@ -316,8 +328,9 @@ object Pipeline {
     * decayed 74% → 51% → 36% across consecutive width configs — the
     * round-13 verdict's one `weak`. The multi-bit schedule is the
     * measured frontier optimum holding tau-recall ≥ 65% at EVERY
-    * width config: 89.0%/73.5%/67.1% at sf0.1/sf1/2×-sf1 (LshProbe
-    * grid; q267 re-measures it every round and LshRecallSpec pins
+    * width config: 89.0%/73.5%/67.1% at sf0.1/sf1/2×-sf1 (sym
+    * frontier: bench/lsh_width5_frontier_r16.txt; q267 re-measures
+    * it every round and LshRecallSpec pins
     * floors AND per-vector candidate ceilings), with candidates
     * bucket-bounded — never all-pairs — at 406/1936/2605 DISTINCT
     * PAIRS per vector (sf0.1/sf1/2×-sf1). NOTE the unit: q267 and
@@ -525,9 +538,7 @@ object Pipeline {
         .crossJoin(broadcast(
           sample.select(col("vec_id").as("b_id"), col("v").as("vb"))))
         .filter(col("a_id") < col("b_id"))
-        .select(col("a_id"), col("b_id"),
-          round(dot(col("va"), col("vb")) /
-            sqrt(norm2(col("va")) * norm2(col("vb"))), 6).as("cos_sim"))
+        .select(col("a_id"), col("b_id"), cos6(col("va"), col("vb")).as("cos_sim"))
       val truth = scored.filter(col("cos_sim") >= 0.35).select("a_id", "b_id")
       val baseKeys = sample.select(col("vec_id"),
           posexplode(graft.functions.RhOps.bandKeysCol(col("v"), ppbBase)))
@@ -644,9 +655,7 @@ object Pipeline {
       val q = e.filter(col("vec_id") === 0).select(col("v").as("qv"))
       e.filter(col("vec_id") > 0)
         .crossJoin(broadcast(q))
-        .select(col("vec_id"),
-          round(dot(col("v"), col("qv")) /
-            sqrt(norm2(col("v")) * norm2(col("qv"))), 6).as("cos_sim"))
+        .select(col("vec_id"), cos6(col("v"), col("qv")).as("cos_sim"))
         .orderBy(col("cos_sim").desc, col("vec_id"))
         .limit(10)
     },

@@ -3,6 +3,7 @@ package graft.queries
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.io.{PubmedXml, Ris}
+import Sql.quote
 
 /** Reader-layer CORRECTNESS entries: PubMed MedlineCitation XML
   * (S1/S2 + the F10-F14 scalar chain) and the RIS codec (S8). Fixtures
@@ -10,10 +11,6 @@ import graft.io.{PubmedXml, Ris}
   * read→project chain is hash-pinned.
   */
 object Readers {
-
-  private def sqlS(s: String): String =
-    if (s == null) "CAST(NULL AS VARCHAR)"
-    else "'" + s.replace("'", "''") + "'"
 
   // ---- q45: PubMed XML ------------------------------------------------------
 
@@ -120,13 +117,13 @@ object Readers {
         .orderBy("pmid")
     },
     Some("SELECT * FROM (VALUES " + pubmedExpected.map { r =>
-      val cells = Seq(sqlS(r._1), sqlS(r._2), sqlS(r._3), sqlS(r._4), sqlS(r._5),
-        sqlS(r._6), sqlS(r._7),
+      val cells = Seq(quote(r._1), quote(r._2), quote(r._3), quote(r._4), quote(r._5),
+        quote(r._6), quote(r._7),
         r._8.map(y => s"CAST($y AS BIGINT)").getOrElse("CAST(NULL AS BIGINT)"),
-        sqlS(r._9), sqlS(r._10), sqlS(r._11), sqlS(r._12), sqlS(r._13),
-        sqlS(r._14), sqlS(r._15), sqlS(r._16), sqlS(r._17), sqlS(r._18),
+        quote(r._9), quote(r._10), quote(r._11), quote(r._12), quote(r._13),
+        quote(r._14), quote(r._15), quote(r._16), quote(r._17), quote(r._18),
         r._19.map(n => s"CAST($n AS INT)").getOrElse("CAST(NULL AS INT)"),
-        sqlS(r._20))
+        quote(r._20))
       cells.mkString("(", ", ", ")")
     }.mkString(", ") +
       ") t(pmid, status, indexing_method, ti, ab, journal, journal_abbrv, " +

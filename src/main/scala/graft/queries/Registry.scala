@@ -44,6 +44,26 @@ object Sql {
   def floorDiv(x: String, y: String): String =
     s"(($x) div ($y) - (CASE WHEN ($x) % ($y) <> 0 AND ($x) < 0 " +
       "THEN 1 ELSE 0 END))"
+
+  /** A Scala string as a SQL string literal (quotes doubled); null
+    * renders as a typed NULL so fixture rows with missing fields keep
+    * their column type in a VALUES list.
+    */
+  def quote(s: String): String =
+    if (s == null) "CAST(NULL AS VARCHAR)" else "'" + s.replace("'", "''") + "'"
+
+  /** DuckDB twin of [[graft.functions.Portable.h32]] over a lambda
+    * variable `w`.
+    */
+  private val h32w = "CAST('0x' || substr(md5(w), 1, 8) AS BIGINT)"
+
+  /** DuckDB twin of [[graft.functions.Hash32.meshForCol]]: the MeSH
+    * list for PICO field `k` (0 = population, 1 = interventions,
+    * 2 = outcomes) over `documents.text`.
+    */
+  def meshSql(k: Int): String =
+    s"list_transform(list_filter(string_split(text, ' '), w -> $h32w % 3 = $k), " +
+      s"w -> struct_pack(cui := 'C' || CAST($h32w % 100 AS VARCHAR), cui_str := w))"
 }
 
 /** Scratch-directory hygiene for queries that write their own tables:

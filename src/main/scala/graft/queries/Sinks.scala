@@ -6,6 +6,7 @@ import graft.domain.Rules
 import graft.io.Ris
 import graft.query.Pico
 import graft.query.Pico.{PicoQuery, PicoTerm}
+import Sql.quote
 
 /** Sink CORRECTNESS entries (S11/S12), promoting the spec-only sinks to
   * driver-checkable oracle entries per the round-2 verdict:
@@ -24,8 +25,6 @@ import graft.query.Pico.{PicoQuery, PicoTerm}
   *    shaping's abbrev field is not SQL-expressible).
   */
 object Sinks {
-
-  private def sqlS(s: String): String = "'" + s.replace("'", "''") + "'"
 
   // ---- q63: RIS dumps round-trip over picosearch results --------------------
 
@@ -137,10 +136,10 @@ object Sinks {
         .orderBy("pmid"),
     Some("SELECT * FROM (VALUES " + apiDocs.map { a =>
       val cite = citationGolden(a.pmid)
-      Seq(sqlS(a.pmid), sqlS(a.ti), s"CAST(${a.year} AS INT)", sqlS(cite),
-        sqlS(a.punchline_text), s"CAST(${a.prob_low_rob} AS DOUBLE)",
+      Seq(quote(a.pmid), quote(a.ti), s"CAST(${a.year} AS INT)", quote(cite),
+        quote(a.punchline_text), s"CAST(${a.prob_low_rob} AS DOUBLE)",
         s"CAST(${a.num_randomized} AS BIGINT)",
-        sqlS(a.dois.mkString("|")), sqlS(abbrevGolden(a.pmid)),
+        quote(a.dois.mkString("|")), quote(abbrevGolden(a.pmid)),
         "'journal article'").mkString("(", ", ", ")")
     }.mkString(", ") +
       ") t(pmid, ti, year, citation, punchline_text, prob_low_rob, " +

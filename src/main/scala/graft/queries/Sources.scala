@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import graft.Tables
 import graft.query.Pico
 import graft.query.Pico.PicoTerm
+import Sql.{meshSql, quote}
 
 /** Remaining source readers (S6 medRxiv, S7 Unpaywall) and the
   * inverted-index access path (F19 / SURVEY §4's documented 100 TB
@@ -13,15 +14,7 @@ import graft.query.Pico.PicoTerm
   */
 object Sources {
 
-  private def sqlS(s: String): String =
-    if (s == null) "CAST(NULL AS VARCHAR)" else "'" + s.replace("'", "''") + "'"
-
   // ---- q55: inverted concept index (F19; SURVEY §4 option b) ----------------
-
-  private val h32w = "CAST('0x' || substr(md5(w), 1, 8) AS BIGINT)"
-  private def meshSql(k: Int): String =
-    s"list_transform(list_filter(string_split(text, ' '), w -> $h32w % 3 = $k), " +
-      s"w -> struct_pack(cui := 'C' || CAST($h32w % 100 AS VARCHAR), cui_str := w))"
 
   /** The picosearch containment query answered via an inverted
     * (field, cui) → doc_id index instead of a scan-side predicate: one
@@ -63,10 +56,10 @@ object Sources {
         SELECT DISTINCT 'outcomes', m.cui, doc_id
         FROM (SELECT doc_id, unnest(outcomes_mesh) AS m FROM ann))
       SELECT doc_id FROM idx
-      WHERE field = 'population' AND cui IN (${Pico.expandTerm(PicoTerm("population", "C10"), expand = true).map(sqlS).mkString(", ")})
+      WHERE field = 'population' AND cui IN (${Pico.expandTerm(PicoTerm("population", "C10"), expand = true).map(quote).mkString(", ")})
       INTERSECT
       SELECT doc_id FROM idx
-      WHERE field = 'interventions' AND cui IN (${Pico.expandTerm(PicoTerm("interventions", "C64"), expand = true).map(sqlS).mkString(", ")})
+      WHERE field = 'interventions' AND cui IN (${Pico.expandTerm(PicoTerm("interventions", "C64"), expand = true).map(quote).mkString(", ")})
       ORDER BY doc_id"""))
 
   // ---- q56: medRxiv JSON feed + manual extras (S6; medrxiv_cov.py:22-43) ----

@@ -143,35 +143,12 @@ object Training {
     */
   private val q69JaccardDfOrder = Q(
     "q69_jaccard_df_order",
-    (s, d) => {
-      // Pinned ONCE (round 17, the q22 move): `docs` feeds the
-      // df-map build job, the prefix explode and BOTH verification
-      // join sides — four shingle-scan re-runs without the pin.
-      val docs = Tables.documents(s, d)
-        .filter(size(tokens(col("text"))) >= 4)
-        .select(col("doc_id"), col("lang"),
-          array_distinct(graft.functions.Hash32.shingleHashes(col("text"))).as("toks"))
-        .transform(graft.ops.Reuse.pin)
+    (s, d) => Pipeline.prefixJaccardPairs(s, d) { docs =>
       val dfRows = docs.select(explode(col("toks")).as("w"))
         .groupBy("w").agg(count(lit(1)).as("df"))
         .filter(col("df") >= 2)
       val (dfm, _) = graft.functions.Prefix.broadcastDfMap(dfRows)
-      val pref = docs.select(col("doc_id"), col("lang"),
-        explode(graft.functions.Prefix.prefixCol(col("toks"), dfm)).as("w"))
-      val cand = graft.ops.Dedup
-        .bucketPairs(pref, "doc_id", Seq("lang", "w"))
-        .distinct()
-      cand
-        .join(docs.select(col("doc_id").as("a_id"), col("toks").as("ta")), "a_id")
-        .join(docs.select(col("doc_id").as("b_id"), col("toks").as("tb")), "b_id")
-        .select(col("a_id"), col("b_id"),
-          size(array_intersect(col("ta"), col("tb"))).cast("long").as("common"),
-          size(col("ta")).cast("long").as("sa"), size(col("tb")).cast("long").as("sb"))
-        .select(col("a_id"), col("b_id"),
-          round(col("common").cast("double") /
-            (col("sa") + col("sb") - col("common")), 6).as("jaccard"))
-        .filter(col("jaccard") >= 0.88)
-        .orderBy("a_id", "b_id")
+      graft.functions.Prefix.prefixCol(col("toks"), dfm)
     },
     Some(Pipeline.jaccardPairsOracle),
     bench = true)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.functions.Portable.{dot, dsum6, h32s, norm2, toDouble}
+import graft.functions.Portable.{cos6, dot, dsum6, h32s, norm2, toDouble}
 
 /** Embedding-space operators for training-data pipelines: random-
   * projection dimensionality reduction, LSH-bucketed mutual-kNN graph
@@ -353,8 +353,6 @@ object Vectors {
     "q181_ann_recall",
     (s, d) => {
       import graft.search.Ivf
-      def cos6(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-        round(dot(a, b) / sqrt(norm2(a) * norm2(b)), 6)
       val vecs = Tables.embeddings(s, d)
         .select(col("vec_id"), toDouble(col("embedding")).as("v"))
       val qs = vecs.filter(col("vec_id") % 50 === 0)
@@ -834,8 +832,6 @@ object Vectors {
       val payload = s.read.parquet(s"$root/payload")
       val q = payload.filter(col("vec_id") === 0L)
         .select(col("v").as("qv"))
-      def cos6(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-        round(dot(a, b) / sqrt(norm2(a) * norm2(b)), 6)
       // centroid ranking collects the nprobe winners to the driver (4
       // rows; the codebook side is ≤2^16 by construction) so the cell
       // predicate is a PLANNING-TIME literal the scan can prune on —
@@ -1213,7 +1209,7 @@ object Vectors {
         val b = slice(col("qv"), 1, dims)
         vecs.crossJoin(broadcast(qs)).filter(col("vec_id") =!= col("qid"))
           .select(lit(dims.toLong).as("dim"), col("qid"), col("vec_id"),
-            round(dot(a, b) / sqrt(norm2(a) * norm2(b)), 6).as("cs"))
+            cos6(a, b).as("cs"))
           .withColumn("rn", row_number().over(Window.partitionBy("qid")
             .orderBy(col("cs").desc, col("vec_id"))))
           .filter(col("rn") <= 10)

@@ -3,7 +3,7 @@ package graft.search
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.{IvfCodebook, IvfOps}
-import graft.functions.Portable.{dot, norm2, toDouble}
+import graft.functions.Portable.{cos6, toDouble}
 
 /** IVF (inverted-file) approximate nearest neighbor search — the
   * scale path beside the exact brute-force baseline (q26), standing in
@@ -27,10 +27,6 @@ import graft.functions.Portable.{dot, norm2, toDouble}
   * reproducible across engines.
   */
 object Ivf {
-
-  /** cos(v, c) rounded for stable cross-engine comparison. */
-  private def cos6(v: Column, c: Column): Column =
-    round(dot(v, c) / sqrt(norm2(v) * norm2(c)), 6)
 
   /** Hard codebook-cardinality cap: C ≈ √N only holds if the caller
     * scales `centroidMod` with N, so the bound is enforced BY

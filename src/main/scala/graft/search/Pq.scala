@@ -106,15 +106,13 @@ object Pq {
     */
   def searchIvf(e: DataFrame, queryId: Long, centroidMod: Int,
       nprobe: Int, m: Int, k: Int): DataFrame = {
-    import graft.functions.Portable.{dot, norm2, toDouble}
+    import graft.functions.Portable.{cos6, toDouble}
     val vecs = e.select(col("vec_id"), toDouble(col("embedding")).as("v"))
     val cents = vecs.filter(col("vec_id") % centroidMod === 1)
       .select(col("vec_id").as("cid"), col("v").as("cv"))
     val qvd = vecs.filter(col("vec_id") === queryId).select(col("v").as("qv"))
     val probes = cents.crossJoin(broadcast(qvd))
-      .select(col("cid"),
-        round(dot(col("qv"), col("cv")) /
-          sqrt(norm2(col("qv")) * norm2(col("cv"))), 6).as("cs"))
+      .select(col("cid"), cos6(col("qv"), col("cv")).as("cs"))
       .orderBy(col("cs").desc, col("cid"))
       .limit(nprobe)
       .select(col("cid").as("cell"))

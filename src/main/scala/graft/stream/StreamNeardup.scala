@@ -35,8 +35,8 @@ import org.apache.spark.sql.functions._
   * StreamLshNeardupSpec): a new vector matches an accepted one iff
   * probed(new) ∩ base(accepted) ≠ ∅ — flip reach is query-side only
   * (depth ≤3 per band, not the symmetric self-join's ≤6), the
-  * standing trade for the O(N) index; LshProbe's asym grid measures
-  * the recall/T frontier for this regime.
+  * standing trade for the O(N) index; bench/asym_frontier_r16.txt
+  * records the recall/T frontier for this regime.
   */
 object StreamNeardup {
 

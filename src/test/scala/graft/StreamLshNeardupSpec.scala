@@ -35,9 +35,9 @@ import graft.stream.StreamNeardup
   * Recall note (why this is the DESIGN spec, not a recall spec):
   * query-side-only probing reaches flip depth ≤3 per band instead of
   * the symmetric self-join's ≤6 — the standing trade for the O(N)
-  * index. LshProbe's asym grid measures that frontier; the schedule
-  * choice for a standing deployment would come from it, exactly as
-  * the symmetric schedule came from the sym grid.
+  * index. bench/asym_frontier_r16.txt records that frontier; the
+  * schedule choice for a standing deployment would come from it,
+  * exactly as the symmetric schedule came from the sym grid.
   */
 class StreamLshNeardupSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
