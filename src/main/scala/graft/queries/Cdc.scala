@@ -1025,8 +1025,7 @@ object Cdc {
       val (upserts, tombstones) = cdcBatches(s, d)
       for (b <- 0 until 5)
         store.merge("state", upserts(b), tombstones(b), s"batch_$b")
-      def partFiles(v: Int): Int = new java.io.File(s"$root/state/v$v")
-        .listFiles().count(f => f.getName.startsWith("part-"))
+      def partFiles(v: Int): Int = store.snapshotAt("state", v).get.inputFiles.length
       // merges size their output files adaptively (round 16), so the
       // fragmented layout compaction exists for is PLANTED explicitly:
       // a 4-way re-layout rewrite (the same many-small-files shape a

@@ -27,11 +27,7 @@ object Flagship {
       FROM documents)"""
 
   private[queries] def predSql(q: PicoQuery): String =
-    q.terms.map { t =>
-      val expansion = Pico.expandTerm(t, q.expandTerms)
-        .map(c => "'" + c + "'").mkString(", ")
-      s"len(list_filter(${t.field}_mesh, s -> s.cui IN ($expansion))) > 0"
-    }.mkString("(", ") AND (", ")")
+    Pico.queryizeSql(Pico.flatTree(q), q.expandTerms)
 
   private def oracleSql(q: PicoQuery): String = {
     val pred = predSql(q)

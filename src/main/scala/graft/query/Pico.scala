@@ -125,17 +125,11 @@ object Pico {
     case OrExpr(cs)  => cs.map(queryizeSql(_, expand)).mkString("(", ") OR (", ")")
   }
 
-  /** P3/P4: AND across terms; OR within a term's subtree expansion —
-    * `exists(field_mesh, s -> s.cui ∈ expansion)` per term, folded with
-    * AND (cnxapp.py:187-207). Pure codegen'd predicate, pushed into the
-    * scan.
+  /** P3/P4: a flat query is the AND of its terms, each an OR over the
+    * term's subtree expansion (cnxapp.py:187-207) — the tree
+    * [[queryize]] and [[queryizeSql]] render.
     */
-  def containmentPredicate(q: PicoQuery): Column =
-    q.terms.map { t =>
-      val expansion = expandTerm(t, q.expandTerms)
-      exists(col(s"${t.field}_mesh"),
-        s => s.getField("cui").isin(expansion: _*))
-    }.reduce(_ && _)
+  def flatTree(q: PicoQuery): PicoExpr = AndExpr(q.terms.map(Leaf))
 
   /** Three-arm picosearch (cnxapp.py:221-311): journal arm (flag-
     * filtered, ranked), registration arm (registry docs, deterministic
@@ -146,7 +140,7 @@ object Pico {
     */
   def search(spark: SparkSession, dir: String, q: PicoQuery): DataFrame = {
     val ann = annotations(Tables.documents(spark, dir))
-    val pred = containmentPredicate(q)
+    val pred = queryize(flatTree(q), q.expandTerms)
 
     // NB: no round() — both engines compute (k/100.0)*n with identical
     // IEEE ops, so raw doubles are bit-identical, while round-to-2 can

@@ -1,8 +1,14 @@
 package graft.stream
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{FileSystemException, Files, NoSuchFileException, Path, Paths}
+import java.nio.file.StandardCopyOption.ATOMIC_MOVE
+import java.util.UUID
+import scala.collection.mutable
 import scala.concurrent.Await
 import scala.concurrent.duration._
+import com.fasterxml.jackson.core.JacksonException
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.util.Dirs
@@ -42,30 +48,40 @@ import graft.util.Dirs
   * rewrite atomic-by-rename-free: readers always resolve the highest
   * complete version (a _SUCCESS-marked parquet dir).
   *
+  * Layout seam: the on-disk layout (below) is private to this class —
+  * the version listing, the one version read, the staging and
+  * crashed-aside names, the claim and the vacuum sweep. Callers see
+  * versions only through [[snapshot]] and [[snapshotAt]].
+  *
   * Fault contract (pinned by TableStoreFaultSpec): a v-dir without its
   * _SUCCESS marker is a crashed write — invisible to readers and
   * healed (renamed aside and removed) by the next merge; a crash
   * BETWEEN the snapshot write and the log append is repaired by
   * re-draining the source (the merge is idempotent by key, so the
   * re-applied version is value-identical and the log regains the
-  * file); a second live writer with a stale applied-files cache
-  * re-reads the log on a miss and cannot double-apply.
+  * file); a second live writer whose log record predates another
+  * writer's append refreshes it on a miss and cannot double-apply.
   *
-  * Concurrency contract (pinned by TableStoreRaceSpec): commits use
-  * OPTIMISTIC version claiming — each merge writes its snapshot to a
-  * hidden `.staging-*` directory and then claims `v(n+1)` with ONE
-  * atomic rename (the Delta/Iceberg commit shape on a filesystem that
-  * has atomic rename-without-replace). Two interleaved writers — A
-  * reads version n, B commits v(n+1), A tries to commit — cannot lose
-  * an update: A's rename onto the now-existing v(n+1) FAILS, and A
-  * retries the whole merge from the fresh snapshot, so committed
-  * versions form a serial order and every version's content derives
-  * from its direct predecessor. Readers are unaffected either way: a
-  * version directory appears atomically complete (_SUCCESS included)
-  * or not at all. Two writers racing the SAME source file can at
-  * worst both apply it — value-identical by the key-idempotence above
-  * — leaving a duplicate audit row in the update_log (a set,
-  * semantically) and never a duplicate data row.
+  * Concurrency contract (pinned by TableStoreRaceSpec): merge and
+  * compact commit through ONE optimistic loop ([[commit]]) — each
+  * attempt writes its snapshot to a hidden `.staging-*` directory and
+  * then claims `v(n+1)` with ONE atomic rename (the Delta/Iceberg
+  * commit shape on a filesystem that has atomic
+  * rename-without-replace). Two interleaved writers — A reads version
+  * n, B commits v(n+1), A tries to commit — cannot lose an update: A's
+  * rename onto the now-existing v(n+1) FAILS, and A retries from the
+  * fresh snapshot, so committed versions form a serial order and every
+  * version's content derives from its direct predecessor. Readers are
+  * unaffected either way: a version directory appears atomically
+  * complete (_SUCCESS included) or not at all. Two writers racing the
+  * SAME source file can at worst both apply it — value-identical by
+  * the key-idempotence above — leaving a duplicate audit row in the
+  * update_log (a set, semantically) and never a duplicate data row.
+  *
+  * Threading: one writer thread per instance — merge and the
+  * applied-files reads share an unsynchronized record of the log.
+  * [[snapshot]] and [[snapshotAt]] touch no cache and may be called
+  * from any thread.
   *
   * Scale note: the rewrite is one shuffle-free union of two anti-joins
   * keyed on the table key; at cluster scale the snapshot would be
@@ -76,6 +92,13 @@ import graft.util.Dirs
   */
 final class TableStore(spark: SparkSession, root: String, keyCol: String) {
 
+  // ---- on-disk layout --------------------------------------------------
+  //   <root>/<table>/v<n>              committed version n (parquet + _SUCCESS)
+  //   <root>/<table>/.staging-v<n>-*   an attempt at v<n> before its claim
+  //   <root>/<table>/.crashed-v<n>-*   a partial v<n> renamed aside for removal
+  //   <root>/_update_log/log-*.json    one applied-file record per file
+  //   <root>/_matviews/<table>         a maintained aggregate snapshot (T5)
+
   private def tableDir(table: String) = s"$root/$table"
   private def logDir = s"$root/_update_log"
 
@@ -83,15 +106,15 @@ final class TableStore(spark: SparkSession, root: String, keyCol: String) {
   def matviewDir(table: String): String = s"$root/_matviews/$table"
 
   /** COMPLETE snapshot versions only: a v-dir without its _SUCCESS
-    * marker is a crashed write (merge and compact both go through
-    * Spark's committer, which writes the marker last), and resolving
-    * it as current would silently serve truncated data — this filter
-    * is what actually implements the "readers resolve the highest
-    * complete version" promise in the class doc. The next writer to
-    * claim that version number renames the partial dir aside and
-    * removes it ([[claimVersion]]), so crashed attempts self-heal.
-    * Hidden `.staging-*` / `.crashed-*` dirs never match the `v`
-    * prefix and are invisible here by construction.
+    * marker is a crashed write (every commit goes through Spark's
+    * committer, which writes the marker last), and resolving it as
+    * current would silently serve truncated data — this filter is what
+    * actually implements the "readers resolve the highest complete
+    * version" promise in the class doc. The next writer to claim that
+    * version number renames the partial dir aside and removes it
+    * ([[claimVersion]]), so crashed attempts self-heal. Hidden aside
+    * dirs never match the `v` prefix and are invisible here by
+    * construction.
     */
   private def versions(table: String): Seq[Int] =
     Dirs.list(Paths.get(tableDir(table)))
@@ -103,14 +126,24 @@ final class TableStore(spark: SparkSession, root: String, keyCol: String) {
   private def versionDir(table: String, v: Int): Path =
     Paths.get(tableDir(table), s"v$v")
 
-  /** A fresh hidden staging dir for an attempt at version `v`. */
-  private def stagingDir(table: String, v: Int): Path =
-    Paths.get(tableDir(table), s".staging-v$v-${java.util.UUID.randomUUID()}")
+  private val Staging = ".staging-"
+  private val Crashed = ".crashed-"
+
+  /** A fresh hidden aside dir (`prefix` is [[Staging]] or [[Crashed]])
+    * for an attempt at, or the removal of, version `v`.
+    */
+  private def asideDir(table: String, prefix: String, v: Int): Path =
+    Paths.get(tableDir(table), s"${prefix}v$v-${UUID.randomUUID()}")
+
+  /** The one parquet read of a version or staging dir, in `session`
+    * (class doc, session rule).
+    */
+  private def read(session: SparkSession, dir: Path): DataFrame =
+    session.read.parquet(dir.toString)
 
   /** Latest committed snapshot, or None before the first merge. */
   def snapshot(table: String): Option[DataFrame] =
-    versions(table).lastOption.map(v =>
-      spark.read.parquet(versionDir(table, v).toString))
+    versions(table).lastOption.map(v => read(spark, versionDir(table, v)))
 
   /** TIME TRAVEL: the snapshot as of merge `version` (1-based — the
     * state after the version-th applied batch), or None if that
@@ -121,8 +154,7 @@ final class TableStore(spark: SparkSession, root: String, keyCol: String) {
     * retention policy exactly as in production table formats.
     */
   def snapshotAt(table: String, version: Int): Option[DataFrame] =
-    versions(table).find(_ == version).map(v =>
-      spark.read.parquet(versionDir(table, v).toString))
+    versions(table).find(_ == version).map(v => read(spark, versionDir(table, v)))
 
   /** RETENTION: drop all but the newest `keepLast` snapshot versions —
     * the vacuum that bounds the q112 time-travel horizon (exactly the
@@ -135,15 +167,12 @@ final class TableStore(spark: SparkSession, root: String, keyCol: String) {
     require(keepLast >= 1, "must keep at least the current snapshot")
     val drop = versions(table).dropRight(keepLast)
     drop.foreach(v => Dirs.rmTree(versionDir(table, v)))
-    // Reap orphaned .staging-*/.crashed-* dirs left by crashed
-    // writers (inert junk — never reader-visible). A LIVE writer's
-    // staging can be swept too; the merge treats that as a lost claim
-    // and retries, so vacuum stays safe to run concurrently.
+    // Reap orphaned aside dirs left by crashed writers (inert junk —
+    // never reader-visible). A LIVE writer's staging can be swept too;
+    // the commit loop treats that as a lost claim and retries, so
+    // vacuum stays safe to run concurrently.
     Dirs.list(Paths.get(tableDir(table)))
-      .filter { p =>
-        val n = p.getFileName.toString
-        n.startsWith(".staging-") || n.startsWith(".crashed-")
-      }
+      .filter(p => Seq(Staging, Crashed).exists(p.getFileName.toString.startsWith))
       .foreach(Dirs.rmTree)
     drop.size
   }
@@ -154,51 +183,42 @@ final class TableStore(spark: SparkSession, root: String, keyCol: String) {
   // exactly-once lookup a Spark job — at the nightly-merge cadence
   // that is 2 fixed-overhead jobs per batch for a table of a few
   // hundred bytes (measured round 16: ~25% of q131's wall was this
-  // bookkeeping). Appends are now ONE driver-side atomic file move of
-  // a JSON line (the same commit shape production table formats use
-  // for their transaction logs), and lookups are driver-side reads.
+  // bookkeeping). An append is ONE driver-side atomic file move of a
+  // JSON line (the same commit shape production table formats use for
+  // their transaction logs), and lookups are driver-side reads.
   // Readers through [[updateLog]] still get a DataFrame (spark JSON
-  // scan, same columns), and the concurrency story is unchanged:
-  // appends create unique files atomically, and the exactly-once gate
-  // re-reads the log whenever the directory listing has changed.
+  // scan, same columns).
+  //
+  // Log files are append-only and uniquely named, so a store keeps ONE
+  // record of the log for all its tables: the files it has read and
+  // the (table, source_filename) pairs each holds. A refresh lists the
+  // directory and reads only the names it has not seen; the store's
+  // own appends enter the record directly. A single-writer merge
+  // stream therefore costs one listing per merge and never re-reads a
+  // file, and any other writer's append is a new name the next
+  // refresh reads.
 
-  private def jsonEscape(s: String): String = {
-    val b = new StringBuilder(s.length + 8)
-    s.foreach {
-      case '"' => b.append("\\\"")
-      case '\\' => b.append("\\\\")
-      case c if c < ' ' => b.append(f"\\u${c.toInt}%04x")
-      case c => b.append(c)
-    }
-    b.toString
-  }
-
-  /** Fields of one log line, parsed with Jackson (Spark's bundled
-    * JSON library — the same parser `spark.read.json` uses, so the
-    * driver-side and DataFrame views of the log always agree).
+  /** Writes and reads every log line: Jackson is Spark's bundled JSON
+    * library — the same parser `spark.read.json` uses, so the
+    * driver-side and DataFrame views of the log always agree.
     */
-  private def parseLogLine(line: String): Option[(String, String)] = {
-    if (line.isEmpty) None
-    else {
-      // a malformed line (a foreign file that slipped the log-*.json
-      // listing filter, or a torn write on a filesystem without atomic
-      // move) must be skipped, not take every merge down with it
-      try {
-        val node = jsonMapper.readTree(line)
-        val t = node.get("update_type")
-        val f = node.get("source_filename")
-        if (t == null || f == null) None else Some((t.asText, f.asText))
-      } catch {
-        case _: com.fasterxml.jackson.core.JacksonException => None
-      }
+  private val json = new ObjectMapper()
+
+  /** (update_type, source_filename) of one non-empty log line. */
+  private def parseLogLine(line: String): Option[(String, String)] =
+    // a malformed line (a foreign file that slipped the log-*.json
+    // listing filter, or a torn write on a filesystem without atomic
+    // move) must be skipped, not take every merge down with it
+    try {
+      val node = json.readTree(line)
+      val t = node.get("update_type")
+      val f = node.get("source_filename")
+      if (t == null || f == null) None else Some((t.asText, f.asText))
+    } catch {
+      case _: JacksonException => None
     }
-  }
 
-  private val jsonMapper = new com.fasterxml.jackson.databind.ObjectMapper()
-
-  /** Log file names currently in the log directory (the cheap "has
-    * any writer appended?" fingerprint the cache-miss path compares
-    * against the listing its cache was read under).
+  /** Log file names currently in the log directory.
     *
     * Exactly the names appendLog writes: a legacy parquet log dir
     * (pre-round-16 layout) or any foreign file must not be read as
@@ -226,99 +246,80 @@ final class TableStore(spark: SparkSession, root: String, keyCol: String) {
     * temp file and claim its final name with ONE atomic move — the
     * same commit primitive the snapshot versions use, so a reader
     * (driver-side or `spark.read.json`) never sees a torn line and
-    * two concurrent appenders never collide (unique names).
+    * two concurrent appenders never collide (unique names). Returns
+    * the new file's name.
     */
   private def appendLog(table: String, sourceFilename: String): String = {
     Files.createDirectories(Paths.get(logDir))
-    val fname = s"log-${java.util.UUID.randomUUID()}.json"
-    val line = s"""{"update_type":"${jsonEscape(table)}","source_filename":"${jsonEscape(sourceFilename)}","update_date":"${java.time.Instant.now.toString}"}""" + "\n"
+    val fname = s"log-${UUID.randomUUID()}.json"
+    val line = json.writeValueAsString(json.createObjectNode()
+      .put("update_type", table)
+      .put("source_filename", sourceFilename)
+      .put("update_date", java.time.Instant.now.toString)) + "\n"
     val tmp = Paths.get(logDir, s".tmp-$fname")
-    Files.write(tmp, line.getBytes("UTF-8"))
-    Files.move(tmp, Paths.get(logDir, fname),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    Files.write(tmp, line.getBytes(UTF_8))
+    Files.move(tmp, Paths.get(logDir, fname), ATOMIC_MOVE)
     fname
   }
 
+  /** The store's record of the log: each log file read so far → the
+    * (update_type, source_filename) pairs it holds.
+    */
+  private val logRecord = mutable.Map.empty[String, Seq[(String, String)]]
+
+  /** Bring [[logRecord]] up to the log directory with one listing:
+    * read the names it has not seen and drop the ones that are gone.
+    */
+  private def refreshLog(): Unit = {
+    val listing = listLogFiles()
+    logRecord.filterInPlace((f, _) => listing(f))
+    (listing -- logRecord.keySet).foreach(f => logRecord(f) = readLogFile(f))
+  }
+
+  /** The entries of one log file; none if it vanished after the
+    * listing (removed concurrently — including the TOCTOU window
+    * between the exists check and the read, where the removal
+    * surfaces as NoSuchFileException).
+    */
+  private def readLogFile(f: String): Seq[(String, String)] = {
+    val p = Paths.get(logDir, f)
+    val text =
+      if (!Files.exists(p)) ""
+      else
+        try new String(Files.readAllBytes(p), UTF_8)
+        catch { case _: NoSuchFileException => "" }
+    text.split('\n').toSeq.map(_.trim).filter(_.nonEmpty).flatMap(parseLogLine)
+  }
+
+  private def recorded(table: String): Iterator[String] =
+    logRecord.valuesIterator.flatten.collect { case (t, f) if t == table => f }
+
   /** Applied source_filenames across ALL tables (audit view). */
-  def appliedFiles(): Set[String] =
-    readLogEntries(listLogFiles()).map(_._2).toSet
+  def appliedFiles(): Set[String] = {
+    refreshLog()
+    logRecord.valuesIterator.flatten.map(_._2).toSet
+  }
 
   /** Applied source_filenames FOR ONE TABLE — the exactly-once gate is
     * scoped like the reference's `WHERE update_type='pubmed_update'`
     * lookup (pubmed.py:113-117): the same source file merged into two
-    * different tables applies to both. Loaded from the log once per
-    * (instance, table) and maintained incrementally by merge(); a
-    * filename MISSING from the cache triggers a log re-read before
-    * merge applies it, so a second live instance writing the same root
-    * cannot cause a double-apply (the cache only ever under-reports,
-    * and the miss path restores the read-the-log-every-merge
-    * robustness of the uncached design at the same cost).
+    * different tables applies to both.
     */
-  def appliedFiles(table: String): Set[String] =
-    appliedCache.getOrElseUpdate(table, readLog(table)).toSet
-
-  /** (update_type, source_filename) rows of exactly the given log
-    * files — reading ONLY the captured listing keeps the cache and
-    * the listing it is tagged with consistent even if another writer
-    * appends mid-read.
-    */
-  private def readLogEntries(files: Set[String]): Seq[(String, String)] =
-    files.toSeq.flatMap { f =>
-      // a file listed a moment ago can be vacuumed away concurrently;
-      // treat it as gone (its entries were rewritten or reclaimed) —
-      // including the TOCTOU window between the exists check and the
-      // read, where the removal surfaces as NoSuchFileException
-      val p = Paths.get(logDir, f)
-      val bytes =
-        if (!Files.exists(p)) None
-        else
-          try Some(Files.readAllBytes(p))
-          catch { case _: java.nio.file.NoSuchFileException => None }
-      bytes match {
-        case None => Seq.empty
-        case Some(bs) => new String(bs, "UTF-8")
-          .split('\n').toSeq.flatMap(l => parseLogLine(l.trim))
-      }
-    }
-
-  private def readLog(table: String): scala.collection.mutable.Set[String] = {
-    val listing = listLogFiles()
-    val entries = readLogEntries(listing)
-    cacheListing(table) = listing
-    scala.collection.mutable.Set(
-      entries.collect { case (t, f) if t == table => f }: _*)
+  def appliedFiles(table: String): Set[String] = {
+    refreshLog()
+    recorded(table).toSet
   }
 
-  /** Cache-hit fast path; on miss, refresh from the log (another
-    * instance may have applied the file since this cache loaded) —
-    * unless the log directory's listing is UNCHANGED from the one the
-    * cache was read under, in which case the cache is provably
-    * current and the miss is authoritative (no re-read needed: every
-    * append creates a new file, so a writer this cache has not seen
-    * implies a listing difference).
+  /** The exactly-once gate: a hit in the record is final (log files
+    * are never rewritten); a miss refreshes the record first, so a
+    * file another instance applied since the last refresh is seen and
+    * never applied twice.
     */
-  private def isApplied(table: String, sourceFilename: String): Boolean = {
-    val cached = appliedCache.getOrElseUpdate(table, readLog(table))
-    cached.contains(sourceFilename) || {
-      if (cacheListing.get(table).contains(listLogFiles())) false
-      else {
-        val fresh = readLog(table)
-        appliedCache(table) = fresh
-        fresh.contains(sourceFilename)
-      }
+  private def isApplied(table: String, sourceFilename: String): Boolean =
+    recorded(table).contains(sourceFilename) || {
+      refreshLog()
+      recorded(table).contains(sourceFilename)
     }
-  }
-
-  private val appliedCache =
-    scala.collection.mutable.Map.empty[String, scala.collection.mutable.Set[String]]
-  /** Log-directory listing each table's cache was read under. Our own
-    * appends update it in place (we KNOW the file we just wrote and
-    * that it contains only our own entry), so a single-writer merge
-    * stream never re-reads the log; any foreign append leaves a file
-    * the listing lacks and forces the re-read.
-    */
-  private val cacheListing =
-    scala.collection.mutable.Map.empty[String, Set[String]]
 
   def updateLog(): Option[DataFrame] =
     if (Files.exists(Paths.get(logDir)))
@@ -381,17 +382,14 @@ final class TableStore(spark: SparkSession, root: String, keyCol: String) {
   private def claimVersion(table: String, v: Int, staging: Path): Boolean = {
     val target = versionDir(table, v)
     if (Files.exists(target) && !Files.exists(target.resolve("_SUCCESS"))) {
-      val aside = Paths.get(s"${tableDir(table)}/.crashed-v$v-" +
-        java.util.UUID.randomUUID())
+      val aside = asideDir(table, Crashed, v)
       try {
-        Files.move(target, aside,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+        Files.move(target, aside, ATOMIC_MOVE)
         Dirs.rmTree(aside)
-      } catch { case _: java.nio.file.NoSuchFileException => () }
+      } catch { case _: NoSuchFileException => () }
     }
     try {
-      Files.move(staging, target,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      Files.move(staging, target, ATOMIC_MOVE)
       true
     } catch {
       // a lost claim surfaces platform-dependently: EEXIST/ENOTEMPTY
@@ -399,9 +397,9 @@ final class TableStore(spark: SparkSession, root: String, keyCol: String) {
       // as a bare FileSystemException("Directory not empty") on Linux;
       // a concurrent vacuum() reaping our staging dir is NoSuchFile.
       // All are FileSystemExceptions, all mean "retry against the
-      // fresh snapshot" — a genuine I/O fault then fails the retry
+      // fresh snapshot" — a genuine I/O fault then fails the commit
       // loop's bounded-attempts guard loudly instead of silently.
-      case _: java.nio.file.FileSystemException => false
+      case _: FileSystemException => false
     }
   }
 
@@ -417,41 +415,119 @@ final class TableStore(spark: SparkSession, root: String, keyCol: String) {
     (files.size.toLong, files.map(Files.size).sum)
   }
 
+  /** The ONE optimistic commit loop (class doc, Concurrency contract)
+    * that merge and compact share. Each attempt pins its base to the
+    * latest complete version and claims exactly base+1: claiming
+    * "whatever is latest now + 1" instead would let a writer skip OVER
+    * a version a racing writer committed between its base read and its
+    * claim — committing content derived from v(n) as v(n+2) and
+    * silently dropping v(n+1)'s rows (caught by TableStoreRaceSpec's
+    * unsynchronized stress run). With the pin, any interleaved commit
+    * makes the claim collide and the attempt is recomputed.
+    *
+    * An attempt: `stage(base, dir)` writes the snapshot derived from
+    * version `base` (0 = none yet) into a fresh staging `dir` and
+    * returns the attempt's result; the staged dir is listed once;
+    * [[onBeforeCommit]] runs; `resize(files, bytes)` may name a file
+    * count to rewrite the staged snapshot at (in `session`); then the
+    * claim. After a lost claim the attempt's dirs are removed and
+    * `stop` is checked (None when it holds); a bounded number of
+    * attempts turns a stuck competing writer or a filesystem without
+    * atomic rename into a loud failure. Returns the claimed version and
+    * the winning attempt's result.
+    */
+  private def commit[A](table: String, session: SparkSession, what: String,
+      stop: => Boolean = false, resize: (Long, Long) => Option[Int] = (_, _) => None)(
+      stage: (Int, Path) => A): Option[(Int, A)] = {
+    @annotation.tailrec
+    def attempt(n: Int): Option[(Int, A)] = {
+      val base = versions(table).lastOption.getOrElse(0)
+      val v = base + 1
+      var staging = asideDir(table, Staging, v)
+      val result = stage(base, staging)
+      val resized = asideDir(table, Staging, v)
+      val claimed =
+        try {
+          val (files, bytes) = dataFiles(staging)
+          onBeforeCommit()
+          resize(files, bytes).foreach { k =>
+            read(session, staging).repartition(k)
+              .write.mode(SaveMode.Overwrite).parquet(resized.toString)
+            Dirs.rmTree(staging)
+            staging = resized
+          }
+          claimVersion(table, v, staging)
+        } catch {
+          // a concurrent vacuum() swept the staging dir mid-resize: the
+          // same lost claim claimVersion reports for a swept dir
+          case _: Exception if !Files.exists(staging) => false
+        }
+      if (claimed) Some((v, result))
+      else {
+        Dirs.rmTree(staging)
+        Dirs.rmTree(resized)
+        if (stop) None
+        else {
+          require(n < 16, s"$what lost $n version claims in a row — a stuck " +
+            "competing writer or a filesystem without atomic rename")
+          attempt(n + 1)
+        }
+      }
+    }
+    attempt(1)
+  }
+
   /** MERGE one CDC batch. `upserts` must contain `keyCol` plus a `seq`
     * ordering column for within-batch last-wins (P9; tie and null-`seq`
     * rules at [[TableStore.lastWins]]); `tombstones` is a one-column
     * frame of keys to delete, built in the upserts' session (class doc,
     * session rule). Returns true if applied, false if `sourceFilename`
     * was already logged (idempotent re-run).
+    *
+    * `allowSchemaEvolution = true` additionally accepts ADD-COLUMN
+    * drift (see the union note below). Evolution is OPT-IN, exactly
+    * like production formats' mergeSchema: the default strict union
+    * keeps failing loudly on a misspelled or missing column, so one
+    * malformed batch cannot silently pollute the table schema forever.
     */
   def merge(table: String, upserts: DataFrame, tombstones: DataFrame,
-      sourceFilename: String): Boolean =
-    merge(table, upserts, tombstones, sourceFilename,
-      allowSchemaEvolution = false)
-
-  /** As [[merge]]; `allowSchemaEvolution = true` additionally accepts
-    * ADD-COLUMN drift (see the union note below). Evolution is OPT-IN,
-    * exactly like production formats' mergeSchema: the default strict
-    * union keeps failing loudly on a misspelled or missing column, so
-    * one malformed batch cannot silently pollute the table schema
-    * forever.
-    */
-  def merge(table: String, upserts: DataFrame, tombstones: DataFrame,
-      sourceFilename: String, allowSchemaEvolution: Boolean): Boolean = {
+      sourceFilename: String, allowSchemaEvolution: Boolean = false): Boolean = {
     if (isApplied(table, sourceFilename)) return false
     // Session rule (class doc): the write must run in the session the
     // observations below register on, which is the upserts' session
     val session = upserts.sparkSession
 
-    // Optimistic-commit loop (class doc, Concurrency contract): each
-    // attempt recomputes against the CURRENT snapshot, stages the
-    // result, and claims the next version with one atomic rename; a
-    // lost claim means a racing writer committed first, so recompute
-    // and retry. Single-writer deployments never loop.
-    var attempt = 0
-    while (true) {
-      attempt += 1
+    // Output file sizing (nightly tables accumulate versions; a
+    // snapshot scattered across one file per upstream task pays
+    // listing + footer + open cost on every later read): size the new
+    // version's file count from the BASE version's on-disk bytes at a
+    // ~targetFileBytes/file goal (default 128 MB, guide §6; conf-keyed
+    // so a deployment — or a spec — can move it) — scale-adaptive, not
+    // a local constant (a TB-size snapshot still writes thousands of
+    // files). coalesce, not repartition: no extra exchange.
+    val targetFileBytes = math.max(1L, spark.conf
+      .get("spark.graft.snapshot.targetFileBytes", (128L << 20).toString)
+      .toLong)
+    def fileTarget(bytes: Long): Int =
+      math.max(1L, math.min(1 << 20, bytes / targetFileBytes + 1)).toInt
 
+    // Correct the sizing from the ACTUAL staged bytes (round 17):
+    // sizing from the base version under-sizes a merge that grows the
+    // table (a doubling merge writes ~256 MB files until the next merge
+    // catches up), and a bootstrap has no base at all. When the staged
+    // files average more than 2× the target, the commit loop rewrites
+    // the staging dir once at the true target before the claim — a
+    // second job only on large-growth merges, never on the
+    // steady-state nightly path (the check itself is the loop's one
+    // driver-side listing).
+    def resize(files: Long, bytes: Long): Option[Int] =
+      if (files > 0 && bytes > 2L * targetFileBytes * files) Some(fileTarget(bytes))
+      else None
+
+    // the winner of a lost claim may have applied THIS file (same-file
+    // race): the exactly-once gate re-checks the log before a retry
+    val committed = commit(table, session, s"merge of $sourceFilename into $table",
+        stop = isApplied(table, sourceFilename), resize = resize) { (base, staging) =>
       // Batch-stat counts ride the merge job itself as observed
       // metrics (CollectMetrics on each input's single-consumption
       // path) — no extra count() actions re-running the upstream
@@ -465,18 +541,8 @@ final class TableStore(spark: SparkSession, root: String, keyCol: String) {
       val dedupedUpserts = TableStore.lastWins(
         upserts.observe(obsUp, count(lit(1)).as("n")), keyCol)
 
-      // The BASE version is read ONCE per attempt and the claim is
-      // pinned to base+1: claiming "whatever is latest now + 1"
-      // instead would let this writer skip OVER a version a racing
-      // writer committed between our snapshot read and our claim —
-      // committing content derived from v(n) as v(n+2) and silently
-      // dropping v(n+1)'s rows (caught by TableStoreRaceSpec's
-      // unsynchronized stress run). With the pin, any interleaved
-      // commit makes OUR claim collide and we recompute.
-      val baseV = versions(table).lastOption.getOrElse(0)
-      val bootstrap = baseV == 0
       val next =
-        if (bootstrap) dedupedUpserts
+        if (base == 0) dedupedUpserts
         else {
           // allowMissingColumns (opt-in) = ADD-COLUMN schema evolution
           // (the Delta/Iceberg mergeSchema contract): a batch
@@ -490,7 +556,7 @@ final class TableStore(spark: SparkSession, root: String, keyCol: String) {
           // (removed iff key ∈ T ∪ U), and one broadcast build per
           // merge instead of two (round 16; each build is its own job
           // on the nightly path)
-          session.read.parquet(versionDir(table, baseV).toString)
+          read(session, versionDir(table, base))
             .join(tombstones
                 .observe(obsTomb, count(lit(1)).as("n"))
                 .select(col(tombstones.columns.head).as(keyCol))
@@ -498,87 +564,24 @@ final class TableStore(spark: SparkSession, root: String, keyCol: String) {
               Seq(keyCol), "left_anti")
             .unionByName(dedupedUpserts,
               allowMissingColumns = allowSchemaEvolution)
+            .coalesce(fileTarget(dataFiles(versionDir(table, base))._2))
         }
-
-      val v = baseV + 1
-      // Output file sizing (nightly tables accumulate versions; a
-      // snapshot scattered across one file per upstream task pays
-      // listing + footer + open cost on every later read): size the
-      // new version's file count from the PREVIOUS version's on-disk
-      // bytes at a ~targetFileBytes/file goal (default 128 MB, guide
-      // §6; conf-keyed so a deployment — or a spec — can move it) —
-      // scale-adaptive, not a local constant (a TB-size snapshot
-      // still writes thousands of files). coalesce, not repartition:
-      // no extra exchange.
-      val targetFileBytes = math.max(1L, spark.conf
-        .get("spark.graft.snapshot.targetFileBytes", (128L << 20).toString)
-        .toLong)
-      def fileTarget(bytes: Long): Long =
-        math.max(1L, math.min(1 << 20, bytes / targetFileBytes + 1))
-      val sized =
-        if (bootstrap) next
-        else next.coalesce(fileTarget(dataFiles(versionDir(table, baseV))._2).toInt)
-      var staging = stagingDir(table, v)
-      sized.write.mode(SaveMode.Overwrite).parquet(staging.toString)
-      val upsertsSeen = observedCount(obsUp)
+      next.write.mode(SaveMode.Overwrite).parquet(staging.toString)
       // Bootstrap: tombstones are a no-op and never execute, so the
       // observation never fires — count them with one small extra
       // job, first merge of a table's life only.
-      val tombstonesSeen =
-        if (bootstrap) tombstones.count() else observedCount(obsTomb)
-
-      // Correct the sizing from the ACTUAL staged bytes (round 17):
-      // sizing from the previous version under-sizes a merge that
-      // grows the table (a doubling merge writes ~256 MB files until
-      // the next merge catches up), and a bootstrap has no previous
-      // version at all. When the staged files average more than 2× the
-      // target, rewrite the staging dir once at the true target before
-      // the claim — a second job only on large-growth merges, never on
-      // the steady-state nightly path (the check itself is one
-      // driver-side listing).
-      val resized = stagingDir(table, v)
-      val claimed =
-        try {
-          val (stagedFiles, stagedBytes) = dataFiles(staging)
-          onBeforeCommit()
-          if (stagedFiles > 0 && stagedBytes > 2L * targetFileBytes * stagedFiles) {
-            session.read.parquet(staging.toString)
-              .repartition(fileTarget(stagedBytes).toInt)
-              .write.mode(SaveMode.Overwrite).parquet(resized.toString)
-            Dirs.rmTree(staging)
-            staging = resized
-          }
-          claimVersion(table, v, staging)
-        } catch {
-          // a concurrent vacuum() swept the staging dir mid-resize: the
-          // same lost claim claimVersion reports for a swept dir
-          case _: Exception if !Files.exists(staging) => false
-        }
-      if (claimed) {
-        mergedBatches.add(1)
-        mergedUpserts.add(upsertsSeen)
-        mergedTombstones.add(tombstonesSeen)
-
-        val logFile = appendLog(table, sourceFilename)
-        appliedCache(table) += sourceFilename
-        // our own append: attribution is exact (the file holds only
-        // our entry), so every table's cached listing absorbs it
-        // without a re-read; a FOREIGN append stays missing from the
-        // listing and still forces the miss-path re-read
-        cacheListing.keys.foreach(t => cacheListing(t) += logFile)
-        return true
-      }
-      Dirs.rmTree(staging)
-      Dirs.rmTree(resized)
-      // the winner may have applied THIS file (same-file race): the
-      // exactly-once gate re-checks the log before the next attempt
-      if (isApplied(table, sourceFilename)) return false
-      require(attempt < 16,
-        s"merge of $sourceFilename into $table lost $attempt version " +
-          "claims in a row — a stuck competing writer or a filesystem " +
-          "without atomic rename")
+      (observedCount(obsUp),
+        if (base == 0) tombstones.count() else observedCount(obsTomb))
     }
-    false // unreachable
+    committed.foreach { case (_, (upsertsSeen, tombstonesSeen)) =>
+      mergedBatches.add(1)
+      mergedUpserts.add(upsertsSeen)
+      mergedTombstones.add(tombstonesSeen)
+      // our own append holds exactly our entry: it enters the record
+      // without a read
+      logRecord(appendLog(table, sourceFilename)) = Seq((table, sourceFilename))
+    }
+    committed.isDefined
   }
 
   /** COMPACTION (the lakehouse OPTIMIZE): rewrite the latest snapshot
@@ -597,26 +600,14 @@ final class TableStore(spark: SparkSession, root: String, keyCol: String) {
     */
   def compact(table: String, numFiles: Int): Int = {
     require(numFiles >= 1, s"numFiles must be >= 1, got $numFiles")
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      val vs = versions(table)
-      require(vs.nonEmpty, s"no snapshot to compact for table $table")
-      val cur = spark.read.parquet(versionDir(table, vs.last).toString)
-      val v = vs.last + 1
-      val staging = stagingDir(table, v)
-      cur.repartition(numFiles).write
-        .mode(SaveMode.Overwrite).parquet(staging.toString)
-      onBeforeCommit()
-      // same optimistic claim as merge: losing means a writer
-      // committed a NEWER snapshot — compacting the stale one would
-      // be wasted work, so recompute from the fresh latest
-      if (claimVersion(table, v, staging)) return v
-      Dirs.rmTree(staging)
-      require(attempt < 16,
-        s"compaction of $table lost $attempt version claims in a row")
-    }
-    -1 // unreachable
+    // the same commit loop as merge: losing the claim means a writer
+    // committed a NEWER snapshot — compacting the stale one would be
+    // wasted work, so the retry recomputes from the fresh latest
+    commit(table, spark, s"compaction of $table") { (base, staging) =>
+      require(base > 0, s"no snapshot to compact for table $table")
+      read(spark, versionDir(table, base)).repartition(numFiles)
+        .write.mode(SaveMode.Overwrite).parquet(staging.toString)
+    }.get._1
   }
 }
 

@@ -136,6 +136,29 @@ class TableStoreRaceSpec extends AnyFunSuite {
     } finally spark.conf.unset("spark.graft.snapshot.targetFileBytes")
   }
 
+  test("a compaction that loses its claim to a racing merge retries from the new snapshot") {
+    val root = freshRoot()
+    val a = new TableStore(spark, root, "k")
+    val b = new TableStore(spark, root, "k")
+    assert(a.merge("t", ups(("base", "0", 1)), dels(), "f0"))
+    // A's first attempt stages a compaction of v1; in the window before
+    // its claim B commits v2, once — A's claim of v2 must lose
+    val raced = new java.util.concurrent.atomic.AtomicBoolean(false)
+    a.onBeforeCommit = () =>
+      if (raced.compareAndSet(false, true))
+        assert(b.merge("t", ups(("kb", "b1", 1)), dels(), "fB"))
+
+    assert(a.compact("t", numFiles = 1) === 3,
+      "the retry must compact the racer's v2 into v3")
+    assert(state(a) === Map("base" -> "0", "kb" -> "b1"))
+    assert(a.snapshot("t").get.inputFiles.length === 1)
+    assert(a.snapshotAt("t", 2).map(_.collect().map(r => r.getString(0) -> r.getString(1)).toMap)
+      .contains(Map("base" -> "0", "kb" -> "b1")), "v2 must be the racer's state")
+    val staged = graft.util.Dirs.list(java.nio.file.Paths.get(root, "t"))
+      .map(_.getFileName.toString).filter(_.startsWith(".staging-"))
+    assert(staged.isEmpty, s"the lost attempt left $staged behind")
+  }
+
   test("unsynchronized stress: interleaved writers serialize, nothing lost") {
     val root = freshRoot()
     val a = new TableStore(spark, root, "k")

@@ -79,11 +79,24 @@ class TableStoreSpec extends AnyFunSuite {
   }
 
   test("idempotent per source_filename: re-apply is a no-op") {
-    val s = freshStore()
+    val root = Files.createTempDirectory("ts-spec-").toString
+    val s = new TableStore(spark, root, "k")
     assert(s.merge("t", ups(("a", "1", 1)), dels(), "f0"))
     assert(!s.merge("t", ups(("a", "CLOBBER", 1)), dels(), "f0"))
     assert(state(s) === Map("a" -> "1"))
     assert(s.updateLog().get.count() === 1)
+    // a name JSON must escape (quote, backslash, tab) plus a non-ASCII
+    // letter: the log writer, the driver-side reader and Spark's JSON
+    // reader must agree on it exactly
+    val odd = "f\"1\\\t\u00e9.xml"
+    assert(s.merge("t", ups(("b", "2", 1)), dels(), odd))
+    assert(!s.merge("t", ups(("b", "CLOBBER", 1)), dels(), odd))
+    assert(!new TableStore(spark, root, "k").merge("t", ups(("b", "CLOBBER", 1)), dels(), odd),
+      "a fresh instance must read the name back from the log and gate it")
+    assert(state(s) === Map("a" -> "1", "b" -> "2"))
+    assert(s.appliedFiles("t") === Set("f0", odd))
+    assert(s.updateLog().get.select("source_filename").as[String].collect().toSet ===
+      Set("f0", odd))
   }
 
   test("file application order matters (T3 in-order requirement)") {
