@@ -1,24 +1,18 @@
 package graft
 import java.nio.file.{Files, Paths}
+import com.fasterxml.jackson.databind.ObjectMapper
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
 
-  /** JSON string escape: backslash, quote, and ALL control chars
-    * (<0x20) — a tab or CR in builder-authored SQL would otherwise make
-    * the driver's json.load fail and silently zero the round's
-    * correctness. Shared with [[graft.tools.VerifySome]] so the two
+  /** One JSON string literal, written by Jackson's `ObjectMapper` —
+    * the writer the table store's update log uses, so there is one JSON
+    * string rule. Shared with [[graft.tools.VerifySome]] so the two
     * tools cannot emit divergent oracle_sql.json.
     */
-  private[graft] def jsonEscape(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
+  private[graft] def jsonString(s: String): String = mapper.writeValueAsString(s)
+
+  private val mapper = new ObjectMapper()
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
@@ -38,7 +32,7 @@ object Verify {
       }
     }
     val failJson = failures
-      .map { case (k, v) => s"${jsonEscape(k)}: ${jsonEscape(v.take(500))}" }
+      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v.take(500))}" }
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/verify_failures.json"), failJson)
     if (failures.nonEmpty) {
@@ -48,7 +42,7 @@ object Verify {
       println(s"[verify] FAILURES=${failures.size} (see verify_failures.json)")
     }
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${Verify.jsonEscape(k)}: ${Verify.jsonEscape(v)}" }
+      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // Registry manifest: one entry per query (family, oracle md5, bench
@@ -59,8 +53,8 @@ object Verify {
       md.digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
     val manifest = queries.Registry.all.map { q =>
       val fam = queries.Registry.familyOf(q.name)
-      val omd5 = q.oracle.map(o => jsonEscape(md5(o))).getOrElse("null")
-      s"${jsonEscape(q.name)}: {\"family\": ${jsonEscape(fam)}, " +
+      val omd5 = q.oracle.map(o => jsonString(md5(o))).getOrElse("null")
+      s"${jsonString(q.name)}: {\"family\": ${jsonString(fam)}, " +
         s"\"oracle_md5\": $omd5, \"bench\": ${q.bench}}"
     }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/manifest.json"), manifest)

@@ -18,9 +18,9 @@ import graft.functions.Portable.{cos6, toDouble}
   * and reranks only those cells' vectors exactly.
   *
   * Scale shape: the expensive side (N vectors) never shuffles for
-  * assignment — at cluster scale the assignment is computed once,
-  * persisted bucketed by cell, and probing reads only the probed
-  * cells (partition pruning on cell).
+  * assignment. Each request assigns all N vectors again: no cell is
+  * stored, so probing cannot prune to the probed cells' vectors
+  * (ROADMAP direction 1 stores the cell at merge time).
   *
   * Plan/oracle determinism: similarities are rounded to 6 decimals and
   * tie-broken by centroid id before the argmax, so assignment is

@@ -11,6 +11,7 @@ import com.fasterxml.jackson.core.JacksonException
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.GraftShim
 import graft.util.Dirs
 
 /** Keyed snapshot table with CDC MERGE semantics on plain parquet
@@ -47,6 +48,12 @@ import graft.util.Dirs
   * pubmed.py:113-117,461-469). Versioned snapshot dirs make the
   * rewrite atomic-by-rename-free: readers always resolve the highest
   * complete version (a _SUCCESS-marked parquet dir).
+  *
+  * Read rule: every version and staging dir is read with an explicit
+  * schema, taken on the driver from the footer of the dir's own first
+  * data file by the rule Spark's inference runs
+  * (`GraftShim.parquetSchema`). A bare parquet read would infer the same
+  * schema with a one-task Spark job per read; this one starts no job.
   *
   * Layout seam: the on-disk layout (below) is private to this class —
   * the version listing, the one version read, the staging and
@@ -136,10 +143,15 @@ final class TableStore(spark: SparkSession, root: String, keyCol: String) {
     Paths.get(tableDir(table), s"${prefix}v$v-${UUID.randomUUID()}")
 
   /** The one parquet read of a version or staging dir, in `session`
-    * (class doc, session rule).
+    * (class doc, session rule and read rule). The schema comes from the
+    * dir's lexicographically first data file, the file Spark's own
+    * inference picks (`ParquetUtils.splitFiles`). A dir with no data
+    * file is read bare and fails as Spark fails it.
     */
   private def read(session: SparkSession, dir: Path): DataFrame =
-    session.read.parquet(dir.toString)
+    dataFiles(dir).minByOption(_.getFileName.toString)
+      .fold(session.read)(f => session.read.schema(GraftShim.parquetSchema(session, f.toString)))
+      .parquet(dir.toString)
 
   /** Latest committed snapshot, or None before the first merge. */
   def snapshot(table: String): Option[DataFrame] =
@@ -403,17 +415,16 @@ final class TableStore(spark: SparkSession, root: String, keyCol: String) {
     }
   }
 
-  /** (count, total bytes) of the data files in a snapshot or staging
-    * dir from one directory listing; markers and hidden files
-    * excluded.
+  /** The data files of a snapshot or staging dir, from one directory
+    * listing; markers and hidden files excluded.
     */
-  private def dataFiles(dir: Path): (Long, Long) = {
-    val files = Dirs.list(dir).filter { p =>
+  private def dataFiles(dir: Path): Vector[Path] =
+    Dirs.list(dir).filter { p =>
       val n = p.getFileName.toString
       !n.startsWith(".") && !n.startsWith("_") && Files.isRegularFile(p)
     }
-    (files.size.toLong, files.map(Files.size).sum)
-  }
+
+  private def totalBytes(files: Seq[Path]): Long = files.map(Files.size).sum
 
   /** The ONE optimistic commit loop (class doc, Concurrency contract)
     * that merge and compact share. Each attempt pins its base to the
@@ -448,9 +459,9 @@ final class TableStore(spark: SparkSession, root: String, keyCol: String) {
       val resized = asideDir(table, Staging, v)
       val claimed =
         try {
-          val (files, bytes) = dataFiles(staging)
+          val files = dataFiles(staging)
           onBeforeCommit()
-          resize(files, bytes).foreach { k =>
+          resize(files.size.toLong, totalBytes(files)).foreach { k =>
             read(session, staging).repartition(k)
               .write.mode(SaveMode.Overwrite).parquet(resized.toString)
             Dirs.rmTree(staging)
@@ -564,7 +575,7 @@ final class TableStore(spark: SparkSession, root: String, keyCol: String) {
               Seq(keyCol), "left_anti")
             .unionByName(dedupedUpserts,
               allowMissingColumns = allowSchemaEvolution)
-            .coalesce(fileTarget(dataFiles(versionDir(table, base))._2))
+            .coalesce(fileTarget(totalBytes(dataFiles(versionDir(table, base)))))
         }
       next.write.mode(SaveMode.Overwrite).parquet(staging.toString)
       // Bootstrap: tombstones are a no-op and never execute, so the

@@ -8,7 +8,7 @@ import java.nio.file.{Files, Paths}
   * q1 q2 ...
   *
   * Mirrors Verify's contract: same session config (SPARK_GRAFT_CPUS
-  * honored), same shared JSON escaper (Verify.jsonEscape — the two
+  * honored), same shared JSON string writer (Verify.jsonString — the two
   * tools cannot emit divergent oracle_sql.json), per-query failure
   * isolation, and a clear error for an unknown query name.
   */
@@ -33,7 +33,7 @@ object VerifySome {
     val json = names
       .flatMap(n => graft.queries.Registry.byName(n).oracle.map(n -> _))
       .map { case (k, v) =>
-        s"${graft.Verify.jsonEscape(k)}: ${graft.Verify.jsonEscape(v)}" }
+        s"${graft.Verify.jsonString(k)}: ${graft.Verify.jsonString(v)}" }
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

@@ -1,8 +1,15 @@
 package org.apache.spark.sql.graftshim
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.StructType
 
 /** Column <-> Expression bridge for graft's native Catalyst
   * expressions. Spark keeps these converters `private[sql]`, so —
@@ -35,4 +42,21 @@ object GraftShim {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.functionRegistry
       .registerFunction(org.apache.spark.sql.catalyst.FunctionIdentifier(name), info, builder)
+
+  /** The Spark schema of one parquet file, read on the driver from its
+    * footer — the rule Spark's schema-inference task runs
+    * (`ParquetFileFormat.readSchemaFromFooter`): the schema Spark wrote
+    * under the `org.apache.spark.sql.parquet.row.metadata` key, field
+    * metadata included, or the Parquet schema converted under the
+    * session's parquet confs when that key is absent. Reading it here
+    * costs one footer read and no Spark job.
+    */
+  def parquetSchema(spark: org.apache.spark.sql.SparkSession, file: String): StructType = {
+    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val path = new Path(file)
+    val footer = ParquetFooterReader.readFooter(
+      HadoopInputFile.fromPath(path, session.sessionState.newHadoopConf()), NO_FILTER)
+    ParquetFileFormat.readSchemaFromFooter(new Footer(path, footer),
+      new ParquetToSparkSchemaConverter(session.sessionState.conf))
+  }
 }

@@ -3,8 +3,11 @@ package graft
 import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.{Gen, Prop, Test => SCTest}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.graftspec.Bus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.MetadataBuilder
 import graft.stream.TableStore
 
 /** MERGE/tombstone semantics (SURVEY T2/T3) against an executable model
@@ -201,6 +204,85 @@ class TableStoreSpec extends AnyFunSuite {
       assert(s.snapshot("t").get.agg(sum(length(col("v")))).head.getLong(0) ===
         big.agg(sum(length(col("v")))).head.getLong(0))
     } finally spark.conf.unset("spark.graft.snapshot.targetFileBytes")
+  }
+
+  test("a snapshot read runs no Spark job") {
+    // the read schema comes from the version's own footer on the
+    // driver; a bare parquet read would infer it with a 1-task job
+    val s = freshStore()
+    s.merge("t", ups(("a", "1", 1)), dels(), "f0")
+    s.merge("t", ups(("b", "2", 1)), dels(), "f1")
+    val sc = spark.sparkContext
+    val group = s"snapshot-read-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == group) jobs.incrementAndGet()
+    }
+    Bus.drain(sc)
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "snapshot reads")
+    try {
+      val frames = Seq(s.snapshot("t").get, s.snapshotAt("t", 1).get)
+      Bus.drain(sc)
+      assert(jobs.get === 0, "building a snapshot frame started a Spark job")
+      assert(frames.map(_.columns.toSeq) === Seq(Seq("k", "v"), Seq("k", "v")))
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    assert(state(s) === Map("a" -> "1", "b" -> "2"))
+  }
+
+  test("read schema equals Spark's inferred schema") {
+    val root = Files.createTempDirectory("ts-spec-").toString
+    val s = new TableStore(spark, root, "k")
+    val tagged = new MetadataBuilder().putString("comment", "trial key").build()
+    // no map column: last-wins takes a max over the row, and Spark does
+    // not order maps, so a map column cannot be merged
+    def batch(ids: Range) = ids.map(_.toLong).toDF("id").select(
+      concat(lit("k"), col("id")).as("k", tagged),
+      struct(col("id").as("n"),
+        struct(lit("x").as("s"), (col("id") * 0.5).as("d")).as("inner")).as("nested"),
+      array(col("id").cast("float"), lit(1.5f)).as("vec"),
+      (col("id") / 7).cast("decimal(12,4)").as("dec"),
+      timestamp_seconds(col("id") * 86400).as("ts"),
+      lit(null).cast("string").as("nothing"),
+      col("id").as("seq"))
+    // the store's frame against Spark's inference over the same dir:
+    // StructField equality covers nested types, nullability and field
+    // metadata, and the rows must match too
+    def sameAsSpark(v: Int): Unit = {
+      val ours = s.snapshot("t").get
+      val inferred = spark.read.parquet(s"$root/t/v$v")
+      assert(ours.schema === inferred.schema, s"v$v")
+      assert(ours.schema.json === inferred.schema.json, s"v$v")
+      assert(ours.orderBy("k").collect().toSeq === inferred.orderBy("k").collect().toSeq, s"v$v")
+    }
+    s.merge("t", batch(0 until 6), dels(), "f0")
+    sameAsSpark(1)
+    assert(s.snapshot("t").get.schema("k").metadata === tagged)
+    // ADD-COLUMN evolution (the q117 path) widens the snapshot
+    s.merge("t", batch(4 until 9).withColumn("extra", col("seq").cast("int")), dels("k0"),
+      "f1", allowSchemaEvolution = true)
+    sameAsSpark(2)
+    assert(s.snapshot("t").get.columns.last === "extra")
+    assert(s.snapshot("t").get.where(col("extra").isNull).count() === 3)
+    assert(s.compact("t", 3) === 3)
+    sameAsSpark(3)
+  }
+
+  test("a committed version without data files fails as Spark's read does") {
+    val root = Files.createTempDirectory("ts-spec-").toString
+    val s = new TableStore(spark, root, "k")
+    s.merge("t", ups(("a", "1", 1)), dels(), "f0")
+    val v1 = new java.io.File(s"$root/t/v1")
+    v1.listFiles.filterNot(_.getName == "_SUCCESS").foreach(_.delete())
+    val ours = intercept[AnalysisException](s.snapshot("t"))
+    val sparks = intercept[AnalysisException](spark.read.parquet(v1.toString))
+    assert(ours.getCondition === sparks.getCondition)
+    assert(ours.getCondition === "UNABLE_TO_INFER_SCHEMA")
   }
 
   test("property: merge sequence ≡ reference apply loop model") {
