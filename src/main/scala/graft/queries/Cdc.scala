@@ -22,6 +22,12 @@ import graft.stream.TableStore
   * (same-batch upserts re-insert, matching the reference's
   * delete-then-upsert order), valued by the (batch, ts, event_id)-max
   * upsert.
+  *
+  * Every batch-merge entry shares one drive and one oracle rule:
+  * [[cdcBatches]] derives the batches, [[mergeAll]] applies them in
+  * order, and [[cdcStateSql]] is the closed form every CDC oracle
+  * reads (the state after all five batches, or after batches 0..b
+  * for the time-travel entries q112/q150).
   */
 object Cdc {
 
@@ -51,22 +57,42 @@ object Cdc {
     (upserts, tombstones)
   }
 
-  /** Closed-form final CDC state (the q44 oracle, reused by q131: the
-    * force-refresh path must land on the SAME state).
+  /** The plain CDC drive: merge batches 0..4 into table `state` in
+    * order, each logged under the source filename `<prefix>_<b>`.
     */
-  private val cdcFinalStateSql =
-    """WITH ev AS (SELECT user_id, event_type, value, ts, event_id,
+  private def mergeAll(store: TableStore, upserts: Int => DataFrame,
+      tombstones: Int => DataFrame, prefix: String = "batch"): Unit =
+    for (b <- 0 until 5)
+      store.merge("state", upserts(b), tombstones(b), s"${prefix}_$b")
+
+  /** The closed form of [[cdcBatches]] + [[mergeAll]] as one DuckDB
+    * query over `events`: the table state after batches 0..`upTo`
+    * (all five when None). One row per present key: user_id,
+    * last_type, last_value, and the winning upsert's batch and
+    * event_id.
+    */
+  private def cdcStateSql(upTo: Option[Int] = None): String = {
+    val kept = upTo.fold("")(b => s" AND batch <= $b")
+    s"""WITH ev AS (SELECT user_id, event_type, value, ts, event_id,
             event_id % 5 AS batch, (event_type = 'error') AS is_del FROM events),
-      lu AS (SELECT user_id, event_type AS last_type, value AS last_value, batch,
+      lu AS (SELECT user_id, event_type AS last_type, value AS last_value,
+               batch, event_id,
                row_number() OVER (PARTITION BY user_id
                  ORDER BY batch DESC, ts DESC, event_id DESC) AS rn
-             FROM ev WHERE NOT is_del),
-      lu1 AS (SELECT * FROM lu WHERE rn = 1),
-      ld AS (SELECT user_id, max(batch) AS del_batch FROM ev WHERE is_del GROUP BY 1)
-      SELECT u.user_id, u.last_type, u.last_value
-      FROM lu1 u LEFT JOIN ld d ON u.user_id = d.user_id
-      WHERE d.del_batch IS NULL OR u.batch >= d.del_batch
-      ORDER BY u.user_id"""
+             FROM ev WHERE NOT is_del$kept),
+      ld AS (SELECT user_id, max(batch) AS del_batch FROM ev
+             WHERE is_del$kept GROUP BY 1)
+      SELECT u.user_id, u.last_type, u.last_value, u.batch, u.event_id
+      FROM lu u LEFT JOIN ld d ON u.user_id = d.user_id
+      WHERE u.rn = 1 AND (d.del_batch IS NULL OR u.batch >= d.del_batch)"""
+  }
+
+  /** Closed-form final CDC state (the q44 oracle, reused by q131 and
+    * q139: refresh and compaction must land on the SAME state).
+    */
+  private val cdcFinalStateSql =
+    s"""WITH fin AS (${cdcStateSql()})
+      SELECT user_id, last_type, last_value FROM fin ORDER BY user_id"""
 
   private val q44CdcMerge = Q(
     "q44_cdc_merge",
@@ -75,8 +101,7 @@ object Cdc {
       val store = new TableStore(s, root, "user_id")
       val (upserts, tombstones) = cdcBatches(s, d)
 
-      for (b <- 0 until 5)
-        store.merge("state", upserts(b), tombstones(b), s"batch_$b")
+      mergeAll(store, upserts, tombstones)
       // idempotence probe: already-logged file must be a no-op
       val reapplied = store.merge("state", upserts(2), tombstones(2), "batch_2")
       require(!reapplied, "update_log failed to gate an already-applied file")
@@ -103,8 +128,7 @@ object Cdc {
       val root = Files.createTempDirectory("graft-a4-").toString
       val store = new TableStore(s, root, "user_id")
       val (upserts, tombstones) = cdcBatches(s, d)
-      for (b <- 0 until 5)
-        store.merge("state", upserts(b), tombstones(b), s"batch_$b")
+      mergeAll(store, upserts, tombstones)
       // counters must not move on an already-logged file
       val before = (store.mergedBatches.value, store.mergedUpserts.value,
         store.mergedTombstones.value)
@@ -150,8 +174,7 @@ object Cdc {
       val root = Files.createTempDirectory("graft-t6-").toString
       val store = new TableStore(s, s"$root/store", "user_id")
       val (upserts, tombstones) = cdcBatches(s, d)
-      for (b <- 0 until 5)
-        store.merge("state", upserts(b), tombstones(b), s"batch_$b")
+      mergeAll(store, upserts, tombstones)
       // materialize the incremental final state OUTSIDE the table dir
       // (forceRefresh deletes the snapshot files under a lazy reader):
       // an eager localCheckpoint pins the rows in block storage — no
@@ -161,8 +184,7 @@ object Cdc {
       require(store.snapshot("state").isEmpty,
         "forceRefresh left a snapshot behind")
       // reprocess with fresh filenames; the audit log survives the wipe
-      for (b <- 0 until 5)
-        store.merge("state", upserts(b), tombstones(b), s"refresh_$b")
+      mergeAll(store, upserts, tombstones, "refresh")
       val gated = store.merge("state", upserts(1), tombstones(1), "batch_1")
       require(!gated, "audit log lost pre-refresh history: stale file re-applied")
       val rebuilt = store.snapshot("state").get
@@ -241,17 +263,7 @@ object Cdc {
         .crossJoin(mat)
         .orderBy("last_type")
     },
-    Some("""WITH ev AS (SELECT user_id, event_type, value, ts, event_id,
-            event_id % 5 AS batch, (event_type = 'error') AS is_del FROM events),
-      lu AS (SELECT user_id, event_type AS last_type, value AS last_value, batch,
-               row_number() OVER (PARTITION BY user_id
-                 ORDER BY batch DESC, ts DESC, event_id DESC) AS rn
-             FROM ev WHERE NOT is_del),
-      lu1 AS (SELECT * FROM lu WHERE rn = 1),
-      ld AS (SELECT user_id, max(batch) AS del_batch FROM ev WHERE is_del GROUP BY 1),
-      fin AS (SELECT u.user_id, u.last_type, u.last_value
-              FROM lu1 u LEFT JOIN ld d ON u.user_id = d.user_id
-              WHERE d.del_batch IS NULL OR u.batch >= d.del_batch),
+    Some(s"""WITH fin AS (${cdcStateSql()}),
       tot AS (SELECT count(*) AS total_rows FROM fin)
       SELECT last_type, count(*) AS n_keys,
         CAST(sum(CAST(last_value AS DECIMAL(28,6))) AS DOUBLE) AS sum_value,
@@ -285,18 +297,10 @@ object Cdc {
       tagged.write.parquet(s"$root/in")
       val sdf = s.readStream.schema(tagged.schema).parquet(s"$root/in")
         .as[graft.stream.StreamAsOf.Tagged]
-      s.catalog.dropTempView("q98_sasof")  // stale same-name view from
-        // an earlier run in this session would shadow the new sink
-      val query = graft.stream.StreamAsOf.backward(sdf)
-        .writeStream.format("memory").queryName("q98_sasof")
-        .option("checkpointLocation", s"$root/ckpt")
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
+      val out = Scratch.drainToMemory(graft.stream.StreamAsOf.backward(sdf),
+        "q98_sasof", s"$root/ckpt")
       Scratch.rmTree(root)  // results live in the memory sink
-      s.table("q98_sasof")
-        .select(col("seq").as("purchase_id"), col("key").as("user_id"),
+      out.select(col("seq").as("purchase_id"), col("key").as("user_id"),
           col("asof_seq").as("click_id"),
           col("asof_payload").as("click_value"),
           (unix_micros(col("ts")) - col("asof_ts_us")).as("gap_us"))
@@ -409,17 +413,7 @@ object Cdc {
           col("sum_dec").cast("double").as("sum_value"))
         .orderBy("last_type")
     },
-    Some("""WITH ev AS (SELECT user_id, event_type, value, ts, event_id,
-            event_id % 5 AS batch, (event_type = 'error') AS is_del FROM events),
-      lu AS (SELECT user_id, event_type AS last_type, value AS last_value, batch,
-               row_number() OVER (PARTITION BY user_id
-                 ORDER BY batch DESC, ts DESC, event_id DESC) AS rn
-             FROM ev WHERE NOT is_del),
-      lu1 AS (SELECT * FROM lu WHERE rn = 1),
-      ld AS (SELECT user_id, max(batch) AS del_batch FROM ev WHERE is_del GROUP BY 1),
-      fin AS (SELECT u.user_id, u.last_type, u.last_value
-              FROM lu1 u LEFT JOIN ld d ON u.user_id = d.user_id
-              WHERE d.del_batch IS NULL OR u.batch >= d.del_batch)
+    Some(s"""WITH fin AS (${cdcStateSql()})
       SELECT last_type, count(*) AS n_keys,
         CAST(sum(CAST(last_value AS DECIMAL(28,6))) AS DOUBLE) AS sum_value
       FROM fin GROUP BY 1 ORDER BY 1"""))
@@ -439,8 +433,7 @@ object Cdc {
       val root = Files.createTempDirectory("graft-tt-").toString
       val store = new TableStore(s, root, "user_id")
       val (upserts, tombstones) = cdcBatches(s, d)
-      for (b <- 0 until 5)
-        store.merge("state", upserts(b), tombstones(b), s"batch_$b")
+      mergeAll(store, upserts, tombstones)
 
       val asof = store.snapshotAt("state", 3).get
       val fin = store.snapshot("state").get
@@ -455,28 +448,8 @@ object Cdc {
         .agg(count(lit(1)).as("n_keys_changed"))
       summarize(asof, "v3").crossJoin(summarize(fin, "final")).crossJoin(changed)
     },
-    Some("""WITH ev AS (SELECT user_id, event_type, value, ts, event_id,
-            event_id % 5 AS batch, (event_type = 'error') AS is_del FROM events),
-      lu3 AS (SELECT user_id, event_type AS last_type, value AS last_value, batch,
-               row_number() OVER (PARTITION BY user_id
-                 ORDER BY batch DESC, ts DESC, event_id DESC) AS rn
-             FROM ev WHERE NOT is_del AND batch <= 2),
-      s3 AS (SELECT u.user_id, u.last_type, u.last_value
-             FROM (SELECT * FROM lu3 WHERE rn = 1) u
-             LEFT JOIN (SELECT user_id, max(batch) AS db FROM ev
-                        WHERE is_del AND batch <= 2 GROUP BY 1) d
-               ON u.user_id = d.user_id
-             WHERE d.db IS NULL OR u.batch >= d.db),
-      lu AS (SELECT user_id, event_type AS last_type, value AS last_value, batch,
-               row_number() OVER (PARTITION BY user_id
-                 ORDER BY batch DESC, ts DESC, event_id DESC) AS rn
-             FROM ev WHERE NOT is_del),
-      sf AS (SELECT u.user_id, u.last_type, u.last_value
-             FROM (SELECT * FROM lu WHERE rn = 1) u
-             LEFT JOIN (SELECT user_id, max(batch) AS db FROM ev
-                        WHERE is_del GROUP BY 1) d
-               ON u.user_id = d.user_id
-             WHERE d.db IS NULL OR u.batch >= d.db),
+    Some(s"""WITH s3 AS (${cdcStateSql(Some(2))}),
+      sf AS (${cdcStateSql()}),
       a3 AS (SELECT count(*) AS v3_keys,
                CAST(sum(CAST(last_value AS DECIMAL(28,6))) AS DOUBLE) AS v3_sum
              FROM s3),
@@ -517,15 +490,9 @@ object Cdc {
         .agg(count(lit(1)).as("n"))
         .select(unix_micros(col("window.start")).as("w_start_us"),
           col("event_type"), col("n"))
-      s.catalog.dropTempView("q114_win")
-      val query = agg.writeStream.format("memory").queryName("q114_win")
-        .option("checkpointLocation", s"$root/ckpt")
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
+      val out = Scratch.drainToMemory(agg, "q114_win", s"$root/ckpt")
       Scratch.rmTree(root)  // results live in the memory sink
-      s.table("q114_win").orderBy("w_start_us", "event_type")
+      out.orderBy("w_start_us", "event_type")
     },
     Some("""WITH m AS (SELECT epoch_us(max(ts)) AS mx_us FROM events),
       w AS (SELECT epoch_us(ts) // 21600000000 * 21600000000 AS w_start_us,
@@ -550,8 +517,7 @@ object Cdc {
       val root = Files.createTempDirectory("graft-vac-").toString
       val store = new TableStore(s, root, "user_id")
       val (upserts, tombstones) = cdcBatches(s, d)
-      for (b <- 0 until 5)
-        store.merge("state", upserts(b), tombstones(b), s"batch_$b")
+      mergeAll(store, upserts, tombstones)
       val removed = store.vacuum("state", keepLast = 2)
       require(store.snapshotAt("state", 3).isEmpty,
         "vacuumed version must be unreadable")
@@ -564,17 +530,7 @@ object Cdc {
         .select(lit(removed.toLong).as("n_versions_removed"),
           lit(2L).as("n_versions_kept"), col("n_keys"), col("sum_value"))
     },
-    Some("""WITH ev AS (SELECT user_id, event_type, value, ts, event_id,
-            event_id % 5 AS batch, (event_type = 'error') AS is_del FROM events),
-      lu AS (SELECT user_id, value AS last_value, batch,
-               row_number() OVER (PARTITION BY user_id
-                 ORDER BY batch DESC, ts DESC, event_id DESC) AS rn
-             FROM ev WHERE NOT is_del),
-      lu1 AS (SELECT * FROM lu WHERE rn = 1),
-      ld AS (SELECT user_id, max(batch) AS del_batch FROM ev WHERE is_del GROUP BY 1),
-      fin AS (SELECT u.user_id, u.last_value
-              FROM lu1 u LEFT JOIN ld d ON u.user_id = d.user_id
-              WHERE d.del_batch IS NULL OR u.batch >= d.del_batch)
+    Some(s"""WITH fin AS (${cdcStateSql()})
       SELECT CAST(3 AS BIGINT) AS n_versions_removed,
         CAST(2 AS BIGINT) AS n_versions_kept,
         count(*) AS n_keys,
@@ -611,20 +567,11 @@ object Cdc {
           graft.functions.Portable.dsum6(col("last_value")).as("sum_value"))
         .orderBy(col("last_type"), coalesce(col("channel"), lit("")))
     },
-    Some("""WITH ev AS (SELECT user_id, event_type, value, ts, event_id,
-            event_id % 5 AS batch, (event_type = 'error') AS is_del FROM events),
-      lu AS (SELECT user_id, event_type AS last_type, value AS last_value,
-               batch, event_id,
-               row_number() OVER (PARTITION BY user_id
-                 ORDER BY batch DESC, ts DESC, event_id DESC) AS rn
-             FROM ev WHERE NOT is_del),
-      lu1 AS (SELECT * FROM lu WHERE rn = 1),
-      ld AS (SELECT user_id, max(batch) AS del_batch FROM ev WHERE is_del GROUP BY 1),
-      fin AS (SELECT u.last_type, u.last_value,
-                CASE WHEN u.batch >= 2
-                  THEN 'ch_' || CAST(u.event_id % 3 AS VARCHAR) END AS channel
-              FROM lu1 u LEFT JOIN ld d ON u.user_id = d.user_id
-              WHERE d.del_batch IS NULL OR u.batch >= d.del_batch)
+    Some(s"""WITH st AS (${cdcStateSql()}),
+      fin AS (SELECT last_type, last_value,
+                CASE WHEN batch >= 2
+                  THEN 'ch_' || CAST(event_id % 3 AS VARCHAR) END AS channel
+              FROM st)
       SELECT last_type, channel, count(*) AS n_keys,
         CAST(sum(CAST(last_value AS DECIMAL(28,6))) AS DOUBLE) AS sum_value
       FROM fin GROUP BY 1, 2 ORDER BY last_type, coalesce(channel, '')"""))
@@ -654,17 +601,10 @@ object Cdc {
       staged.write.parquet(s"$root/in")
       val sdf = s.readStream.schema(staged.schema).parquet(s"$root/in")
         .as[graft.stream.StreamFunnel.Ev]
-      s.catalog.dropTempView("q120_fun")
-      val query = graft.stream.StreamFunnel.run(sdf)
-        .writeStream.format("memory").queryName("q120_fun")
-        .option("checkpointLocation", s"$root/ckpt")
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
+      val out = Scratch.drainToMemory(graft.stream.StreamFunnel.run(sdf),
+        "q120_fun", s"$root/ckpt")
       Scratch.rmTree(root)  // results live in the memory sink
-      s.table("q120_fun")
-        .select(col("key").as("user_id"), col("stage"), col("ts_us"),
+      out.select(col("key").as("user_id"), col("stage"), col("ts_us"),
           col("seq"))
         .orderBy("user_id", "stage")
     },
@@ -704,6 +644,22 @@ object Cdc {
     * the streaming machine are pinned to the same replay, completing
     * the warehouse family's batch/streaming pairing.
     */
+  /** q99's change closed form minus the lead-derived columns: every
+    * version open, once (the q129 and q134 oracle).
+    */
+  private val scd2OpensSql =
+    """WITH u AS (SELECT user_id, event_type, epoch_us(ts) AS ts_us, event_id
+             FROM events WHERE event_type <> 'error'),
+      l AS (SELECT *, lag(event_type) OVER (PARTITION BY user_id
+              ORDER BY ts_us, event_id) AS prev FROM u),
+      ch AS (SELECT user_id, event_type AS state, ts_us, event_id
+             FROM l WHERE prev IS NULL OR prev <> event_type)
+      SELECT user_id,
+        CAST(row_number() OVER (PARTITION BY user_id
+          ORDER BY ts_us, event_id) AS BIGINT) AS version,
+        state, ts_us AS effective_from_us, event_id AS seq
+      FROM ch ORDER BY user_id, version"""
+
   private val q129StreamScd2 = Q(
     "q129_stream_scd2",
     (s, d) => {
@@ -716,31 +672,14 @@ object Cdc {
       src.write.parquet(s"$root/in")
       val sdf = s.readStream.schema(src.schema).parquet(s"$root/in")
         .as[graft.stream.StreamScd2.Ev]
-      s.catalog.dropTempView("q129_scd")
-      val query = graft.stream.StreamScd2.run(sdf)
-        .writeStream.format("memory").queryName("q129_scd")
-        .option("checkpointLocation", s"$root/ckpt")
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
+      val out = Scratch.drainToMemory(graft.stream.StreamScd2.run(sdf),
+        "q129_scd", s"$root/ckpt")
       Scratch.rmTree(root)  // results live in the memory sink
-      s.table("q129_scd")
-        .select(col("key").as("user_id"), col("version"), col("state"),
+      out.select(col("key").as("user_id"), col("version"), col("state"),
           col("ts_us").as("effective_from_us"), col("seq"))
         .orderBy("user_id", "version")
     },
-    Some("""WITH u AS (SELECT user_id, event_type, epoch_us(ts) AS ts_us, event_id
-             FROM events WHERE event_type <> 'error'),
-      l AS (SELECT *, lag(event_type) OVER (PARTITION BY user_id
-              ORDER BY ts_us, event_id) AS prev FROM u),
-      ch AS (SELECT user_id, event_type AS state, ts_us, event_id
-             FROM l WHERE prev IS NULL OR prev <> event_type)
-      SELECT user_id,
-        CAST(row_number() OVER (PARTITION BY user_id
-          ORDER BY ts_us, event_id) AS BIGINT) AS version,
-        state, ts_us AS effective_from_us, event_id AS seq
-      FROM ch ORDER BY user_id, version"""))
+    Some(scd2OpensSql))
 
   /** q134: the SEEDED SCD2 path through the driver gate — the
     * restart-with-state-loss story q129's never-evict mode cannot
@@ -778,46 +717,29 @@ object Cdc {
       src.filter(unix_micros(col("ts")) > mid).write.parquet(s"$root/in2")
 
       def runPhase(inDir: String, ckpt: String, sink: String,
-          history: org.apache.spark.sql.DataFrame): Unit = {
+          history: org.apache.spark.sql.DataFrame): DataFrame = {
         val sdf = s.readStream.schema(src.schema).parquet(inDir)
           .as[graft.stream.StreamScd2.Ev]
-        s.catalog.dropTempView(sink)
-        val q = graft.stream.StreamScd2
+        Scratch.drainToMemory(graft.stream.StreamScd2
           .runSeeded(graft.stream.StreamScd2.seedFrom(sdf, history),
-            idleEvictMs = Long.MaxValue / 4)
-          .writeStream.format("memory").queryName(sink)
-          .option("checkpointLocation", ckpt)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+            idleEvictMs = Long.MaxValue / 4), sink, ckpt)
       }
 
       val emptyHistory = s.emptyDataset[graft.stream.StreamScd2.VersionOpen].toDF()
-      runPhase(s"$root/in1", s"$root/ckpt1", "q134_p1", emptyHistory)
+      val p1 = runPhase(s"$root/in1", s"$root/ckpt1", "q134_p1", emptyHistory)
       // persist phase-1 history OUTSIDE the memory sink: the phase-2
       // static join side must survive independently of sink lifecycle
-      s.table("q134_p1").write.parquet(s"$root/hist1")
-      runPhase(s"$root/in2", s"$root/ckpt2", "q134_p2",
+      p1.write.parquet(s"$root/hist1")
+      val p2 = runPhase(s"$root/in2", s"$root/ckpt2", "q134_p2",
         s.read.parquet(s"$root/hist1"))
 
-      val out = s.table("q134_p1").unionByName(s.table("q134_p2"))
+      val out = p1.unionByName(p2)
         .select(col("key").as("user_id"), col("version"), col("state"),
           col("ts_us").as("effective_from_us"), col("seq"))
         .orderBy("user_id", "version")
       Scratch.sealAndClean(out, root)
     },
-    Some("""WITH u AS (SELECT user_id, event_type, epoch_us(ts) AS ts_us, event_id
-             FROM events WHERE event_type <> 'error'),
-      l AS (SELECT *, lag(event_type) OVER (PARTITION BY user_id
-              ORDER BY ts_us, event_id) AS prev FROM u),
-      ch AS (SELECT user_id, event_type AS state, ts_us, event_id
-             FROM l WHERE prev IS NULL OR prev <> event_type)
-      SELECT user_id,
-        CAST(row_number() OVER (PARTITION BY user_id
-          ORDER BY ts_us, event_id) AS BIGINT) AS version,
-        state, ts_us AS effective_from_us, event_id AS seq
-      FROM ch ORDER BY user_id, version"""))
+    Some(scd2OpensSql))
 
   /** q135: STREAMING exact dedup through the driver gate — the last
     * spec-only row of the execution-model families table
@@ -859,22 +781,16 @@ object Cdc {
         Scratch.landFile(df, landing.toString, s"$name.parquet",
           modTime = if (name.startsWith("1")) 60000L else 120000L)
       }
-      s.catalog.dropTempView("q135_dedup")
-      val query = s.readStream.schema(b1.schema)
+      val fingerprints = s.readStream.schema(b1.schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(landing.toString)
         .withColumn("fingerprint", md5(encode(col("text"), "UTF-8")))
         .withWatermark("ts", "1 hour")
         .dropDuplicatesWithinWatermark("fingerprint")
         .select("fingerprint")
-        .writeStream.format("memory").queryName("q135_dedup")
-        .option("checkpointLocation", s"$root/ckpt")
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
+      val out = Scratch.drainToMemory(fingerprints, "q135_dedup", s"$root/ckpt")
       Scratch.rmTree(root)  // results live in the memory sink
-      s.table("q135_dedup").orderBy("fingerprint")
+      out.orderBy("fingerprint")
     },
     Some("""SELECT DISTINCT md5(text) AS fingerprint FROM documents
       ORDER BY 1"""))
@@ -907,20 +823,14 @@ object Cdc {
           toks.filter(pmod(col("doc_id"), lit(2)) === half).select("w"),
           landing.toString, s"${half}_toks.parquet")
       }
-      s.catalog.dropTempView("q136_hh")
       val mg = graft.functions.HeavyHitters.agg(255)
-      val query = s.readStream
+      val summary = s.readStream
         .schema(org.apache.spark.sql.types.StructType.fromDDL("w STRING"))
         .option("maxFilesPerTrigger", "1")
         .parquet(landing.toString)
         .agg(count(lit(1)).as("n"), mg(col("w")).as("hh"))
-        .writeStream.format("memory").queryName("q136_hh")
-        .option("checkpointLocation", s"$root/ckpt")
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
-      val fin = s.table("q136_hh").head()
+      val fin = Scratch.drainToMemory(summary, "q136_hh", s"$root/ckpt",
+        outputMode = "complete").head()
       Scratch.rmTree(root)
       Analytics.mgConfirm(toks, fin)
     },
@@ -983,20 +893,14 @@ object Cdc {
       val ps = s.readStream.schema(purchases.schema)
         .option("maxFilesPerTrigger", "1").parquet(s"$root/purchases")
         .withWatermark("pts", "6 hours")
-      s.catalog.dropTempView("q137_ssj")
-      val query = ps.join(cs,
+      val joined = ps.join(cs,
           col("p_user") === col("c_user") &&
             col("cts") >= col("pts") - expr("INTERVAL 6 HOURS") &&
             col("cts") <= col("pts"))
         .select(col("purchase_id"), col("click_id"), col("p_user").as("user_id"))
-        .writeStream.format("memory").queryName("q137_ssj")
-        .option("checkpointLocation", s"$root/ckpt")
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
+      val out = Scratch.drainToMemory(joined, "q137_ssj", s"$root/ckpt")
       Scratch.rmTree(root)  // results live in the memory sink
-      s.table("q137_ssj").orderBy("purchase_id", "click_id")
+      out.orderBy("purchase_id", "click_id")
     },
     Some("""SELECT p.event_id AS purchase_id, c.event_id AS click_id,
         p.user_id
@@ -1023,8 +927,7 @@ object Cdc {
       val root = Files.createTempDirectory("graft-opt-").toString
       val store = new TableStore(s, root, "user_id")
       val (upserts, tombstones) = cdcBatches(s, d)
-      for (b <- 0 until 5)
-        store.merge("state", upserts(b), tombstones(b), s"batch_$b")
+      mergeAll(store, upserts, tombstones)
       def partFiles(v: Int): Int = store.snapshotAt("state", v).get.inputFiles.length
       // merges size their output files adaptively (round 16), so the
       // fragmented layout compaction exists for is PLANTED explicitly:
@@ -1096,21 +999,14 @@ object Cdc {
               timestamp_micros(lit(ts)).as("ts"), lit(0.0).as("value")),
             landing.toString, s"$name.parquet", modTime = 60000L * (i + 3))
         }
-      s.catalog.dropTempView("q140_ssz")
       val sdf = s.readStream.schema(ev.schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(landing.toString)
         .as[graft.stream.Sessionize.Event]
-      val query = graft.stream.Sessionize.streaming(sdf, gapUs)
-        .writeStream.format("memory").queryName("q140_ssz")
-        .option("checkpointLocation", s"$root/ckpt")
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
+      val out = Scratch.drainToMemory(graft.stream.Sessionize.streaming(sdf, gapUs),
+        "q140_ssz", s"$root/ckpt")
       Scratch.rmTree(root)  // results live in the memory sink
-      s.table("q140_ssz")
-        .filter(col("user_id") =!= sentinel)
+      out.filter(col("user_id") =!= sentinel)
         .select(col("user_id"), col("sess_id"), col("session_start"),
           col("session_end"), col("n_events"))
         .orderBy("user_id", "sess_id")
@@ -1146,8 +1042,7 @@ object Cdc {
       val root = Files.createTempDirectory("graft-vd-").toString
       val store = new TableStore(s, root, "user_id")
       val (upserts, tombstones) = cdcBatches(s, d)
-      for (b <- 0 until 5)
-        store.merge("state", upserts(b), tombstones(b), s"batch_$b")
+      mergeAll(store, upserts, tombstones)
       val a = store.snapshotAt("state", 3).get
         .select(col("user_id"), col("last_type").as("old_type"),
           col("last_value").as("old_value"))
@@ -1167,28 +1062,8 @@ object Cdc {
         .orderBy("user_id")
       Scratch.sealAndClean(diff, root)
     },
-    Some("""WITH ev AS (SELECT user_id, event_type, value, ts, event_id,
-            event_id % 5 AS batch, (event_type = 'error') AS is_del FROM events),
-      lu3 AS (SELECT user_id, event_type AS last_type, value AS last_value, batch,
-               row_number() OVER (PARTITION BY user_id
-                 ORDER BY batch DESC, ts DESC, event_id DESC) AS rn
-             FROM ev WHERE NOT is_del AND batch <= 2),
-      s3 AS (SELECT u.user_id, u.last_type, u.last_value
-             FROM (SELECT * FROM lu3 WHERE rn = 1) u
-             LEFT JOIN (SELECT user_id, max(batch) AS db FROM ev
-                        WHERE is_del AND batch <= 2 GROUP BY 1) d
-               ON u.user_id = d.user_id
-             WHERE d.db IS NULL OR u.batch >= d.db),
-      lu AS (SELECT user_id, event_type AS last_type, value AS last_value, batch,
-               row_number() OVER (PARTITION BY user_id
-                 ORDER BY batch DESC, ts DESC, event_id DESC) AS rn
-             FROM ev WHERE NOT is_del),
-      sf AS (SELECT u.user_id, u.last_type, u.last_value
-             FROM (SELECT * FROM lu WHERE rn = 1) u
-             LEFT JOIN (SELECT user_id, max(batch) AS db FROM ev
-                        WHERE is_del GROUP BY 1) d
-               ON u.user_id = d.user_id
-             WHERE d.db IS NULL OR u.batch >= d.db)
+    Some(s"""WITH s3 AS (${cdcStateSql(Some(2))}),
+      sf AS (${cdcStateSql()})
       SELECT CASE WHEN a.user_id IS NULL THEN 'insert'
                   WHEN f.user_id IS NULL THEN 'delete'
                   ELSE 'update' END AS change,
@@ -1238,18 +1113,13 @@ object Cdc {
       }
       val refDir = s"$root/ref"
       val verdictsDir = s"$root/verdicts"
-      val query = s.readStream
+      val bins = s.readStream
         .schema(org.apache.spark.sql.types.StructType.fromDDL("bin BIGINT"))
         .option("maxFilesPerTrigger", "1")
         .parquet(landing.toString)
-        .writeStream
-        .option("checkpointLocation", s"$root/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          graft.stream.StreamPsi.step(batch, id, refDir, verdictsDir)
-        }
-        .start()
-      query.awaitTermination()
+      Scratch.drainEachBatch(bins, s"$root/ckpt") { (batch, id) =>
+        graft.stream.StreamPsi.step(batch, id, refDir, verdictsDir)
+      }
       Scratch.sealAndClean(
         s.read.parquet(s"$verdictsDir/b1", s"$verdictsDir/b2")
           .orderBy("window_id"),
@@ -1335,19 +1205,14 @@ object Cdc {
       }
       val stateDir = s"$root/state"
       val verdictsDir = s"$root/verdicts"
-      val query = s.readStream
+      val days = s.readStream
         .schema(org.apache.spark.sql.types.StructType.fromDDL(
           "day DATE, v6 BIGINT"))
         .option("maxFilesPerTrigger", "1")
         .parquet(landing.toString)
-        .writeStream
-        .option("checkpointLocation", s"$root/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          graft.stream.StreamCusum.step(batch, id, stateDir, verdictsDir)
-        }
-        .start()
-      query.awaitTermination()
+      Scratch.drainEachBatch(days, s"$root/ckpt") { (batch, id) =>
+        graft.stream.StreamCusum.step(batch, id, stateDir, verdictsDir)
+      }
       Scratch.sealAndClean(
         s.read.parquet(s"$verdictsDir/b1", s"$verdictsDir/b2")
           .orderBy("window_id", "day"),
@@ -1410,21 +1275,15 @@ object Cdc {
       val appliedDir = s"$root/applied"
       val quarantineDir = s"$root/quarantine"
       val verdictsDir = s"$root/verdicts"
-      val query = s.readStream
+      val rows = s.readStream
         .schema(org.apache.spark.sql.types.StructType.fromDDL(
           "event_id BIGINT, event_type STRING, value DOUBLE"))
         .option("maxFilesPerTrigger", "1")
         .json(landing.toString)
-        .writeStream
-        .option("checkpointLocation", s"$root/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          graft.stream.StreamSchemaGate.step(batch, id, "value",
-            appliedDir, quarantineDir, verdictsDir)
-          ()
-        }
-        .start()
-      query.awaitTermination()
+      Scratch.drainEachBatch(rows, s"$root/ckpt") { (batch, id) =>
+        graft.stream.StreamSchemaGate.step(batch, id, "value",
+          appliedDir, quarantineDir, verdictsDir)
+      }
       val verdicts = s.read
         .parquet(s"$verdictsDir/b0", s"$verdictsDir/b1", s"$verdictsDir/b2")
       val applied = s.read.parquet(s"$appliedDir/*")
@@ -1477,44 +1336,21 @@ object Cdc {
       val centsDir = s"$root/cents"
       val refHistDir = s"$root/refhist"
       val verdictsDir = s"$root/verdicts"
-      val query = s.readStream
+      val vecs = s.readStream
         .schema(org.apache.spark.sql.types.StructType.fromDDL(
           "vec_id BIGINT, embedding ARRAY<FLOAT>"))
         .option("maxFilesPerTrigger", "1")
         .parquet(landing.toString)
-        .writeStream
-        .option("checkpointLocation", s"$root/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          graft.stream.StreamStaleness.step(batch, id, centsDir,
-            refHistDir, verdictsDir)
-        }
-        .start()
-      query.awaitTermination()
+      Scratch.drainEachBatch(vecs, s"$root/ckpt") { (batch, id) =>
+        graft.stream.StreamStaleness.step(batch, id, centsDir,
+          refHistDir, verdictsDir)
+      }
       Scratch.sealAndClean(
         s.read.parquet(s"$verdictsDir/b1", s"$verdictsDir/b2")
           .orderBy("window_id"),
         root)
     },
-    Some("""WITH prm AS (SELECT greatest(1, CAST(count(*) AS BIGINT) //
-          least(4096, greatest(16, CAST(floor(sqrt(count(*))) AS BIGINT)))) AS md
-        FROM embeddings WHERE vec_id % 3 = 0),
-      el AS (SELECT vec_id, generate_subscripts(embedding, 1) AS i,
-          CAST(unnest(embedding) AS DOUBLE) AS x FROM embeddings),
-      nrm AS (SELECT vec_id, sum(x * x) AS n2 FROM el GROUP BY 1),
-      cent AS (SELECT vec_id AS cid, i, x FROM el
-        WHERE vec_id % 3 = 0
-          AND vec_id % (SELECT md FROM prm) = 1 % (SELECT md FROM prm)),
-      cn AS (SELECT vec_id AS cid, n2 AS cn2 FROM nrm
-        WHERE vec_id % 3 = 0
-          AND vec_id % (SELECT md FROM prm) = 1 % (SELECT md FROM prm)),
-      cdot AS (SELECT el.vec_id AS vid, cent.cid, sum(el.x * cent.x) AS dp
-        FROM el JOIN cent ON el.i = cent.i GROUP BY 1, 2),
-      sims AS (SELECT vid, cid, round(dp / sqrt(n.n2 * cn2), 6) AS cs
-        FROM cdot JOIN nrm n ON vid = n.vec_id JOIN cn USING (cid)),
-      assign AS MATERIALIZED (SELECT vid, cid AS cell FROM (
-          SELECT vid, cid, row_number() OVER (PARTITION BY vid
-            ORDER BY cs DESC, cid) AS rn FROM sims) t WHERE rn = 1),
+    Some(s"""WITH ${Sql.ivfAssignCtes(train = "vec_id % 3 = 0")},
       refh AS MATERIALIZED (SELECT cell, CAST(count(*) AS BIGINT) AS cr
         FROM assign WHERE vid % 3 = 0 GROUP BY 1),
       w1h AS (SELECT cell, CAST(count(*) AS BIGINT) AS cc

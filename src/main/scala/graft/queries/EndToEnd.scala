@@ -10,7 +10,7 @@ import graft.query.Pico.PicoTerm
 import graft.stream.TableStore
 import graft.Tables
 import graft.functions.Portable.tokens
-import Sql.quote
+import Sql.{h32, quote}
 
 /** q62: the COMPOSED end-to-end nightly pipeline, one flow over STORED
   * tables (SURVEY §7.3; reference: pubmed.py main update path):
@@ -228,7 +228,6 @@ ${arts.mkString("\n")}
       val delRows = deletions.toSeq.sortBy(_._1)
         .flatMap { case (f, ps) => ps.map(p => s"($f, ${quote(p)})") }
         .mkString(", ")
-      def h32(x: String) = s"CAST('0x' || substr(md5($x), 1, 8) AS BIGINT)"
       val inList = expansion.map(quote).mkString(", ")
       s"""WITH src(f, pmid, status, im, ti, year) AS (VALUES $srcRows),
         dels(f, pmid) AS (VALUES $delRows),

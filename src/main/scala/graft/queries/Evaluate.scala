@@ -1934,23 +1934,7 @@ object Evaluate {
           col("n").cast("long").as("cell_n"), col("flag"))
         .orderBy("vec_id")
     },
-    Some("""WITH prm AS (SELECT greatest(1, CAST(count(*) AS BIGINT) //
-          least(4096, greatest(16, CAST(floor(sqrt(count(*))) AS BIGINT)))) AS md
-        FROM embeddings),
-      el AS (SELECT vec_id, generate_subscripts(embedding, 1) AS i,
-          CAST(unnest(embedding) AS DOUBLE) AS x FROM embeddings),
-      nrm AS (SELECT vec_id, sum(x * x) AS n2 FROM el GROUP BY 1),
-      cent AS (SELECT vec_id AS cid, i, x FROM el
-               WHERE vec_id % (SELECT md FROM prm) = 1),
-      cn AS (SELECT vec_id AS cid, n2 AS cn2 FROM nrm
-             WHERE vec_id % (SELECT md FROM prm) = 1),
-      cdot AS (SELECT el.vec_id AS vid, cent.cid, sum(el.x * cent.x) AS dp
-        FROM el JOIN cent ON el.i = cent.i GROUP BY 1, 2),
-      sims AS (SELECT vid, cid, round(dp / sqrt(n.n2 * cn2), 6) AS cs
-        FROM cdot JOIN nrm n ON vid = n.vec_id JOIN cn USING (cid)),
-      assign AS (SELECT vid, cid AS cell, cs FROM (
-          SELECT vid, cid, cs, row_number() OVER (PARTITION BY vid
-            ORDER BY cs DESC, cid) AS rn FROM sims) t WHERE rn = 1),
+    Some(s"""WITH ${Sql.ivfAssignCtes()},
       scored AS (SELECT vid AS vec_id, cell,
           CAST(round(cs * 1e6, 0) AS BIGINT) AS x FROM assign),
       st AS (SELECT cell, CAST(count(*) AS DECIMAL(38,0)) AS n,

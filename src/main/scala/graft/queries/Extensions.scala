@@ -28,23 +28,7 @@ object Extensions {
       Ivf.search(s, e, queryId = 0L,
         centroidMod = Ivf.adaptiveMod(e.count()), nprobe = 4, k = 10)
     },
-    Some("""WITH prm AS (SELECT greatest(1, CAST(count(*) AS BIGINT) //
-          least(4096, greatest(16, CAST(floor(sqrt(count(*))) AS BIGINT)))) AS md
-        FROM embeddings),
-      el AS (SELECT vec_id, generate_subscripts(embedding, 1) AS i,
-          CAST(unnest(embedding) AS DOUBLE) AS x FROM embeddings),
-      nrm AS (SELECT vec_id, sum(x * x) AS n2 FROM el GROUP BY 1),
-      cent AS (SELECT vec_id AS cid, i, x FROM el
-               WHERE vec_id % (SELECT md FROM prm) = 1),
-      cn AS (SELECT vec_id AS cid, n2 AS cn2 FROM nrm
-             WHERE vec_id % (SELECT md FROM prm) = 1),
-      cdot AS (SELECT el.vec_id AS vid, cent.cid, sum(el.x * cent.x) AS dp
-               FROM el JOIN cent ON el.i = cent.i GROUP BY 1, 2),
-      sims AS (SELECT vid, cid, round(dp / sqrt(n.n2 * cn2), 6) AS cs
-               FROM cdot JOIN nrm n ON vid = n.vec_id JOIN cn USING (cid)),
-      assign AS (SELECT vid, cid AS cell FROM (
-          SELECT vid, cid, row_number() OVER (PARTITION BY vid ORDER BY cs DESC, cid) AS rn
-          FROM sims) t WHERE rn = 1),
+    Some(s"""WITH ${Sql.ivfAssignCtes()},
       qprobe AS (SELECT cid AS cell FROM (
           SELECT cid, row_number() OVER (ORDER BY cs DESC, cid) AS rn
           FROM sims WHERE vid = 0) t WHERE rn <= 4),
@@ -276,23 +260,7 @@ object Extensions {
           coalesce(col("removed_id_sum"), lit(0L)).as("removed_id_sum"))
         .orderBy("cell")
     },
-    Some("""WITH prm AS (SELECT greatest(1, CAST(count(*) AS BIGINT) //
-          least(4096, greatest(16, CAST(floor(sqrt(count(*))) AS BIGINT)))) AS md
-        FROM embeddings),
-      el AS (SELECT vec_id, generate_subscripts(embedding, 1) AS i,
-          CAST(unnest(embedding) AS DOUBLE) AS x FROM embeddings),
-      nrm AS (SELECT vec_id, sum(x * x) AS n2 FROM el GROUP BY 1),
-      cent AS (SELECT vec_id AS cid, i, x FROM el
-               WHERE vec_id % (SELECT md FROM prm) = 1),
-      cn AS (SELECT vec_id AS cid, n2 AS cn2 FROM nrm
-             WHERE vec_id % (SELECT md FROM prm) = 1),
-      cdot AS (SELECT el.vec_id AS vid, cent.cid, sum(el.x * cent.x) AS dp
-               FROM el JOIN cent ON el.i = cent.i GROUP BY 1, 2),
-      sims AS (SELECT vid, cid, round(dp / sqrt(n.n2 * cn2), 6) AS cs
-               FROM cdot JOIN nrm n ON vid = n.vec_id JOIN cn USING (cid)),
-      assign AS (SELECT vid, cid AS cell FROM (
-          SELECT vid, cid, row_number() OVER (PARTITION BY vid ORDER BY cs DESC, cid) AS rn
-          FROM sims) t WHERE rn = 1),
+    Some(s"""WITH ${Sql.ivfAssignCtes()},
       m AS (SELECT a1.cell, a1.vid AS a_id, a2.vid AS b_id
             FROM assign a1 JOIN assign a2
             ON a1.cell = a2.cell AND a1.vid < a2.vid),
@@ -346,9 +314,7 @@ object Extensions {
       graft.search.Pq.search(e, queryId = 0L,
         centroidMod = graft.search.Ivf.adaptiveMod(e.count()), m = 8, k = 10)
     },
-    Some("""WITH prm AS (SELECT greatest(1, CAST(count(*) AS BIGINT) //
-          least(4096, greatest(16, CAST(floor(sqrt(count(*))) AS BIGINT)))) AS md
-        FROM embeddings),
+    Some(s"""WITH ${Sql.adaptiveModCte("embeddings")},
       el AS (SELECT vec_id,
           CAST(generate_subscripts(embedding, 1) - 1 AS INT) AS i,
           CAST(floor(CAST(unnest(embedding) AS DOUBLE) * 1e6) AS BIGINT) AS q
@@ -386,23 +352,7 @@ object Extensions {
         centroidMod = graft.search.Ivf.adaptiveMod(e.count()),
         nprobe = 4, m = 8, k = 10)
     },
-    Some("""WITH prm AS (SELECT greatest(1, CAST(count(*) AS BIGINT) //
-          least(4096, greatest(16, CAST(floor(sqrt(count(*))) AS BIGINT)))) AS md
-        FROM embeddings),
-      eld AS (SELECT vec_id, generate_subscripts(embedding, 1) AS i,
-          CAST(unnest(embedding) AS DOUBLE) AS x FROM embeddings),
-      nrm AS (SELECT vec_id, sum(x * x) AS n2 FROM eld GROUP BY 1),
-      cent AS (SELECT vec_id AS cid, i, x FROM eld
-               WHERE vec_id % (SELECT md FROM prm) = 1),
-      cn AS (SELECT vec_id AS cid, n2 AS cn2 FROM nrm
-             WHERE vec_id % (SELECT md FROM prm) = 1),
-      cdot AS (SELECT eld.vec_id AS vid, cent.cid, sum(eld.x * cent.x) AS dp
-               FROM eld JOIN cent ON eld.i = cent.i GROUP BY 1, 2),
-      sims AS (SELECT vid, cid, round(dp / sqrt(n.n2 * cn2), 6) AS cs
-               FROM cdot JOIN nrm n ON vid = n.vec_id JOIN cn USING (cid)),
-      assign AS (SELECT vid, cid AS cell FROM (
-          SELECT vid, cid, row_number() OVER (PARTITION BY vid ORDER BY cs DESC, cid) AS rn
-          FROM sims) t WHERE rn = 1),
+    Some(s"""WITH ${Sql.ivfAssignCtes()},
       qprobe AS (SELECT cid AS cell FROM (
           SELECT cid, row_number() OVER (ORDER BY cs DESC, cid) AS rn
           FROM sims WHERE vid = 0) t WHERE rn <= 4),
@@ -487,36 +437,15 @@ object Extensions {
           .write.mode("overwrite")
           .parquet(new java.io.File(outRoot, s"batch-$id").toString)
       }
-      val query = s.readStream.schema(queries.schema)
+      val queriesIn = s.readStream.schema(queries.schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(landing.toString)
-        .writeStream
-        .foreachBatch(step)
-        .option("checkpointLocation", s"$root/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
+      Scratch.drainEachBatch(queriesIn, s"$root/ckpt")(step)
       val parts = outRoot.listFiles().filter(_.isDirectory).map(_.toString)
       Scratch.sealAndClean(
         s.read.parquet(parts.toIndexedSeq: _*).orderBy("qid", "rank"), root)
     },
-    Some("""WITH prm AS (SELECT greatest(1, CAST(count(*) AS BIGINT) //
-          least(4096, greatest(16, CAST(floor(sqrt(count(*))) AS BIGINT)))) AS md
-        FROM embeddings),
-      el AS (SELECT vec_id, generate_subscripts(embedding, 1) AS i,
-          CAST(unnest(embedding) AS DOUBLE) AS x FROM embeddings),
-      nrm AS (SELECT vec_id, sum(x * x) AS n2 FROM el GROUP BY 1),
-      cent AS (SELECT vec_id AS cid, i, x FROM el
-               WHERE vec_id % (SELECT md FROM prm) = 1),
-      cn AS (SELECT vec_id AS cid, n2 AS cn2 FROM nrm
-             WHERE vec_id % (SELECT md FROM prm) = 1),
-      cdot AS (SELECT el.vec_id AS vid, cent.cid, sum(el.x * cent.x) AS dp
-               FROM el JOIN cent ON el.i = cent.i GROUP BY 1, 2),
-      sims AS (SELECT vid, cid, round(dp / sqrt(n.n2 * cn2), 6) AS cs
-               FROM cdot JOIN nrm n ON vid = n.vec_id JOIN cn USING (cid)),
-      assign AS (SELECT vid, cid AS cell FROM (
-          SELECT vid, cid, row_number() OVER (PARTITION BY vid
-            ORDER BY cs DESC, cid) AS rn FROM sims) t WHERE rn = 1),
+    Some(s"""WITH ${Sql.ivfAssignCtes()},
       qprobe AS (SELECT vid AS qid, cid AS cell FROM (
           SELECT vid, cid, row_number() OVER (PARTITION BY vid
             ORDER BY cs DESC, cid) AS rn

@@ -95,17 +95,12 @@ object Govern {
               explode(array_distinct(
                 graft.functions.Hash32.shingleHashes(col("text")))).as("h")),
             id, benchRoot, outRoot)
-      val query = s.readStream
+      val docsIn = s.readStream
         .schema(org.apache.spark.sql.types.StructType.fromDDL(
           "doc_id BIGINT, text STRING, kind STRING"))
         .option("maxFilesPerTrigger", "1")
         .parquet(landing.toString)
-        .writeStream
-        .foreachBatch(step)
-        .option("checkpointLocation", s"$root/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
+      Scratch.drainEachBatch(docsIn, s"$root/ckpt")(step)
       Scratch.sealAndClean(
         s.read.parquet(graft.stream.StreamNeardup.subdirs(outRoot): _*)
           .orderBy("doc_id"), root)

@@ -805,9 +805,7 @@ object Pipeline {
         .select(col("doc_id"), col("dim"), col("val"), col("cell"))
         .orderBy("doc_id", "dim")
     },
-    Some("""WITH prm AS (SELECT greatest(1, CAST(count(*) AS BIGINT) //
-          least(4096, greatest(16, CAST(floor(sqrt(count(*))) AS BIGINT)))) AS md
-        FROM documents),
+    Some(s"""WITH ${Sql.adaptiveModCte("documents")},
       docs AS (SELECT doc_id, md5(text) AS h FROM documents),
       dims AS (SELECT CAST(range AS INT) AS i FROM range(8)),
       vals AS (SELECT d.doc_id, dims.i,

@@ -1,6 +1,7 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.streaming.Trigger
 
 /** One verifiable engine capability.
   *
@@ -52,18 +53,65 @@ object Sql {
   def quote(s: String): String =
     if (s == null) "CAST(NULL AS VARCHAR)" else "'" + s.replace("'", "''") + "'"
 
-  /** DuckDB twin of [[graft.functions.Portable.h32]] over a lambda
-    * variable `w`.
+  /** DuckDB twin of [[graft.functions.Portable.h32]] over the SQL
+    * string expression `x`.
     */
-  private val h32w = "CAST('0x' || substr(md5(w), 1, 8) AS BIGINT)"
+  def h32(x: String): String = s"CAST('0x' || substr(md5($x), 1, 8) AS BIGINT)"
 
   /** DuckDB twin of [[graft.functions.Hash32.meshForCol]]: the MeSH
     * list for PICO field `k` (0 = population, 1 = interventions,
     * 2 = outcomes) over `documents.text`.
     */
   def meshSql(k: Int): String =
-    s"list_transform(list_filter(string_split(text, ' '), w -> $h32w % 3 = $k), " +
-      s"w -> struct_pack(cui := 'C' || CAST($h32w % 100 AS VARCHAR), cui_str := w))"
+    s"list_transform(list_filter(string_split(text, ' '), w -> ${h32("w")} % 3 = $k), " +
+      s"w -> struct_pack(cui := 'C' || CAST(${h32("w")} % 100 AS VARCHAR), cui_str := w))"
+
+  /** DuckDB twin of [[graft.search.Ivf.adaptiveMod]] as the CTE `prm`:
+    * the centroid sampling modulus `md` for the rows of `from` (a table
+    * name, optionally followed by its WHERE clause).
+    */
+  def adaptiveModCte(from: String): String =
+    s"""prm AS (SELECT greatest(1, CAST(count(*) AS BIGINT) //
+          least(4096, greatest(16, CAST(floor(sqrt(count(*))) AS BIGINT)))) AS md
+        FROM $from)"""
+
+  /** DuckDB twin of the cosine step of [[graft.search.Ivf.assignments]]
+    * over `embeddings`, as CTEs: `prm` ([[adaptiveModCte]]), `el`
+    * (vec_id, i, x: one row per element, as DOUBLE), `nrm` (vec_id,
+    * n2), `cent`/`cn` (the sampled centroids, `vec_id % md = 1 % md`
+    * as [[graft.search.Ivf.codebook]] samples them), `cdot` and `sims`
+    * (vid, cid, cs: every vector against every centroid, cosine
+    * rounded to 6 decimals). `train`, a predicate on `vec_id` or empty,
+    * restricts the rows the modulus is counted over and the centroids
+    * are sampled from; every vector is still scored.
+    */
+  def ivfSimsCtes(train: String = ""): String = {
+    val where = if (train.isEmpty) "" else s" WHERE $train"
+    val and = if (train.isEmpty) "" else s" AND $train"
+    s"""${adaptiveModCte("embeddings" + where)},
+      el AS (SELECT vec_id, generate_subscripts(embedding, 1) AS i,
+          CAST(unnest(embedding) AS DOUBLE) AS x FROM embeddings),
+      nrm AS (SELECT vec_id, sum(x * x) AS n2 FROM el GROUP BY 1),
+      cent AS (SELECT vec_id AS cid, i, x FROM el
+        WHERE vec_id % (SELECT md FROM prm) = 1 % (SELECT md FROM prm)$and),
+      cn AS (SELECT vec_id AS cid, n2 AS cn2 FROM nrm
+        WHERE vec_id % (SELECT md FROM prm) = 1 % (SELECT md FROM prm)$and),
+      cdot AS (SELECT el.vec_id AS vid, cent.cid, sum(el.x * cent.x) AS dp
+        FROM el JOIN cent ON el.i = cent.i GROUP BY 1, 2),
+      sims AS (SELECT vid, cid, round(dp / sqrt(n.n2 * cn2), 6) AS cs
+        FROM cdot JOIN nrm n ON vid = n.vec_id JOIN cn USING (cid))"""
+  }
+
+  /** DuckDB twin of [[graft.search.Ivf.adaptiveMod]] +
+    * [[graft.search.Ivf.assignments]]: [[ivfSimsCtes]] plus `assign`
+    * (vid, cell, cs), each vector's nearest centroid, ties to the
+    * smallest centroid id.
+    */
+  def ivfAssignCtes(train: String = ""): String =
+    s"""${ivfSimsCtes(train)},
+      assign AS MATERIALIZED (SELECT vid, cid AS cell, cs FROM (
+          SELECT vid, cid, cs, row_number() OVER (PARTITION BY vid
+            ORDER BY cs DESC, cid) AS rn FROM sims) t WHERE rn = 1)"""
 }
 
 /** Scratch-directory hygiene for queries that write their own tables:
@@ -101,6 +149,37 @@ object Scratch {
       require(dst.setLastModified(modTime), s"could not set mtime on $dst")
     rmTree(stage)
   }
+
+  /** Drain `ds` with `Trigger.AvailableNow` into the memory sink
+    * `name` and return the sink's table. A view of the same name from
+    * an earlier run in this session is dropped first (Spark 4.1's sink
+    * also replaces it on start), so the result holds this run's rows
+    * only. The rows live in driver memory, so the caller may delete
+    * `checkpoint` once this returns.
+    */
+  def drainToMemory(ds: Dataset[_], name: String, checkpoint: String,
+      outputMode: String = "append"): DataFrame = {
+    ds.sparkSession.catalog.dropTempView(name)
+    ds.writeStream.format("memory").queryName(name)
+      .option("checkpointLocation", checkpoint)
+      .outputMode(outputMode)
+      .trigger(Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
+    ds.sparkSession.table(name)
+  }
+
+  /** Drain `df` with `Trigger.AvailableNow`, handing each micro-batch
+    * and its id to `step`.
+    */
+  def drainEachBatch(df: DataFrame, checkpoint: String)(
+      step: (DataFrame, Long) => Unit): Unit =
+    df.writeStream
+      .option("checkpointLocation", checkpoint)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch(step)
+      .start()
+      .awaitTermination()
 
   /** Collect a SMALL result, delete the scratch dirs backing its plan,
     * and return the rows as an in-memory frame — the returned plan

@@ -539,21 +539,16 @@ object Training {
           xs.filter(pmod(col("doc_id"), lit(2)) === half).select("lang", "x"),
           landing.toString, s"${half}_x.parquet")
       }
-      s.catalog.dropTempView("q138_sld")
-      val query = s.readStream
+      val sketches = s.readStream
         .schema(org.apache.spark.sql.types.StructType.fromDDL(
           "lang STRING, x BIGINT"))
         .option("maxFilesPerTrigger", "1")
         .parquet(landing.toString)
         .groupBy("lang")
         .agg(graft.functions.LogDigest.sketch(S)(col("x")).as("sk"))
-        .writeStream.format("memory").queryName("q138_sld")
-        .option("checkpointLocation", s"$root/ckpt")
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
-      val out = digestQuantiles(s.table("q138_sld"), S)
+      val out = digestQuantiles(
+        Scratch.drainToMemory(sketches, "q138_sld", s"$root/ckpt",
+          outputMode = "complete"), S)
       Scratch.sealAndClean(out, root)
     },
     Some(logdigestQuantilesOracleSql))
@@ -711,17 +706,12 @@ object Training {
               batch.select(col("doc_id"),
                 graft.functions.Hash32.shingleHashes(col("text")).as("hs"))),
             id, bandsRoot, outRoot)
-      val query = s.readStream
+      val docsIn = s.readStream
         .schema(org.apache.spark.sql.types.StructType.fromDDL(
           "doc_id BIGINT, text STRING"))
         .option("maxFilesPerTrigger", "1")
         .parquet(landing.toString)
-        .writeStream
-        .foreachBatch(step)
-        .option("checkpointLocation", s"$root/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
+      Scratch.drainEachBatch(docsIn, s"$root/ckpt")(step)
       Scratch.sealAndClean(
         s.read.parquet(graft.stream.StreamNeardup.subdirs(outRoot): _*)
           .orderBy("doc_id"), root)

@@ -393,12 +393,7 @@ object Vectors {
         .withColumn("recall_e6", expr("(n_hit * 1000000) DIV n_true"))
         .orderBy("qid")
     },
-    Some("""WITH prm AS (SELECT greatest(1, CAST(count(*) AS BIGINT) //
-          least(4096, greatest(16, CAST(floor(sqrt(count(*))) AS BIGINT)))) AS md
-        FROM embeddings),
-      el AS (SELECT vec_id, generate_subscripts(embedding, 1) AS i,
-          CAST(unnest(embedding) AS DOUBLE) AS x FROM embeddings),
-      nrm AS (SELECT vec_id, sum(x * x) AS n2 FROM el GROUP BY 1),
+    Some(s"""WITH ${Sql.ivfAssignCtes()},
       q AS (SELECT vec_id AS qid FROM nrm WHERE vec_id % 50 = 0),
       qel AS (SELECT qq.qid, el.i, el.x FROM q qq
         JOIN el ON el.vec_id = qq.qid),
@@ -412,17 +407,6 @@ object Vectors {
       truth AS (SELECT qid, vid FROM (SELECT qid, vid,
           row_number() OVER (PARTITION BY qid
             ORDER BY cos_sim DESC, vid) AS rn FROM csq) t WHERE rn <= 10),
-      cent AS (SELECT vec_id AS cid, i, x FROM el
-               WHERE vec_id % (SELECT md FROM prm) = 1),
-      cn AS (SELECT vec_id AS cid, n2 AS cn2 FROM nrm
-             WHERE vec_id % (SELECT md FROM prm) = 1),
-      cdot AS (SELECT el.vec_id AS vid, cent.cid, sum(el.x * cent.x) AS dp
-        FROM el JOIN cent ON el.i = cent.i GROUP BY 1, 2),
-      sims AS (SELECT vid, cid, round(dp / sqrt(n.n2 * cn2), 6) AS cs
-        FROM cdot JOIN nrm n ON vid = n.vec_id JOIN cn USING (cid)),
-      assign AS (SELECT vid, cid AS cell FROM (
-          SELECT vid, cid, row_number() OVER (PARTITION BY vid
-            ORDER BY cs DESC, cid) AS rn FROM sims) t WHERE rn = 1),
       probes AS (SELECT vid AS qid, cid AS cell FROM (
           SELECT vid, cid, row_number() OVER (PARTITION BY vid
             ORDER BY cs DESC, cid) AS rn
@@ -541,23 +525,7 @@ object Vectors {
           (col("n_vecs") * col("n_cells") >= col("n_total") * 2).as("hot"))
         .orderBy("cell")
     },
-    Some("""WITH prm AS (SELECT greatest(1, CAST(count(*) AS BIGINT) //
-          least(4096, greatest(16, CAST(floor(sqrt(count(*))) AS BIGINT)))) AS md
-        FROM embeddings),
-      el AS (SELECT vec_id, generate_subscripts(embedding, 1) AS i,
-          CAST(unnest(embedding) AS DOUBLE) AS x FROM embeddings),
-      nrm AS (SELECT vec_id, sum(x * x) AS n2 FROM el GROUP BY 1),
-      cent AS (SELECT vec_id AS cid, i, x FROM el
-               WHERE vec_id % (SELECT md FROM prm) = 1),
-      cn AS (SELECT vec_id AS cid, n2 AS cn2 FROM nrm
-             WHERE vec_id % (SELECT md FROM prm) = 1),
-      cdot AS (SELECT el.vec_id AS vid, cent.cid, sum(el.x * cent.x) AS dp
-        FROM el JOIN cent ON el.i = cent.i GROUP BY 1, 2),
-      sims AS (SELECT vid, cid, round(dp / sqrt(n.n2 * cn2), 6) AS cs
-        FROM cdot JOIN nrm n ON vid = n.vec_id JOIN cn USING (cid)),
-      assign AS (SELECT vid, cid AS cell FROM (
-          SELECT vid, cid, row_number() OVER (PARTITION BY vid
-            ORDER BY cs DESC, cid) AS rn FROM sims) t WHERE rn = 1),
+    Some(s"""WITH ${Sql.ivfAssignCtes()},
       cells AS (SELECT cell, CAST(count(*) AS BIGINT) AS n_vecs
         FROM assign GROUP BY 1),
       tot AS (SELECT CAST(count(*) AS BIGINT) AS n_cells,
@@ -660,20 +628,7 @@ object Vectors {
         round(dsum6(col("sil")) / count(col("sil")), 6).as("mean_sil"))
         .orderBy("cell")
     },
-    Some("""WITH prm AS (SELECT greatest(1, CAST(count(*) AS BIGINT) //
-          least(4096, greatest(16, CAST(floor(sqrt(count(*))) AS BIGINT)))) AS md
-        FROM embeddings),
-      el AS (SELECT vec_id, generate_subscripts(embedding, 1) AS i,
-          CAST(unnest(embedding) AS DOUBLE) AS x FROM embeddings),
-      nrm AS (SELECT vec_id, sum(x * x) AS n2 FROM el GROUP BY 1),
-      cent AS (SELECT vec_id AS cid, i, x FROM el
-               WHERE vec_id % (SELECT md FROM prm) = 1),
-      cn AS (SELECT vec_id AS cid, n2 AS cn2 FROM nrm
-             WHERE vec_id % (SELECT md FROM prm) = 1),
-      cdot AS (SELECT el.vec_id AS vid, cent.cid, sum(el.x * cent.x) AS dp
-        FROM el JOIN cent ON el.i = cent.i GROUP BY 1, 2),
-      sims AS (SELECT vid, cid, round(dp / sqrt(n.n2 * cn2), 6) AS cs
-        FROM cdot JOIN nrm n ON vid = n.vec_id JOIN cn USING (cid)),
+    Some(s"""WITH ${Sql.ivfSimsCtes()},
       rk AS (SELECT vid, cid, cs, row_number() OVER (PARTITION BY vid
           ORDER BY cs DESC, cid) AS rn FROM sims),
       ab AS (SELECT vid,
@@ -748,23 +703,7 @@ object Vectors {
           round(col("mi") / sqrt(col("h_cell") * col("h_label")), 6)
             .as("nmi6"))
     },
-    Some("""WITH prm AS (SELECT greatest(1, CAST(count(*) AS BIGINT) //
-          least(4096, greatest(16, CAST(floor(sqrt(count(*))) AS BIGINT)))) AS md
-        FROM embeddings),
-      el AS (SELECT vec_id, generate_subscripts(embedding, 1) AS i,
-          CAST(unnest(embedding) AS DOUBLE) AS x FROM embeddings),
-      nrm AS (SELECT vec_id, sum(x * x) AS n2 FROM el GROUP BY 1),
-      cent AS (SELECT vec_id AS cid, i, x FROM el
-               WHERE vec_id % (SELECT md FROM prm) = 1),
-      cn AS (SELECT vec_id AS cid, n2 AS cn2 FROM nrm
-             WHERE vec_id % (SELECT md FROM prm) = 1),
-      cdot AS (SELECT el.vec_id AS vid, cent.cid, sum(el.x * cent.x) AS dp
-        FROM el JOIN cent ON el.i = cent.i GROUP BY 1, 2),
-      sims AS (SELECT vid, cid, round(dp / sqrt(n.n2 * cn2), 6) AS cs
-        FROM cdot JOIN nrm n ON vid = n.vec_id JOIN cn USING (cid)),
-      assign AS (SELECT vid, cid AS cell FROM (
-          SELECT vid, cid, row_number() OVER (PARTITION BY vid
-            ORDER BY cs DESC, cid) AS rn FROM sims) t WHERE rn = 1),
+    Some(s"""WITH ${Sql.ivfAssignCtes()},
       ct AS (SELECT a.cell, e.label, CAST(count(*) AS BIGINT) AS n_cl
         FROM assign a JOIN embeddings e ON a.vid = e.vec_id GROUP BY 1, 2),
       cm AS (SELECT cell, CAST(sum(n_cl) AS BIGINT) AS n_c,
@@ -858,23 +797,7 @@ object Vectors {
         .orderBy(col("cos_sim").desc, col("vec_id")).limit(10)
         .transform(df => Scratch.sealAndClean(df, root))
     },
-    Some("""WITH prm AS (SELECT greatest(1, CAST(count(*) AS BIGINT) //
-          least(4096, greatest(16, CAST(floor(sqrt(count(*))) AS BIGINT)))) AS md
-        FROM embeddings),
-      el AS (SELECT vec_id, generate_subscripts(embedding, 1) AS i,
-          CAST(unnest(embedding) AS DOUBLE) AS x FROM embeddings),
-      nrm AS (SELECT vec_id, sum(x * x) AS n2 FROM el GROUP BY 1),
-      cent AS (SELECT vec_id AS cid, i, x FROM el
-               WHERE vec_id % (SELECT md FROM prm) = 1),
-      cn AS (SELECT vec_id AS cid, n2 AS cn2 FROM nrm
-             WHERE vec_id % (SELECT md FROM prm) = 1),
-      cdot AS (SELECT el.vec_id AS vid, cent.cid, sum(el.x * cent.x) AS dp
-               FROM el JOIN cent ON el.i = cent.i GROUP BY 1, 2),
-      sims AS (SELECT vid, cid, round(dp / sqrt(n.n2 * cn2), 6) AS cs
-               FROM cdot JOIN nrm n ON vid = n.vec_id JOIN cn USING (cid)),
-      assign AS (SELECT vid, cid AS cell FROM (
-          SELECT vid, cid, row_number() OVER (PARTITION BY vid ORDER BY cs DESC, cid) AS rn
-          FROM sims) t WHERE rn = 1),
+    Some(s"""WITH ${Sql.ivfAssignCtes()},
       qprobe AS (SELECT cid AS cell FROM (
           SELECT cid, row_number() OVER (ORDER BY cs DESC, cid) AS rn
           FROM sims WHERE vid = 0) t WHERE rn <= 4),
@@ -1148,23 +1071,7 @@ object Vectors {
         .withColumn("drifted", col("shift_e6") > 100000L)
         .orderBy("cell")
     },
-    Some("""WITH prm AS (SELECT greatest(1, CAST(count(*) AS BIGINT) //
-          least(4096, greatest(16, CAST(floor(sqrt(count(*))) AS BIGINT)))) AS md
-        FROM embeddings WHERE vec_id % 10 < 8),
-      el AS (SELECT vec_id, generate_subscripts(embedding, 1) AS i,
-          CAST(unnest(embedding) AS DOUBLE) AS x FROM embeddings),
-      nrm AS (SELECT vec_id, sum(x * x) AS n2 FROM el GROUP BY 1),
-      cent AS (SELECT vec_id AS cid, i, x FROM el
-        WHERE vec_id % (SELECT md FROM prm) = 1 AND vec_id % 10 < 8),
-      cn AS (SELECT vec_id AS cid, n2 AS cn2 FROM nrm
-        WHERE vec_id % (SELECT md FROM prm) = 1 AND vec_id % 10 < 8),
-      cdot AS (SELECT el.vec_id AS vid, cent.cid, sum(el.x * cent.x) AS dp
-        FROM el JOIN cent ON el.i = cent.i GROUP BY 1, 2),
-      sims AS (SELECT vid, cid, round(dp / sqrt(n.n2 * cn2), 6) AS cs
-        FROM cdot JOIN nrm n ON vid = n.vec_id JOIN cn USING (cid)),
-      assign AS (SELECT vid, cid AS cell FROM (
-          SELECT vid, cid, row_number() OVER (PARTITION BY vid
-            ORDER BY cs DESC, cid) AS rn FROM sims) t WHERE rn = 1),
+    Some(s"""WITH ${Sql.ivfAssignCtes(train = "vec_id % 10 < 8")},
       pc AS (SELECT cell,
           CAST(sum(CASE WHEN vid % 10 < 8 THEN 1 ELSE 0 END) AS BIGINT)
             AS n_a,

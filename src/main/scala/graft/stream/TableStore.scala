@@ -12,6 +12,7 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.GraftShim
+import org.apache.spark.sql.types.MapType
 import graft.util.Dirs
 
 /** Keyed snapshot table with CDC MERGE semantics on plain parquet
@@ -636,6 +637,12 @@ object TableStore {
     * below every value, so a key whose `seq` is all null still keeps
     * one whole row (the tie rule picks it), not NULL columns.
     *
+    * Maps: Spark does not order maps, so a top-level map column enters
+    * the row as its entries sorted by key (`array_sort(map_entries)`)
+    * and leaves as `map_from_entries` of them. A schema without a map
+    * column builds the plain expression. A map nested in another type,
+    * or one whose entries do not order, still fails analysis.
+    *
     * One `max` over struct(seq, row) — a partial aggregation keeps at
     * most one row per key per map partition before the exchange, with
     * no window sort (round 17: aggregate before you shuffle). Returns
@@ -643,12 +650,17 @@ object TableStore {
     */
   def lastWins(upserts: DataFrame, keyCol: String): DataFrame = {
     val dataCols = upserts.columns.filterNot(_ == "seq")
+    val maps = upserts.schema.fields
+      .collect { case f if f.dataType.isInstanceOf[MapType] => f.name }.toSet
     val row = col("__w").getField("row")
     upserts
       .groupBy(col(keyCol))
-      .agg(max(struct(col("seq"), struct(dataCols.map(col): _*).as("row")))
-        .as("__w"))
+      .agg(max(struct(col("seq"), struct(dataCols.map(c =>
+          if (maps(c)) array_sort(map_entries(col(c))).as(c) else col(c)): _*)
+        .as("row"))).as("__w"))
       .select(dataCols.map(c =>
-        if (c == keyCol) col(keyCol) else row.getField(c).as(c)): _*)
+        if (c == keyCol) col(keyCol)
+        else if (maps(c)) map_from_entries(row.getField(c)).as(c)
+        else row.getField(c).as(c)): _*)
   }
 }

@@ -1,6 +1,7 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.sql.graftshim.GraftShim
 import scala.collection.mutable.ArrayBuffer
 
 /** Stage-level breakdown of a query run — which stages dominate the
@@ -53,9 +54,9 @@ object StageProfile {
       val t0 = System.nanoTime()
       q.fn(spark, sfDir).selectExpr("sum(xxhash64(struct(*)))").collect()
       val wall = (System.nanoTime() - t0) / 1e9
-      // listener events drain asynchronously (no public flush API —
-      // a short sleep suffices for a single local-mode job)
-      Thread.sleep(500)
+      // listener events arrive asynchronously: drain the bus before
+      // reading what the listener recorded
+      GraftShim.waitUntilEmpty(spark.sparkContext)
       val snap = stages.synchronized(stages.sortBy(-_.taskMs).toVector)
       val totalTask = snap.map(_.taskMs).sum.toDouble
       println(f"== $n  wall=$wall%.2fs  stages=${snap.length}  taskTime=${totalTask / 1000}%.1fs")

@@ -43,6 +43,14 @@ object GraftShim {
       .sessionState.functionRegistry
       .registerFunction(org.apache.spark.sql.catalyst.FunctionIdentifier(name), info, builder)
 
+  /** Block until every listener event posted so far has been
+    * delivered. Listener events arrive asynchronously, so code that
+    * reads what a listener recorded drains the bus first
+    * (`listenerBus` is `private[spark]`).
+    */
+  def waitUntilEmpty(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
+
   /** The Spark schema of one parquet file, read on the driver from its
     * footer — the rule Spark's schema-inference task runs
     * (`ParquetFileFormat.readSchemaFromFooter`): the schema Spark wrote

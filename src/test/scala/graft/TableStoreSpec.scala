@@ -3,10 +3,10 @@ package graft
 import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.{Gen, Prop, Test => SCTest}
-import org.apache.spark.graftspec.Bus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.GraftShim
 import org.apache.spark.sql.types.MetadataBuilder
 import graft.stream.TableStore
 
@@ -55,6 +55,24 @@ class TableStoreSpec extends AnyFunSuite {
     }
     assert(picks.head === Map("a" -> "z", "b" -> "q"))
     assert(picks.last === picks.head)
+    // a map column ties by its entries sorted by key: [(a,2),(b,1)]
+    // loses to [(a,3)], and the empty map loses to any entry
+    val mapRows = Seq(("a", Map("b" -> 1L, "a" -> 2L), 7L), ("a", Map("a" -> 3L), 7L),
+      ("b", Map.empty[String, Long], 2L), ("b", Map("x" -> 0L), 2L))
+    val mapPicks = Seq(1, 8).map { n =>
+      val s = freshStore()
+      s.merge("t", mapRows.toDF("k", "m", "seq").repartition(n), dels(), "f0")
+      s.snapshot("t").get.collect().map(r => r.getString(0) -> r.getMap[String, Long](1)).toMap
+    }
+    assert(mapPicks.head === Map("a" -> Map("a" -> 3L), "b" -> Map("x" -> 0L)))
+    assert(mapPicks.last === mapPicks.head)
+  }
+
+  test("a map nested in another type still fails the merge") {
+    val nested = Seq(("a", 1L)).toDF("k", "seq")
+      .select(col("k"), struct(map(lit("x"), col("seq")).as("m")).as("s"), col("seq"))
+    val e = intercept[AnalysisException](freshStore().merge("t", nested, dels(), "f0"))
+    assert(e.getCondition === "DATATYPE_MISMATCH.INVALID_ORDERING_TYPE")
   }
 
   test("all-null seq keeps a whole row; a non-null seq beats null") {
@@ -220,12 +238,12 @@ class TableStoreSpec extends AnyFunSuite {
         if (e.properties != null &&
             e.properties.getProperty("spark.jobGroup.id") == group) jobs.incrementAndGet()
     }
-    Bus.drain(sc)
+    GraftShim.waitUntilEmpty(sc)
     sc.addSparkListener(listener)
     sc.setJobGroup(group, "snapshot reads")
     try {
       val frames = Seq(s.snapshot("t").get, s.snapshotAt("t", 1).get)
-      Bus.drain(sc)
+      GraftShim.waitUntilEmpty(sc)
       assert(jobs.get === 0, "building a snapshot frame started a Spark job")
       assert(frames.map(_.columns.toSeq) === Seq(Seq("k", "v"), Seq("k", "v")))
     } finally {
@@ -239,8 +257,6 @@ class TableStoreSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("ts-spec-").toString
     val s = new TableStore(spark, root, "k")
     val tagged = new MetadataBuilder().putString("comment", "trial key").build()
-    // no map column: last-wins takes a max over the row, and Spark does
-    // not order maps, so a map column cannot be merged
     def batch(ids: Range) = ids.map(_.toLong).toDF("id").select(
       concat(lit("k"), col("id")).as("k", tagged),
       struct(col("id").as("n"),
@@ -249,6 +265,7 @@ class TableStoreSpec extends AnyFunSuite {
       (col("id") / 7).cast("decimal(12,4)").as("dec"),
       timestamp_seconds(col("id") * 86400).as("ts"),
       lit(null).cast("string").as("nothing"),
+      map(lit("n"), col("id"), lit("half"), (col("id") / 2).cast("bigint")).as("counts"),
       col("id").as("seq"))
     // the store's frame against Spark's inference over the same dir:
     // StructField equality covers nested types, nullability and field
