@@ -46,7 +46,7 @@ for mult in 2 4; do
   fi
   rm -rf "/tmp/vs_sweep_w${mult}"
   SPARK_DRIVER_MEM=32g \
-    sbt -batch "runMain graft.tools.VerifySome $fx /tmp/vs_sweep_w${mult} q25_neardup_cosine q267_lsh_recall q152_simhash_hamming q214_media_phash_dedup" \
+    sbt -batch "runMain graft.Verify $fx /tmp/vs_sweep_w${mult} q25_neardup_cosine q267_lsh_recall q152_simhash_hamming q214_media_phash_dedup" \
     > /dev/null 2>&1
   rec="${prefix}_sf${mult}x_verify.txt"
   : > "$rec"
@@ -98,7 +98,7 @@ if [ ! -d "$fx8" ]; then
 fi
 rm -rf /tmp/vs_sweep_w8
 SPARK_DRIVER_MEM=32g \
-  sbt -batch "runMain graft.tools.VerifySome $fx8 /tmp/vs_sweep_w8 q267_lsh_recall" \
+  sbt -batch "runMain graft.Verify $fx8 /tmp/vs_sweep_w8 q267_lsh_recall" \
   > /dev/null 2>&1
 { echo "NOTE: 8x probe compares q267 only, SAMPLE-SCOPED (full-corpus census"
   echo "engine-pinned by LshRecallSpec; the full 8x oracle measured >65 GiB"

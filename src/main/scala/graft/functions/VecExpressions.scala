@@ -562,8 +562,21 @@ object IvfOps {
     else scala.math.BigDecimal(x)
       .setScale(6, scala.math.BigDecimal.RoundingMode.HALF_UP).toDouble
 
-  def nearest(v: ArrayData, cb: IvfCodebook): java.lang.Long = {
-    if (cb.cids.isEmpty) return null
+  /** One vector's ranking: the best cid, the best two cosines. */
+  private final class Ranked(var cid1: Long) {
+    var has1 = false; var cs1 = 0.0
+    var has2 = false; var cs2 = 0.0
+  }
+
+  /** The one per-centroid ranking loop behind [[nearest]] and [[top2]]
+    * (`cb` non-empty): candidates scan cid-ascending, each scored by
+    * its rounded cosine and promoted on a strict `>` under
+    * `Double.compare`, so equal cosines keep the smaller cid at each
+    * rank. The ranking starts at the smallest cid with no cosine, the
+    * all-null fallback. Allocates nothing per centroid.
+    */
+  private def rank(v: ArrayData, cb: IvfCodebook): Ranked = {
+    val r = new Ranked(cb.cids(0))
     val n = v.numElements()
     var vOk = true
     var i = 0
@@ -573,9 +586,6 @@ object IvfOps {
       i = 0
       while (i < n) { val x = v.getDouble(i); nv += x * x; i += 1 }
     }
-    var hasBest = false
-    var bestCs = 0.0
-    var bestCid = cb.cids(0)
     var c = 0
     while (c < cb.cids.length) {
       if (vOk && nv != 0.0 && cb.valid(c) && cb.norms(c) != 0.0 &&
@@ -585,14 +595,20 @@ object IvfOps {
         i = 0
         while (i < n) { d += v.getDouble(i) * cv(i); i += 1 }
         val cs = round6(d / math.sqrt(nv * cb.norms(c)))
-        if (!hasBest || java.lang.Double.compare(cs, bestCs) > 0) {
-          hasBest = true; bestCs = cs; bestCid = cb.cids(c)
+        if (!r.has1 || java.lang.Double.compare(cs, r.cs1) > 0) {
+          if (r.has1) { r.has2 = true; r.cs2 = r.cs1 }
+          r.has1 = true; r.cs1 = cs; r.cid1 = cb.cids(c)
+        } else if (!r.has2 || java.lang.Double.compare(cs, r.cs2) > 0) {
+          r.has2 = true; r.cs2 = cs
         }
       }
       c += 1
     }
-    bestCid
+    r
   }
+
+  def nearest(v: ArrayData, cb: IvfCodebook): java.lang.Long =
+    if (cb.cids.isEmpty) null else rank(v, cb).cid1
 
   def nearestCol(v: Column, cb: IvfCodebook): Column =
     GraftShim.column(NearestCentroid(GraftShim.expression(v), cb))
@@ -604,47 +620,19 @@ object IvfOps {
     * (simplified silhouette: own-centroid vs nearest-other distance)
     * needs WITHOUT materializing the N×C similarity table that the
     * window formulation shuffles. Tie and degenerate-input rules are
-    * [[nearest]]'s: candidates scan cid-ascending with strict-`>`
-    * promotion (equal cosines keep the smaller cid at each rank);
-    * all-cosines-null falls back to the smallest cid with null
-    * similarities; an empty codebook yields a null struct.
+    * [[nearest]]'s (one loop, [[rank]]): all-cosines-null falls back
+    * to the smallest cid with null similarities; an empty codebook
+    * yields a null struct.
     */
-  def top2(v: ArrayData, cb: IvfCodebook): InternalRow = {
-    if (cb.cids.isEmpty) return null
-    val n = v.numElements()
-    var vOk = true
-    var i = 0
-    while (vOk && i < n) { if (v.isNullAt(i)) vOk = false; i += 1 }
-    var nv = 0.0
-    if (vOk) {
-      i = 0
-      while (i < n) { val x = v.getDouble(i); nv += x * x; i += 1 }
+  def top2(v: ArrayData, cb: IvfCodebook): InternalRow =
+    if (cb.cids.isEmpty) null
+    else {
+      val r = rank(v, cb)
+      new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
+        Array[Any](r.cid1,
+          if (r.has1) java.lang.Double.valueOf(r.cs1) else null,
+          if (r.has2) java.lang.Double.valueOf(r.cs2) else null))
     }
-    var has1 = false; var cs1 = 0.0; var cid1 = cb.cids(0)
-    var has2 = false; var cs2 = 0.0; var cid2 = 0L
-    var c = 0
-    while (c < cb.cids.length) {
-      if (vOk && nv != 0.0 && cb.valid(c) && cb.norms(c) != 0.0 &&
-          cb.vecs(c).length == n) {
-        val cv = cb.vecs(c)
-        var d = 0.0
-        i = 0
-        while (i < n) { d += v.getDouble(i) * cv(i); i += 1 }
-        val cs = round6(d / math.sqrt(nv * cb.norms(c)))
-        if (!has1 || java.lang.Double.compare(cs, cs1) > 0) {
-          if (has1) { has2 = true; cs2 = cs1; cid2 = cid1 }
-          has1 = true; cs1 = cs; cid1 = cb.cids(c)
-        } else if (!has2 || java.lang.Double.compare(cs, cs2) > 0) {
-          has2 = true; cs2 = cs; cid2 = cb.cids(c)
-        }
-      }
-      c += 1
-    }
-    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](cid1,
-        if (has1) java.lang.Double.valueOf(cs1) else null,
-        if (has2) java.lang.Double.valueOf(cs2) else null))
-  }
 
   def top2Col(v: Column, cb: IvfCodebook): Column =
     GraftShim.column(CentroidTop2(GraftShim.expression(v), cb))

@@ -111,7 +111,7 @@ object Analytics {
         .orderBy("source")
     },
     Some(s"""WITH ${Pipeline.shingleCte},
-      th AS (SELECT d.source, CAST('0x' || substr(md5(s.s), 1, 8) AS BIGINT) AS h
+      th AS (SELECT d.source, ${Sql.h32("s.s")} AS h
              FROM sh s JOIN documents d ON s.doc_id = d.doc_id),
       dh AS (SELECT DISTINCT source, h FROM th),
       r AS (SELECT source, h,
@@ -307,15 +307,15 @@ object Analytics {
           (col("est_cnt") - col("exact_cnt")).as("overcount"))
         .orderBy("w")
     },
-    Some("""WITH t AS (SELECT unnest(string_split(text, ' ')) AS w FROM documents),
-      tt AS (SELECT w, CAST('0x' || substr(md5(w), 1, 8) AS BIGINT) AS h1,
+    Some(s"""WITH t AS (SELECT unnest(string_split(text, ' ')) AS w FROM documents),
+      tt AS (SELECT w, ${Sql.h32("w")} AS h1,
                CAST('0x' || substr(md5(w), 9, 8) AS BIGINT) AS h2
              FROM t WHERE len(w) > 0),
       seeds(i) AS (VALUES (0), (1), (2), (3)),
       cms AS (SELECT i, (h1 + i * h2) % 16 AS b, count(*) AS c
               FROM tt CROSS JOIN seeds GROUP BY 1, 2),
       ex AS (SELECT w, count(*) AS exact_cnt,
-               CAST('0x' || substr(md5(w), 1, 8) AS BIGINT) AS h1,
+               ${Sql.h32("w")} AS h1,
                CAST('0x' || substr(md5(w), 9, 8) AS BIGINT) AS h2
              FROM tt GROUP BY 1),
       pb AS (SELECT e.w, e.exact_cnt, min(c.c) AS est_cnt
@@ -924,7 +924,7 @@ object Analytics {
           col("k.n_min").cast("long").as("n_min"), col("k.est").as("est"))
       docStats.join(tokStats, "part").orderBy("part")
     },
-    Some("""WITH p AS (SELECT doc_id % 4 AS part, n_chars, text
+    Some(s"""WITH p AS (SELECT doc_id % 4 AS part, n_chars, text
         FROM documents),
       lv AS (SELECT part FROM (SELECT DISTINCT part FROM p)
              UNION ALL SELECT -1),
@@ -933,7 +933,7 @@ object Analytics {
         FROM lv l JOIN p ON l.part = -1 OR l.part = p.part
         GROUP BY 1),
       th AS (SELECT DISTINCT l.part,
-          CAST('0x' || substr(md5(t.t), 1, 8) AS BIGINT) AS h
+          ${Sql.h32("t.t")} AS h
         FROM lv l JOIN (SELECT part, unnest(string_split(text, ' ')) AS t
           FROM p) t ON l.part = -1 OR l.part = t.part),
       r AS (SELECT part, h, row_number() OVER (PARTITION BY part ORDER BY h)

@@ -90,9 +90,8 @@ object Corpus {
           row_number().over(w).cast("long").as("pos"))
         .orderBy("shard", "pos")
     },
-    Some("""WITH h AS (SELECT doc_id,
-        CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':shuf'), 1, 8)
-          AS BIGINT) AS h
+    Some(s"""WITH h AS (SELECT doc_id,
+        ${Sql.h32("CAST(doc_id AS VARCHAR) || ':shuf'")} AS h
       FROM documents)
       SELECT doc_id, h % 8 AS shard,
         CAST(row_number() OVER (PARTITION BY h % 8 ORDER BY h, doc_id)
@@ -227,7 +226,7 @@ object Corpus {
     Some(s"""WITH t AS (SELECT source, unnest(string_split(text, ' ')) AS w
         FROM documents),
       h AS (SELECT source, w,
-          CAST('0x' || substr(md5(w), 1, 8) AS BIGINT) AS h FROM t),
+          ${Sql.h32("w")} AS h FROM t),
       r AS (SELECT source, h % 512 AS idx,
           CASE WHEN h // 512 = 0 THEN 24
                ELSE bit_count(((h // 512) & -(h // 512)) - 1) + 1 END AS rho
@@ -284,7 +283,7 @@ object Corpus {
     },
     Some(s"""WITH ${Pipeline.shingleCte},
       th AS (SELECT DISTINCT doc_id,
-          CAST('0x' || substr(md5(s), 1, 8) AS BIGINT) AS h FROM sh),
+          ${Sql.h32("s")} AS h FROM sh),
       cnt AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_shingles
         FROM th GROUP BY 1),
       bench AS (SELECT DISTINCT h FROM th WHERE doc_id % 97 = 0),
@@ -505,7 +504,7 @@ object Corpus {
     },
     Some(s"""WITH ${Pipeline.shingleCte},
       th AS (SELECT DISTINCT doc_id,
-          CAST('0x' || substr(md5(s), 1, 8) AS BIGINT) AS h FROM sh),
+          ${Sql.h32("s")} AS h FROM sh),
       pd AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_shingles
         FROM th GROUP BY 1),
       fo AS (SELECT h, min(doc_id) AS doc_id FROM th GROUP BY 1),
@@ -568,7 +567,7 @@ object Corpus {
     },
     Some(s"""WITH ${Pipeline.shingleCte},
       th AS (SELECT DISTINCT doc_id,
-          CAST('0x' || substr(md5(s), 1, 8) AS BIGINT) AS h FROM sh),
+          ${Sql.h32("s")} AS h FROM sh),
       params(i, a, b) AS (VALUES ${Pipeline.mhParamsSqlValues}),
       mh AS (SELECT doc_id, i, min((a * h + b) % 2147483647) AS mh
         FROM th CROSS JOIN params GROUP BY 1, 2),
@@ -691,8 +690,8 @@ object Corpus {
           sum(expr("((nt + ctx - 1) DIV ctx) * ctx - nt")).as("pad_tokens"))
         .orderBy("ctx")
     },
-    Some("""WITH d AS (SELECT doc_id,
-          CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT)
+    Some(s"""WITH d AS (SELECT doc_id,
+          ${Sql.h32("CAST(doc_id AS VARCHAR)")}
             % 8 AS shard,
           CAST(len(string_split(text, ' ')) AS BIGINT) AS nt
         FROM documents),
@@ -741,8 +740,8 @@ object Corpus {
           expr("(s * 1000000) DIV n").as("mean_e6"))
         .orderBy("shard")
     },
-    Some("""WITH d AS (SELECT
-          CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT)
+    Some(s"""WITH d AS (SELECT
+          ${Sql.h32("CAST(doc_id AS VARCHAR)")}
             % 8 AS shard,
           CAST(len(string_split(text, ' ')) AS BIGINT) AS nt
         FROM documents),
@@ -1178,7 +1177,7 @@ object Corpus {
     },
     Some(s"""WITH t AS MATERIALIZED (SELECT source,
           unnest(string_split(text, ' ')) AS w FROM documents),
-      h AS (SELECT source, CAST('0x' || substr(md5(w), 1, 8) AS BIGINT) AS h
+      h AS (SELECT source, ${Sql.h32("w")} AS h
         FROM t),
       r AS (SELECT source, h % 512 AS idx,
           CASE WHEN h // 512 = 0 THEN 24

@@ -90,13 +90,13 @@ object Coverage {
       Annotator.annotateNew(docs, done).toDF()
         .orderBy("doc_id")
     },
-    Some("""WITH todo AS (SELECT doc_id, md5(text) AS h,
+    Some(s"""WITH todo AS (SELECT doc_id, md5(text) AS h,
           string_split(text, ' ') AS ws FROM documents WHERE doc_id % 7 <> 0),
       ann AS (SELECT doc_id,
-          CAST('0x' || substr(md5(h || '_n'), 1, 8) AS BIGINT) % 2000000 AS raw_n,
-          CAST(CAST('0x' || substr(md5(h || '_p'), 1, 8) AS BIGINT) % 100 AS DOUBLE) / 100.0 AS prob_low_rob,
+          ${Sql.h32("h || '_n'")} % 2000000 AS raw_n,
+          CAST(${Sql.h32("h || '_p'")} % 100 AS DOUBLE) / 100.0 AS prob_low_rob,
           array_to_string(ws[1:least(4, len(ws))], ' ') AS punchline_text,
-          CAST('0x' || substr(md5(h || '_e'), 1, 8) AS BIGINT) % 3 AS e
+          ${Sql.h32("h || '_e'")} % 3 AS e
         FROM todo)
       SELECT doc_id,
         CASE WHEN raw_n > 1000000 THEN NULL ELSE raw_n END AS num_randomized,

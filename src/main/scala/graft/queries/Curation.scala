@@ -211,8 +211,7 @@ object Curation {
         .map { case (l, r) => s"('$l', $r)" }.mkString(", ")
       s"""WITH rates(lang, rate_permille) AS (VALUES $values),
       k AS (SELECT d.lang, r.rate_permille, d.doc_id,
-          CAST('0x' || substr(md5(CAST(d.doc_id AS VARCHAR) || ':sample1'), 1, 8)
-            AS BIGINT) % 1000 < r.rate_permille AS kept
+          ${Sql.h32("CAST(d.doc_id AS VARCHAR) || ':sample1'")} % 1000 < r.rate_permille AS kept
         FROM documents d JOIN rates r ON d.lang = r.lang)
       SELECT lang, CAST(max(rate_permille) AS BIGINT) AS rate_permille,
         count(*) AS n_total,
@@ -299,18 +298,12 @@ object Curation {
     */
   private val q86BloomDecontam = Q(
     "q86_bloom_decontam",
-    (s, d) => {
-      val docs = Tables.documents(s, d)
-        .filter(size(tokens(col("text"))) >= 4)
-        .select(col("doc_id"),
-          array_distinct(graft.functions.Hash32.shingleHashes(col("text"))).as("hs"))
+    (s, d) => Training.decontam(s, d) { bench =>
       // persisted across the two EAGER consumers (count for bloom
       // sizing, the bloom build) — uncached it re-ran the
       // scan+shingle+distinct pipeline per use; unpersisted below
       // before the lazy confirm-join broadcast
-      val benchSh = docs.filter(col("doc_id") % 97 === 0)
-        .select(explode(col("hs")).as("h")).distinct()
-        .persist()
+      val benchSh = bench.persist()
       val nBench = benchSh.count()
       val bf = benchSh.stat.bloomFilter("h", math.max(nBench, 1L), 0.01)
       // drop the cache once both eager consumers (count, bloom build)
@@ -318,13 +311,7 @@ object Curation {
       // slice once at execution rather than pinning it in a session
       // that 129 other queries share
       benchSh.unpersist(blocking = false)
-      docs.filter(col("doc_id") % 97 =!= 0)
-        .select(col("doc_id"), explode(col("hs")).as("h"))
-        .filter(graft.functions.Bloom.mightContainCol(col("h"), bf))
-        .join(broadcast(benchSh), "h")
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_shared_shingles"))
-        .orderBy("doc_id")
+      (benchSh, graft.functions.Bloom.mightContainCol(col("h"), bf))
     },
     Some(Training.decontamOracle),
     bench = true)
@@ -361,9 +348,8 @@ object Curation {
           col("pk").bitwiseAND(lit(2147483647L)).as("doc_id"))
         .orderBy("source", "rank")
     },
-    Some("""WITH h AS (SELECT source, doc_id,
-          CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':bk1'), 1, 8)
-            AS BIGINT) % 2147483648 AS h
+    Some(s"""WITH h AS (SELECT source, doc_id,
+          ${Sql.h32("CAST(doc_id AS VARCHAR) || ':bk1'")} % 2147483648 AS h
         FROM documents),
       r AS (SELECT source, doc_id,
           row_number() OVER (PARTITION BY source ORDER BY h, doc_id) AS rank
@@ -465,11 +451,11 @@ object Curation {
         .select(col("doc_id"), col("n_bigrams"), col("n_oov"), col("lp"))
         .orderBy("doc_id")
     },
-    Some("""WITH w AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
+    Some(s"""WITH w AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
       tok AS (SELECT doc_id, CAST(generate_subscripts(t, 1) AS INT) AS i,
               unnest(t) AS u FROM w),
       bg AS (SELECT a.doc_id,
-               CAST('0x' || substr(md5(a.u || ' ' || b.u), 1, 8) AS BIGINT) AS b
+               ${Sql.h32("a.u || ' ' || b.u")} AS b
              FROM tok a JOIN tok b ON a.doc_id = b.doc_id AND b.i = a.i + 1),
       model AS (SELECT b, count(*) AS cnt FROM bg GROUP BY 1
                 HAVING count(*) >= 3),
@@ -540,8 +526,7 @@ object Curation {
       cand AS (SELECT doc_id, score AS bm25 FROM scored
                ORDER BY score DESC, doc_id LIMIT 50),
       re AS (SELECT c.doc_id, c.bm25,
-               CAST(CAST('0x' || substr(md5(md5(dd.text) || ':q94'), 1, 8)
-                 AS BIGINT) % 100000 AS DOUBLE) / 100000.0 AS ce_score
+               CAST(${Sql.h32("md5(dd.text) || ':q94'")} % 100000 AS DOUBLE) / 100000.0 AS ce_score
              FROM cand c JOIN documents dd ON c.doc_id = dd.doc_id)
       SELECT doc_id, bm25, ce_score FROM re
       ORDER BY ce_score DESC, doc_id LIMIT 10"""))
@@ -578,13 +563,11 @@ object Curation {
         .withColumn("keep", col("weight_milli_sum") > 0L)
         .orderBy("doc_id")
     },
-    Some("""WITH ws AS (SELECT doc_id, unnest(string_split(text, ' ')) AS t,
+    Some(s"""WITH ws AS (SELECT doc_id, unnest(string_split(text, ' ')) AS t,
               len(string_split(text, ' ')) AS nt
             FROM documents),
       sc AS (SELECT doc_id, CAST(max(nt) AS BIGINT) AS n_tokens,
-               CAST(sum(CAST('0x' || substr(md5('w:' ||
-                     CAST(CAST('0x' || substr(md5(t), 1, 8) AS BIGINT) % 4096
-                       AS VARCHAR)), 1, 8) AS BIGINT) % 2001 - 1000) AS BIGINT)
+               CAST(sum(${Sql.tokenWeight("t")}) AS BIGINT)
                  AS weight_milli_sum
              FROM ws GROUP BY doc_id)
       SELECT doc_id, n_tokens, weight_milli_sum, weight_milli_sum > 0 AS keep
@@ -637,7 +620,7 @@ object Curation {
     },
     Some(s"""WITH ${Pipeline.shingleCte},
       th AS (SELECT DISTINCT doc_id,
-               CAST('0x' || substr(md5(s), 1, 8) AS BIGINT) AS h FROM sh),
+               ${Sql.h32("s")} AS h FROM sh),
       ns AS (SELECT doc_id, count(*) AS n_shingles FROM th GROUP BY 1),
       df AS (SELECT h FROM th GROUP BY h HAVING count(*) >= 2),
       dup AS (SELECT t.doc_id, count(*) AS n_dup
@@ -778,7 +761,7 @@ object Curation {
       cws AS (SELECT d.doc_id, unnest(string_split(d.text, ' ')) AS tok
           FROM documents d JOIN cand c ON d.doc_id = c.doc_id),
       th AS (SELECT DISTINCT doc_id,
-            CAST('0x' || substr(md5(tok), 1, 8) AS BIGINT) AS h FROM cws),
+            ${Sql.h32("tok")} AS h FROM cws),
       sz AS (SELECT doc_id, count(*) AS n FROM th GROUP BY 1),
       inter AS (SELECT x.doc_id AS a_id, y.doc_id AS b_id, count(*) AS ni
           FROM th x JOIN th y ON x.h = y.h AND x.doc_id <> y.doc_id
@@ -853,7 +836,7 @@ object Curation {
     },
     Some {
       def h(j: Int) =
-        s"CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':ws:$j'), 1, 8) AS BIGINT) % 2147483648"
+        s"${Sql.h32(s"CAST(doc_id AS VARCHAR) || ':ws:$j'")} % 2147483648"
       s"""WITH w AS (SELECT doc_id, lang, LEAST(1 + n_chars // 128, 4) AS wt
         FROM documents),
       k AS (SELECT doc_id, lang, wt,

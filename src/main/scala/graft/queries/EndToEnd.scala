@@ -390,13 +390,13 @@ ${arts.mkString("\n")}
         LEFT JOIN ms ON cl.cluster = ms.cluster
         WHERE cl.cluster IS NULL OR cl.doc_id = ms.keep_id),
       esh AS (SELECT DISTINCT
-          CAST('0x' || substr(md5(sx), 1, 8) AS BIGINT) AS hh
+          ${Sql.h32("sx")} AS hh
         FROM (SELECT unnest(list_transform(range(1, len(w) - 2),
             i -> concat_ws(' ', w[i], w[i+1], w[i+2], w[i+3]))) AS sx
           FROM (SELECT string_split(text, ' ') AS w FROM documents
             WHERE doc_id % 97 = 0))),
       dsh AS (SELECT DISTINCT doc_id,
-          CAST('0x' || substr(md5(sx), 1, 8) AS BIGINT) AS hh
+          ${Sql.h32("sx")} AS hh
         FROM (SELECT doc_id, unnest(list_transform(range(1, len(w) - 2),
             i -> concat_ws(' ', w[i], w[i+1], w[i+2], w[i+3]))) AS sx
           FROM (SELECT doc_id, string_split(text, ' ') AS w FROM s4))),
@@ -409,7 +409,7 @@ ${arts.mkString("\n")}
           AND round(CAST(length(replace(text, ' ', '')) AS DOUBLE) / nt, 6)
             <= 8.0),
       shd AS (SELECT
-          CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT)
+          ${Sql.h32("CAST(doc_id AS VARCHAR)")}
             % 8 AS shard, nt FROM s6),
       pk AS (SELECT CAST(sum((tot + 255) // 256) AS BIGINT) AS n
         FROM (SELECT shard, CAST(sum(nt) AS BIGINT) AS tot

@@ -296,8 +296,8 @@ object Evaluate {
             (col("n") * col("syy") - col("sy") * col("sy")).cast("double")), 6)
           .as("assort6"))
     },
-    Some("""WITH ue AS (SELECT user_id,
-          2000000000 + CAST('0x' || substr(md5(event_type), 1, 8) AS BIGINT)
+    Some(s"""WITH ue AS (SELECT user_id,
+          2000000000 + ${Sql.h32("event_type")}
             % 1000000000 AS tid
         FROM events GROUP BY user_id, event_type),
       edges AS (SELECT user_id AS src, tid AS dst FROM ue
@@ -541,7 +541,7 @@ object Evaluate {
         .orderBy("src_lo", "src_hi")
     },
     Some(s"""WITH ${Pipeline.shingleCte},
-      th AS (SELECT DISTINCT doc_id, CAST('0x' || substr(md5(s), 1, 8) AS BIGINT) AS h FROM sh),
+      th AS (SELECT DISTINCT doc_id, ${Sql.h32("s")} AS h FROM sh),
       params(i, a, b) AS (VALUES ${Pipeline.mhParamsSqlValues}),
       mh AS (SELECT doc_id, i, min((a * h + b) % 2147483647) AS mh
              FROM th CROSS JOIN params GROUP BY 1, 2),
@@ -662,8 +662,7 @@ object Evaluate {
     },
     Some(s"""WITH ${Curation.bm25ScoredCtes},
       rel AS (SELECT doc_id, score,
-          CAST('0x' || substr(md5('rel:' || CAST(doc_id AS VARCHAR)), 1, 8)
-            AS BIGINT) % 4 AS rel
+          ${Sql.h32("'rel:' || CAST(doc_id AS VARCHAR)")} % 4 AS rel
         FROM scored),
       top AS (SELECT rel, row_number() OVER (ORDER BY score DESC, doc_id)
             AS rank
@@ -712,13 +711,11 @@ object Evaluate {
           expr("(n_pos * 1000000) div n_docs").as("pos_e6"))
         .orderBy("bin")
     },
-    Some("""WITH ws AS (SELECT doc_id, lang,
+    Some(s"""WITH ws AS (SELECT doc_id, lang,
               unnest(string_split(text, ' ')) AS t
             FROM documents),
       sc AS (SELECT doc_id, max(lang) AS lang,
-               CAST(sum(CAST('0x' || substr(md5('w:' ||
-                     CAST(CAST('0x' || substr(md5(t), 1, 8) AS BIGINT) % 4096
-                       AS VARCHAR)), 1, 8) AS BIGINT) % 2001 - 1000) AS BIGINT)
+               CAST(sum(${Sql.tokenWeight("t")}) AS BIGINT)
                  AS margin
              FROM ws GROUP BY doc_id),
       b AS (SELECT CAST(floor(CAST(margin AS DOUBLE) / 5000.0) AS BIGINT) AS bin,
@@ -862,8 +859,7 @@ object Evaluate {
       s"""WITH base AS (SELECT doc_id, n_chars, b
           FROM documents CROSS JOIN (SELECT unnest(range(16)) AS b)),
       uw AS (SELECT b, n_chars,
-          CAST('0x' || substr(md5('boot:' || CAST(doc_id AS VARCHAR) || ':'
-            || CAST(b AS VARCHAR)), 1, 8) AS BIGINT) % 1000000 AS u
+          ${Sql.h32("'boot:' || CAST(doc_id AS VARCHAR) || ':' || CAST(b AS VARCHAR)")} % 1000000 AS u
         FROM base),
       ww AS (SELECT b, n_chars, $caseExpr AS w FROM uw)
       SELECT CAST(b AS INT) AS b, CAST(sum(w) AS BIGINT) AS n_eff,
@@ -909,13 +905,11 @@ object Evaluate {
           expr("(2 * tp * 1000000) div (2 * tp + fp + fn)").as("f1_e6"))
         .orderBy("thr")
     },
-    Some("""WITH ws AS (SELECT doc_id, lang,
+    Some(s"""WITH ws AS (SELECT doc_id, lang,
               unnest(string_split(text, ' ')) AS t
             FROM documents),
       sc AS (SELECT doc_id, max(lang) AS lang,
-               CAST(sum(CAST('0x' || substr(md5('w:' ||
-                     CAST(CAST('0x' || substr(md5(t), 1, 8) AS BIGINT) % 4096
-                       AS VARCHAR)), 1, 8) AS BIGINT) % 2001 - 1000) AS BIGINT)
+               CAST(sum(${Sql.tokenWeight("t")}) AS BIGINT)
                  AS margin
              FROM ws GROUP BY doc_id),
       lbl AS (SELECT margin,
@@ -1044,7 +1038,7 @@ object Evaluate {
         .orderBy("a_id", "b_id")
     },
     Some(s"""WITH ${Pipeline.shingleCte},
-      th AS (SELECT DISTINCT doc_id, CAST('0x' || substr(md5(s), 1, 8) AS BIGINT) AS h FROM sh),
+      th AS (SELECT DISTINCT doc_id, ${Sql.h32("s")} AS h FROM sh),
       params(i, a, b) AS (VALUES ${Pipeline.mhParamsSqlValues}),
       mh AS (SELECT doc_id, i, min((a * h + b) % 2147483647) AS mh
              FROM th CROSS JOIN params GROUP BY 1, 2),
@@ -1106,13 +1100,11 @@ object Evaluate {
           col("doc_id"))
         .orderBy("n_chars")
     },
-    Some("""WITH ws AS (SELECT doc_id, n_chars,
+    Some(s"""WITH ws AS (SELECT doc_id, n_chars,
               unnest(string_split(text, ' ')) AS t
             FROM documents),
       sc AS (SELECT doc_id, max(n_chars) AS x,
-               CAST(sum(CAST('0x' || substr(md5('w:' ||
-                     CAST(CAST('0x' || substr(md5(t), 1, 8) AS BIGINT) % 4096
-                       AS VARCHAR)), 1, 8) AS BIGINT) % 2001 - 1000) AS BIGINT)
+               CAST(sum(${Sql.tokenWeight("t")}) AS BIGINT)
                  AS y
              FROM ws GROUP BY doc_id),
       g AS (SELECT x, max(y) AS ymax FROM sc GROUP BY 1),
@@ -1329,13 +1321,11 @@ object Evaluate {
         .filter(col("gap") >= 500)
         .orderBy("source")
     },
-    Some("""WITH ws AS (SELECT doc_id, source,
+    Some(s"""WITH ws AS (SELECT doc_id, source,
               unnest(string_split(text, ' ')) AS t
             FROM documents),
       sc AS (SELECT doc_id, max(source) AS source,
-               CAST(sum(CAST('0x' || substr(md5('w:' ||
-                     CAST(CAST('0x' || substr(md5(t), 1, 8) AS BIGINT) % 4096
-                       AS VARCHAR)), 1, 8) AS BIGINT) % 2001 - 1000) AS BIGINT)
+               CAST(sum(${Sql.tokenWeight("t")}) AS BIGINT)
                  AS m
              FROM ws GROUP BY doc_id),
       ext AS (SELECT source, max(m) AS mhi, min(m) AS mlo
@@ -1531,9 +1521,9 @@ object Evaluate {
           expr("(n_colliding_tokens * 1000000) div n_tokens")
             .as("collision_rate_e6"))
     },
-    Some("""WITH v AS (SELECT DISTINCT unnest(string_split(text, ' ')) AS t
+    Some(s"""WITH v AS (SELECT DISTINCT unnest(string_split(text, ' ')) AS t
         FROM documents),
-      b AS (SELECT CAST('0x' || substr(md5(t), 1, 8) AS BIGINT) % 4096 AS bkt,
+      b AS (SELECT ${Sql.h32("t")} % 4096 AS bkt,
           CAST(count(*) AS BIGINT) AS load
         FROM v GROUP BY 1)
       SELECT CAST(sum(load) AS BIGINT) AS n_tokens,
@@ -1668,9 +1658,8 @@ object Evaluate {
             .as("snips_v6"))
         .orderBy("event_type")
     },
-    Some("""WITH ev AS (SELECT event_type,
-          100000 + CAST('0x' || substr(md5('prop:'
-            || CAST(user_id AS VARCHAR)), 1, 8) AS BIGINT) % 800000 AS p_e6,
+    Some(s"""WITH ev AS (SELECT event_type,
+          100000 + ${Sql.h32("'prop:' || CAST(user_id AS VARCHAR)")} % 800000 AS p_e6,
           CASE WHEN event_type = 'purchase'
             THEN CAST(floor(value * 1e6) AS BIGINT) ELSE 0 END AS r_v6
         FROM events),
@@ -1786,15 +1775,13 @@ object Evaluate {
       // (weight, shard) pairs — struct comparison is lexicographic in
       // both engines
       val mk = (n: Int) => (0 until n).map { sh =>
-        s"{'w': CAST('0x' || substr(md5('shard:$sh:' || CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT), 'sh': CAST($sh AS BIGINT)}"
+        s"{'w': ${Sql.h32(s"'shard:$sh:' || CAST(doc_id AS VARCHAR)")}, 'sh': CAST($sh AS BIGINT)}"
       }.mkString("[", ", ", "]")
       s"""WITH placed AS (SELECT doc_id,
           list_max(${mk(8)})['sh'] AS hrw8,
           list_max(${mk(9)})['sh'] AS hrw9,
-          CAST('0x' || substr(md5('mod:' || CAST(doc_id AS VARCHAR)), 1, 8)
-            AS BIGINT) % 8 AS mod8,
-          CAST('0x' || substr(md5('mod:' || CAST(doc_id AS VARCHAR)), 1, 8)
-            AS BIGINT) % 9 AS mod9
+          ${Sql.h32("'mod:' || CAST(doc_id AS VARCHAR)")} % 8 AS mod8,
+          ${Sql.h32("'mod:' || CAST(doc_id AS VARCHAR)")} % 9 AS mod9
         FROM documents)
       SELECT CAST(count(*) AS BIGINT) AS n_docs,
         CAST(sum(CASE WHEN hrw8 <> hrw9 THEN 1 ELSE 0 END) AS BIGINT)
@@ -1859,9 +1846,8 @@ object Evaluate {
         .groupBy("day").agg(count_distinct(col("user_id")).as("exact_distinct"))
       agg.join(exact, "day").orderBy("day")
     },
-    Some("""WITH ev AS (SELECT CAST(ts AS DATE) AS day,
-          CAST('0x' || substr(md5('u:' || CAST(user_id AS VARCHAR)), 1, 8)
-            AS BIGINT) AS h
+    Some(s"""WITH ev AS (SELECT CAST(ts AS DATE) AS day,
+          ${Sql.h32("'u:' || CAST(user_id AS VARCHAR)")} AS h
         FROM events),
       reg AS (SELECT day, h % 512 AS idx,
           max(CASE WHEN h // 512 = 0 THEN 24
@@ -2003,7 +1989,7 @@ object Evaluate {
       ws AS (SELECT doc_id, string_split(text, ' ') AS w FROM aug),
       sh AS (SELECT doc_id, unnest(list_transform(range(1, len(w) - 2),
           i -> concat_ws(' ', w[i], w[i+1], w[i+2], w[i+3]))) AS s FROM ws),
-      th AS (SELECT DISTINCT doc_id, CAST('0x' || substr(md5(s), 1, 8) AS BIGINT) AS h FROM sh),
+      th AS (SELECT DISTINCT doc_id, ${Sql.h32("s")} AS h FROM sh),
       params(i, a, b) AS (VALUES ${Pipeline.mhParamsSqlValues}),
       mh AS (SELECT doc_id, i, min((a * h + b) % 2147483647) AS mh
              FROM th CROSS JOIN params GROUP BY 1, 2),
@@ -2170,7 +2156,7 @@ object Evaluate {
         .orderBy("anchor_id", "pos_id", "neg_rank")
     },
     Some(s"""WITH ${Pipeline.shingleCte},
-      th AS (SELECT DISTINCT doc_id, CAST('0x' || substr(md5(s), 1, 8) AS BIGINT) AS h FROM sh),
+      th AS (SELECT DISTINCT doc_id, ${Sql.h32("s")} AS h FROM sh),
       params(i, a, b) AS (VALUES ${Pipeline.mhParamsSqlValues}),
       mh AS (SELECT doc_id, i, min((a * h + b) % 2147483647) AS mh
              FROM th CROSS JOIN params GROUP BY 1, 2),
@@ -2185,7 +2171,7 @@ object Evaluate {
           ) raw
         WHERE doc_id IN (SELECT doc_id FROM ws WHERE len(w) >= 4)),
       sth AS (SELECT DISTINCT doc_id,
-          CAST('0x' || substr(md5(w), 1, 8) AS BIGINT) AS h FROM tok),
+          ${Sql.h32("w")} AS h FROM tok),
       bits AS (SELECT doc_id, j,
           sum(CASE WHEN (h // CAST(pow(2, j) AS BIGINT)) % 2 = 1
             THEN 1 ELSE -1 END) AS sgn
@@ -2201,8 +2187,7 @@ object Evaluate {
       bkt AS (SELECT doc_id,
           simhash >> (32 - (SELECT nbits FROM prm)) AS bkt FROM shh),
       cand AS (SELECT p.anchor_id, p.pos_id, c.doc_id AS cand_id,
-          CAST('0x' || substr(md5('neg:' || CAST(p.anchor_id AS VARCHAR)
-            || ':' || CAST(c.doc_id AS VARCHAR)), 1, 8) AS BIGINT) AS hk
+          ${Sql.h32("'neg:' || CAST(p.anchor_id AS VARCHAR) || ':' || CAST(c.doc_id AS VARCHAR)")} AS hk
         FROM pairs p JOIN bkt a ON p.anchor_id = a.doc_id
         JOIN bkt c ON a.bkt = c.bkt
         WHERE c.doc_id <> p.anchor_id AND c.doc_id <> p.pos_id),
@@ -2252,13 +2237,11 @@ object Evaluate {
                 (col("ny") + col("nn")) * (col("yn") + col("nn"))))
               .cast("double"), 6).as("kappa6"))
     },
-    Some("""WITH ws AS (SELECT doc_id, n_chars,
+    Some(s"""WITH ws AS (SELECT doc_id, n_chars,
               unnest(string_split(text, ' ')) AS t
             FROM documents),
       sc AS (SELECT doc_id, max(n_chars) AS n_chars,
-               sum(CAST('0x' || substr(md5('w:' ||
-                     CAST(CAST('0x' || substr(md5(t), 1, 8) AS BIGINT) % 4096
-                       AS VARCHAR)), 1, 8) AS BIGINT) % 2001 - 1000) > 0 AS ka
+               sum(${Sql.tokenWeight("t")}) > 0 AS ka
              FROM ws GROUP BY doc_id),
       v AS (SELECT ka, n_chars >= 200 AS kb FROM sc),
       m AS (SELECT CAST(count(*) AS BIGINT) AS n,
@@ -2316,9 +2299,8 @@ object Evaluate {
           col("between_fold_var"))
         .orderBy("fold")
     },
-    Some("""WITH f AS (SELECT
-          CAST('0x' || substr(md5('cv:' || CAST(doc_id AS VARCHAR)), 1, 8)
-            AS BIGINT) % 5 AS fold, n_chars
+    Some(s"""WITH f AS (SELECT
+          ${Sql.h32("'cv:' || CAST(doc_id AS VARCHAR)")} % 5 AS fold, n_chars
         FROM documents),
       per AS (SELECT fold, CAST(count(*) AS BIGINT) AS n_docs,
           (CAST(sum(n_chars) AS BIGINT) * 1000000) // count(*) AS mean_e6

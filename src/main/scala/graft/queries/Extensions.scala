@@ -29,9 +29,7 @@ object Extensions {
         centroidMod = Ivf.adaptiveMod(e.count()), nprobe = 4, k = 10)
     },
     Some(s"""WITH ${Sql.ivfAssignCtes()},
-      qprobe AS (SELECT cid AS cell FROM (
-          SELECT cid, row_number() OVER (ORDER BY cs DESC, cid) AS rn
-          FROM sims WHERE vid = 0) t WHERE rn <= 4),
+      ${Sql.ivfProbeCte("vid = 0")},
       cand AS (SELECT vid FROM assign JOIN qprobe USING (cell) WHERE vid <> 0),
       qel AS (SELECT i, x FROM el WHERE vec_id = 0),
       qn AS (SELECT n2 AS qn2 FROM nrm WHERE vec_id = 0),
@@ -80,14 +78,14 @@ object Extensions {
       Multimodal.extractFeatures(Multimodal.binarize(Tables.documents(s, d)))
         .toDF()
         .orderBy("doc_id"),
-    Some("""WITH m AS (SELECT doc_id, md5(text) AS h FROM documents)
+    Some(s"""WITH m AS (SELECT doc_id, md5(text) AS h FROM documents)
       SELECT doc_id,
         CAST(64 + CAST('0x' || substr(h, 1, 4) AS BIGINT) % 1024 AS INT) AS width,
         CAST(64 + CAST('0x' || substr(h, 5, 4) AS BIGINT) % 1024 AS INT) AS height,
-        CAST(CAST('0x' || substr(md5(h || '_0'), 1, 8) AS BIGINT) % 1000 AS DOUBLE) / 1000.0 AS f0,
-        CAST(CAST('0x' || substr(md5(h || '_1'), 1, 8) AS BIGINT) % 1000 AS DOUBLE) / 1000.0 AS f1,
-        CAST(CAST('0x' || substr(md5(h || '_2'), 1, 8) AS BIGINT) % 1000 AS DOUBLE) / 1000.0 AS f2,
-        CAST(CAST('0x' || substr(md5(h || '_3'), 1, 8) AS BIGINT) % 1000 AS DOUBLE) / 1000.0 AS f3
+        CAST(${Sql.h32("h || '_0'")} % 1000 AS DOUBLE) / 1000.0 AS f0,
+        CAST(${Sql.h32("h || '_1'")} % 1000 AS DOUBLE) / 1000.0 AS f1,
+        CAST(${Sql.h32("h || '_2'")} % 1000 AS DOUBLE) / 1000.0 AS f2,
+        CAST(${Sql.h32("h || '_3'")} % 1000 AS DOUBLE) / 1000.0 AS f3
       FROM m ORDER BY doc_id"""))
 
   /** q74: the pure-SQL surface, end-to-end through the driver gate —
@@ -111,11 +109,11 @@ object Extensions {
         ORDER BY doc_id""")
     },
     Some(s"""WITH ${Pipeline.shingleCte},
-      hs AS (SELECT doc_id, CAST('0x' || substr(md5(s), 1, 8) AS BIGINT) AS h FROM sh),
+      hs AS (SELECT doc_id, ${Sql.h32("s")} AS h FROM sh),
       fp AS (SELECT doc_id, count(*) AS n_shingles, count(DISTINCT h) AS n_distinct
              FROM hs GROUP BY 1),
       tok AS (SELECT DISTINCT doc_id, unnest(string_split(text, ' ')) AS w FROM documents),
-      th AS (SELECT DISTINCT doc_id, CAST('0x' || substr(md5(w), 1, 8) AS BIGINT) AS h FROM tok),
+      th AS (SELECT DISTINCT doc_id, ${Sql.h32("w")} AS h FROM tok),
       bits AS (SELECT doc_id, j,
           sum(CASE WHEN (h // CAST(pow(2, j) AS BIGINT)) % 2 = 1 THEN 1 ELSE -1 END) AS sgn
         FROM th CROSS JOIN (SELECT unnest(range(0, 32)) AS j) js
@@ -170,7 +168,7 @@ object Extensions {
       tr AS (SELECT * FROM el
              WHERE vec_id % (SELECT smod FROM prm) = 0),
       c0 AS (SELECT vec_id AS cell, dim, q AS c FROM el
-             WHERE vec_id % (SELECT seedmod FROM prm) = 1),
+             WHERE vec_id % (SELECT seedmod FROM prm) = 1 % (SELECT seedmod FROM prm)),
       d1 AS (SELECT e.vec_id, c.cell, sum((e.q - c.c) * (e.q - c.c)) AS d2
              FROM tr e JOIN c0 c ON e.dim = c.dim GROUP BY 1, 2),
       a1 AS (SELECT vec_id, cell FROM (
@@ -321,7 +319,7 @@ object Extensions {
         FROM embeddings),
       es AS (SELECT vec_id, i // 8 AS m, i % 8 AS j, q FROM el),
       cent AS (SELECT vec_id AS cid, m, j, q AS c FROM es
-        WHERE vec_id % (SELECT md FROM prm) = 1),
+        WHERE vec_id % (SELECT md FROM prm) = 1 % (SELECT md FROM prm)),
       d2 AS (SELECT e.vec_id, c.m, c.cid, sum((e.q - c.c) * (e.q - c.c)) AS d2
              FROM es e JOIN cent c ON e.m = c.m AND e.j = c.j
              GROUP BY 1, 2, 3),
@@ -353,9 +351,7 @@ object Extensions {
         nprobe = 4, m = 8, k = 10)
     },
     Some(s"""WITH ${Sql.ivfAssignCtes()},
-      qprobe AS (SELECT cid AS cell FROM (
-          SELECT cid, row_number() OVER (ORDER BY cs DESC, cid) AS rn
-          FROM sims WHERE vid = 0) t WHERE rn <= 4),
+      ${Sql.ivfProbeCte("vid = 0")},
       cand AS (SELECT vid FROM assign JOIN qprobe USING (cell) WHERE vid <> 0),
       elq AS (SELECT vec_id,
           CAST(generate_subscripts(embedding, 1) - 1 AS INT) AS i,
@@ -363,7 +359,7 @@ object Extensions {
         FROM embeddings),
       es AS (SELECT vec_id, i // 8 AS m, i % 8 AS j, q FROM elq),
       centq AS (SELECT vec_id AS cid, m, j, q AS c FROM es
-                WHERE vec_id % (SELECT md FROM prm) = 1),
+                WHERE vec_id % (SELECT md FROM prm) = 1 % (SELECT md FROM prm)),
       d2 AS (SELECT e.vec_id, c.m, c.cid, sum((e.q - c.c) * (e.q - c.c)) AS d2
              FROM es e JOIN centq c ON e.m = c.m AND e.j = c.j
              GROUP BY 1, 2, 3),
@@ -404,8 +400,7 @@ object Extensions {
       val emb = Tables.embeddings(s, d)
       val mod = Ivf.adaptiveMod(emb.count())
       val vecs = emb.select(col("vec_id"), toDouble(col("embedding")).as("v"))
-      val cents = vecs.filter(col("vec_id") % mod === 1)
-        .select(col("vec_id").as("cid"), col("v").as("cv"))
+      val cents = Ivf.centroids(emb, mod)
       val queries = emb.filter(col("vec_id") % 50 === 0)
         .select(col("vec_id").as("qid"), col("embedding"))
       Seq(0, 1).foreach { b =>
@@ -416,13 +411,7 @@ object Extensions {
       val outRoot = new java.io.File(root, "results")
       val step: (org.apache.spark.sql.DataFrame, Long) => Unit = (batch, id) => {
         val q = batch.select(col("qid"), toDouble(col("embedding")).as("qv"))
-        val wProbe = org.apache.spark.sql.expressions.Window
-          .partitionBy("qid").orderBy(col("cs").desc, col("cid"))
-        val probes = q.crossJoin(broadcast(cents))
-          .select(col("qid"), col("cid"), cos6(col("qv"), col("cv")).as("cs"))
-          .withColumn("rn", row_number().over(wProbe))
-          .filter(col("rn") <= 4)
-          .select(col("qid"), col("cid").as("cell"))
+        val probes = Ivf.probes(cents, q, nprobe = 4)
         val wTop = org.apache.spark.sql.expressions.Window
           .partitionBy("qid").orderBy(col("cos_sim").desc, col("vec_id"))
         assigns.join(broadcast(probes), "cell")
@@ -446,10 +435,7 @@ object Extensions {
         s.read.parquet(parts.toIndexedSeq: _*).orderBy("qid", "rank"), root)
     },
     Some(s"""WITH ${Sql.ivfAssignCtes()},
-      qprobe AS (SELECT vid AS qid, cid AS cell FROM (
-          SELECT vid, cid, row_number() OVER (PARTITION BY vid
-            ORDER BY cs DESC, cid) AS rn
-          FROM sims WHERE vid % 50 = 0) t WHERE rn <= 4),
+      ${Sql.ivfProbeCte("vid % 50 = 0")},
       cand AS (SELECT p.qid, a.vid FROM assign a JOIN qprobe p USING (cell)
                WHERE a.vid <> p.qid),
       dp AS (SELECT c.qid, c.vid, sum(ev.x * eq.x) AS dp

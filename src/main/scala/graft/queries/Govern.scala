@@ -107,7 +107,7 @@ object Govern {
     },
     Some(s"""WITH ${Pipeline.shingleCte},
       th AS (SELECT DISTINCT doc_id,
-          CAST('0x' || substr(md5(s), 1, 8) AS BIGINT) AS h FROM sh),
+          ${Sql.h32("s")} AS h FROM sh),
       b1 AS (SELECT DISTINCT h FROM th WHERE doc_id % 4 = 0),
       b12 AS (SELECT DISTINCT h FROM th WHERE doc_id % 4 IN (0, 1)),
       d1 AS (SELECT t.doc_id,

@@ -69,7 +69,7 @@ object Pipeline {
           WHERE len(embedding) = 64
             AND len(list_filter(embedding, e -> e IS NULL)) = 0),
       w AS (SELECT p, i,
-          CASE WHEN CAST('0x' || substr(md5(CAST(p AS VARCHAR) || '_' || CAST(i AS VARCHAR)), 1, 8) AS BIGINT) % 2 = 1
+          CASE WHEN ${Sql.h32("CAST(p AS VARCHAR) || '_' || CAST(i AS VARCHAR)")} % 2 = 1
                THEN 1 ELSE -1 END AS w
           FROM range(0, 96) t(p), range(1, 65) u(i)
           WHERE p < 4 * (SELECT ppb FROM prm)),
@@ -215,7 +215,7 @@ object Pipeline {
   private[queries] def jaccardPairsOracle: String =
     s"""WITH $shingleCte,
       tok AS (SELECT DISTINCT s.doc_id, d.lang,
-          CAST('0x' || substr(md5(s.s), 1, 8) AS BIGINT) AS w
+          ${Sql.h32("s.s")} AS w
         FROM sh s JOIN documents d ON s.doc_id = d.doc_id),
       sizes AS (SELECT doc_id, count(*) AS sz FROM tok GROUP BY 1),
       pairs AS (
@@ -270,7 +270,7 @@ object Pipeline {
         .orderBy("a_id", "b_id")
     },
     Some(s"""WITH $shingleCte,
-      th AS (SELECT DISTINCT doc_id, CAST('0x' || substr(md5(s), 1, 8) AS BIGINT) AS h FROM sh),
+      th AS (SELECT DISTINCT doc_id, ${Sql.h32("s")} AS h FROM sh),
       params(i, a, b) AS (VALUES $mhParamsSqlValues),
       mh AS (SELECT doc_id, i, min((a * h + b) % 2147483647) AS mh
              FROM th CROSS JOIN params GROUP BY 1, 2),
@@ -296,7 +296,7 @@ object Pipeline {
           graft.functions.Hash32.simhashCol(col("text")).as("simhash"))
         .orderBy("doc_id"),
     Some(s"""WITH $tokCte,
-      th AS (SELECT DISTINCT doc_id, CAST('0x' || substr(md5(w), 1, 8) AS BIGINT) AS h FROM tok),
+      th AS (SELECT DISTINCT doc_id, ${Sql.h32("w")} AS h FROM tok),
       bits AS (SELECT doc_id, j,
           sum(CASE WHEN (h // CAST(pow(2, j) AS BIGINT)) % 2 = 1 THEN 1 ELSE -1 END) AS sgn
         FROM th CROSS JOIN (SELECT unnest(range(0, 32)) AS j) js
@@ -769,12 +769,12 @@ object Pipeline {
           array_max(col("hs")).as("fp_max"))
         .orderBy("doc_id")
     },
-    Some("""WITH sh AS (
+    Some(s"""WITH sh AS (
         SELECT doc_id, unnest(list_transform(range(1, len(string_split(text, ' ')) - 2),
           i -> concat_ws(' ', string_split(text, ' ')[i], string_split(text, ' ')[i+1],
                  string_split(text, ' ')[i+2], string_split(text, ' ')[i+3]))) AS sh
         FROM documents),
-      h AS (SELECT doc_id, CAST('0x' || substr(md5(sh), 1, 8) AS BIGINT) AS h FROM sh)
+      h AS (SELECT doc_id, ${Sql.h32("sh")} AS h FROM sh)
       SELECT doc_id, count(*) AS n_shingles, count(DISTINCT h) AS n_distinct,
         min(h) AS fp_min, max(h) AS fp_max
       FROM h GROUP BY 1 ORDER BY 1"""),
@@ -809,7 +809,7 @@ object Pipeline {
       docs AS (SELECT doc_id, md5(text) AS h FROM documents),
       dims AS (SELECT CAST(range AS INT) AS i FROM range(8)),
       vals AS (SELECT d.doc_id, dims.i,
-          CAST(CAST(CAST('0x' || substr(md5(d.h || '_' || CAST(dims.i AS VARCHAR)), 1, 8) AS BIGINT)
+          CAST(CAST(${Sql.h32("d.h || '_' || CAST(dims.i AS VARCHAR)")}
             % 2001 - 1000 AS DOUBLE) / 1000.0 AS REAL) AS fval
         FROM docs d CROSS JOIN dims),
       cents AS (SELECT doc_id AS cid, i, CAST(fval AS DOUBLE) AS cx
@@ -891,7 +891,7 @@ object Pipeline {
         .limit(20)
     },
     Some(s"""WITH ${Pipeline.shingleCte},
-      posts AS (SELECT doc_id, CAST('0x' || substr(md5(s), 1, 8) AS BIGINT) AS h,
+      posts AS (SELECT doc_id, ${Sql.h32("s")} AS h,
           count(*) AS tf FROM sh GROUP BY 1, 2),
       df AS (SELECT h, count(*) AS df FROM posts GROUP BY 1),
       kept AS (SELECT p.doc_id, p.h, p.tf, d.df FROM posts p JOIN df d ON p.h = d.h
@@ -979,7 +979,7 @@ object Pipeline {
       sh AS (SELECT doc_id, unnest(list_transform(range(1, len(w) - 2),
           i -> concat_ws(' ', w[i], w[i+1], w[i+2], w[i+3]))) AS s FROM ws),
       th AS MATERIALIZED (SELECT DISTINCT doc_id,
-          CAST('0x' || substr(md5(s), 1, 8) AS BIGINT) AS h FROM sh),
+          ${Sql.h32("s")} AS h FROM sh),
       params(i, a, b) AS (VALUES $mhParamsSqlValues),
       mh AS (SELECT doc_id, i, min((a * h + b) % 2147483647) AS mh
              FROM th CROSS JOIN params GROUP BY 1, 2),

@@ -58,6 +58,14 @@ object Sql {
     */
   def h32(x: String): String = s"CAST('0x' || substr(md5($x), 1, 8) AS BIGINT)"
 
+  /** DuckDB twin of one token's weight in
+    * [[graft.functions.Hash32.hashedMarginCol]] (the sum of these over a
+    * document's tokens): the weight in [-1000, 1000] of the SQL string
+    * expression `t`'s 4096-bucket.
+    */
+  def tokenWeight(t: String): String =
+    s"${h32(s"'w:' || CAST(${h32(t)} % 4096 AS VARCHAR)")} % 2001 - 1000"
+
   /** DuckDB twin of [[graft.functions.Hash32.meshForCol]]: the MeSH
     * list for PICO field `k` (0 = population, 1 = interventions,
     * 2 = outcomes) over `documents.text`.
@@ -112,6 +120,17 @@ object Sql {
       assign AS MATERIALIZED (SELECT vid, cid AS cell, cs FROM (
           SELECT vid, cid, cs, row_number() OVER (PARTITION BY vid
             ORDER BY cs DESC, cid) AS rn FROM sims) t WHERE rn = 1)"""
+
+  /** DuckDB twin of [[graft.search.Ivf.probes]] as the CTE `qprobe`
+    * (qid, cell) over [[ivfSimsCtes]]' `sims`: for each vector matching
+    * `queries` (a predicate on `vid`), its 4 probed cells — the 4
+    * centroids with the highest cosine, ties to the smallest cid.
+    */
+  def ivfProbeCte(queries: String): String =
+    s"""qprobe AS (SELECT vid AS qid, cid AS cell FROM (
+          SELECT vid, cid, row_number() OVER (PARTITION BY vid
+            ORDER BY cs DESC, cid) AS rn
+          FROM sims WHERE $queries) t WHERE rn <= 4)"""
 }
 
 /** Scratch-directory hygiene for queries that write their own tables:

@@ -20,9 +20,9 @@ object ScaleOps {
     * (distinct-token h32 sign-sum per bit, ties up).
     */
   private[queries] def simhashCte: String =
-    """tok AS (SELECT DISTINCT doc_id, w FROM (
+    s"""tok AS (SELECT DISTINCT doc_id, w FROM (
         SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents) raw),
-      th AS (SELECT DISTINCT doc_id, CAST('0x' || substr(md5(w), 1, 8) AS BIGINT) AS h FROM tok),
+      th AS (SELECT DISTINCT doc_id, ${Sql.h32("w")} AS h FROM tok),
       bits AS (SELECT doc_id, j,
           sum(CASE WHEN (h // CAST(pow(2, j) AS BIGINT)) % 2 = 1 THEN 1 ELSE -1 END) AS sgn
         FROM th CROSS JOIN (SELECT unnest(range(0, 32)) AS j) js
@@ -303,11 +303,11 @@ object ScaleOps {
           sum(col("delta")).cast("double").as("logw"))
         .orderBy("doc_id")
     },
-    Some("""WITH w AS (SELECT doc_id, lang, string_split(text, ' ') AS t FROM documents),
+    Some(s"""WITH w AS (SELECT doc_id, lang, string_split(text, ' ') AS t FROM documents),
       tok AS (SELECT doc_id, lang, CAST(generate_subscripts(t, 1) AS INT) AS i,
               unnest(t) AS u FROM w),
       bg AS (SELECT a.doc_id, a.lang,
-               CAST('0x' || substr(md5(a.u || ' ' || b.u), 1, 8) AS BIGINT) % 256 AS b
+               ${Sql.h32("a.u || ' ' || b.u")} % 256 AS b
              FROM tok a JOIN tok b ON a.doc_id = b.doc_id AND a.lang = b.lang
                AND b.i = a.i + 1),
       raw AS (SELECT b, count(*) AS cr FROM bg GROUP BY 1),
@@ -400,7 +400,7 @@ object ScaleOps {
             .cast("double").divide(lit(1000.0)).as("ffeat"))
         .orderBy("doc_id", "frame_idx")
     },
-    Some("""WITH m AS (SELECT doc_id, md5(text) AS hex FROM documents),
+    Some(s"""WITH m AS (SELECT doc_id, md5(text) AS hex FROM documents),
       hdr AS (SELECT doc_id, hex,
           64 + CAST('0x' || substr(hex, 1, 4) AS BIGINT) % 1024 AS w,
           64 + CAST('0x' || substr(hex, 5, 4) AS BIGINT) % 1024 AS h,
@@ -418,7 +418,7 @@ object ScaleOps {
         FROM rs)
       SELECT doc_id, out_w, out_h, pad_x, pad_y, frame_idx,
         frame_idx * 1000 // fps AS frame_t_ms,
-        CAST(CAST('0x' || substr(md5(hex || ':' || frame_idx), 1, 8) AS BIGINT) % 1000
+        CAST(${Sql.h32("hex || ':' || frame_idx")} % 1000
           AS DOUBLE) / 1000.0 AS ffeat
       FROM fr ORDER BY doc_id, frame_idx"""))
 
@@ -566,7 +566,7 @@ object ScaleOps {
         .filter(col("hamming") <= 3)
         .orderBy("a_id", "b_id")
     },
-    Some("""WITH shadows AS (SELECT doc_id + 10000000 AS doc_id,
+    Some(s"""WITH shadows AS (SELECT doc_id + 10000000 AS doc_id,
           'Z' || substr(text, 2) AS text
         FROM documents WHERE doc_id % 13 = 0 AND text IS NOT NULL),
       al AS (SELECT doc_id, text FROM documents WHERE text IS NOT NULL
@@ -575,8 +575,7 @@ object ScaleOps {
           greatest(length(text) // 60, 1) AS L,
           unnest(range(60)) AS i FROM al),
       sigs AS (SELECT doc_id,
-          CAST(sum((CAST('0x' || substr(md5(substr(text,
-              CAST(1 + i * L AS INT), CAST(L AS INT))), 1, 8) AS BIGINT) % 2)
+          CAST(sum((${Sql.h32("substr(text, CAST(1 + i * L AS INT), CAST(L AS INT))")} % 2)
             * (CAST(1 AS BIGINT) << CAST(i AS INT))) AS BIGINT) AS sig
         FROM bl GROUP BY 1),
       blocks AS (SELECT doc_id, j AS blk,
@@ -709,7 +708,7 @@ object ScaleOps {
           col("total_bytes"), col("peak_w"))
         .orderBy("doc_id", "w")
     },
-    Some("""WITH bin AS (SELECT doc_id, encode(text) AS content
+    Some(s"""WITH bin AS (SELECT doc_id, encode(text) AS content
         FROM documents),
       nw AS (SELECT doc_id, content,
           (octet_length(content) + 255) // 256 AS n_win FROM bin),
@@ -720,7 +719,7 @@ object ScaleOps {
         FROM ex),
       wins AS (SELECT doc_id, n_win, w,
           CAST(length(win_hex) // 2 AS BIGINT) AS win_len,
-          CAST('0x' || substr(md5(win_hex), 1, 8) AS BIGINT) % 1000
+          ${Sql.h32("win_hex")} % 1000
             AS feat_e3
         FROM sl),
       roll AS (SELECT doc_id, CAST(sum(win_len) AS BIGINT) AS total_bytes,
@@ -776,16 +775,14 @@ object ScaleOps {
           col("n_win"), col("peak_feat"), col("sum_feat"))
         .orderBy("doc_id", "seg_start")
     },
-    Some("""WITH bin AS (SELECT doc_id, encode(text) AS content
+    Some(s"""WITH bin AS (SELECT doc_id, encode(text) AS content
         FROM documents),
       nw AS (SELECT doc_id, content,
           (octet_length(content) + 255) // 256 AS n_win FROM bin),
       ex AS (SELECT doc_id, content,
           CAST(unnest(range(n_win)) AS BIGINT) AS w FROM nw),
       wins AS (SELECT doc_id, w,
-          CAST('0x' || substr(md5(
-            substr(hex(content), CAST(w * 512 + 1 AS INT), 512)), 1, 8)
-            AS BIGINT) % 1000 AS feat_e3
+          ${Sql.h32("substr(hex(content), CAST(w * 512 + 1 AS INT), 512)")} % 1000 AS feat_e3
         FROM ex),
       act AS (SELECT doc_id, w, feat_e3,
           w - row_number() OVER (PARTITION BY doc_id ORDER BY w) AS grp
@@ -838,7 +835,7 @@ object ScaleOps {
           sum(h32(col("sen"))).as("sig_sum"))
         .orderBy("doc_id", "chunk_id")
     },
-    Some("""WITH a AS (SELECT doc_id,
+    Some(s"""WITH a AS (SELECT doc_id,
           regexp_split_to_array(text, '[.!?]+') AS arr FROM documents),
       ex AS (SELECT doc_id, arr,
           CAST(unnest(range(1, len(arr) + 1)) AS BIGINT) AS i FROM a),
@@ -856,7 +853,7 @@ object ScaleOps {
         CAST(count(*) AS BIGINT) AS n_sentences,
         CAST(sum(n_tok) AS BIGINT) AS n_tokens,
         min(i) AS first_s, max(i) AS last_s,
-        CAST(sum(CAST('0x' || substr(md5(sen), 1, 8) AS BIGINT)) AS BIGINT)
+        CAST(sum(${Sql.h32("sen")}) AS BIGINT)
           AS sig_sum
       FROM c GROUP BY 1, 2 ORDER BY 1, 2"""),
     bench = true)

@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.Portable._
@@ -57,7 +58,7 @@ object Training {
     */
   private[queries] def clusterCtes: String =
     s"""${Pipeline.shingleCte},
-      th AS (SELECT DISTINCT doc_id, CAST('0x' || substr(md5(s), 1, 8) AS BIGINT) AS h FROM sh),
+      th AS (SELECT DISTINCT doc_id, ${Sql.h32("s")} AS h FROM sh),
       params(i, a, b) AS (VALUES ${Pipeline.mhParamsSqlValues}),
       mh AS (SELECT doc_id, i, min((a * h + b) % 2147483647) AS mh
              FROM th CROSS JOIN params GROUP BY 1, 2),
@@ -174,9 +175,9 @@ object Training {
         .agg(count(lit(1)).as("n_docs"), sum(col("nt")).as("n_tokens"))
         .orderBy("source", "split")
     },
-    Some("""SELECT source,
-        CASE WHEN CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT) % 100 < 80 THEN 'train'
-             WHEN CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT) % 100 < 90 THEN 'val'
+    Some(s"""SELECT source,
+        CASE WHEN ${Sql.h32("CAST(doc_id AS VARCHAR)")} % 100 < 80 THEN 'train'
+             WHEN ${Sql.h32("CAST(doc_id AS VARCHAR)")} % 100 < 90 THEN 'val'
              ELSE 'test' END AS split,
         count(*) AS n_docs,
         CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS n_tokens
@@ -211,8 +212,8 @@ object Training {
           ((col("cum") - lit(1L)) / lit(256L)).cast("long").as("seq_last"))
         .orderBy("doc_id")
     },
-    Some("""WITH d AS (SELECT doc_id,
-        CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT) % 8 AS shard,
+    Some(s"""WITH d AS (SELECT doc_id,
+        ${Sql.h32("CAST(doc_id AS VARCHAR)")} % 8 AS shard,
         CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens FROM documents),
       c AS (SELECT doc_id, shard, n_tokens,
         CAST(sum(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id
@@ -233,22 +234,33 @@ object Training {
     */
   private val q72Decontam = Q(
     "q72_decontam",
-    (s, d) => {
-      val docs = Tables.documents(s, d)
-        .filter(size(tokens(col("text"))) >= 4)
-        .select(col("doc_id"),
-          array_distinct(graft.functions.Hash32.shingleHashes(col("text"))).as("hs"))
-      val benchSh = docs.filter(col("doc_id") % 97 === 0)
-        .select(explode(col("hs")).as("h")).distinct()
-      docs.filter(col("doc_id") % 97 =!= 0)
-        .select(col("doc_id"), explode(col("hs")).as("h"))
-        .join(broadcast(benchSh), "h")
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_shared_shingles"))
-        .orderBy("doc_id")
-    },
+    (s, d) => decontam(s, d)(),
     Some(Training.decontamOracle),
     bench = true)
+
+  /** q72's core, shared by its bloom-prefiltered twin q86: per training
+    * doc (doc_id % 97 <> 0, at least 4 tokens), how many of its distinct
+    * 4-gram shingle hashes are in the 1/97 benchmark slice's shingle
+    * set, confirmed by a broadcast join. `prep` sees the benchmark set
+    * first and returns the set to join and a prefilter on the training
+    * shingles.
+    */
+  private[queries] def decontam(s: SparkSession, d: String)(
+      prep: DataFrame => (DataFrame, Column) = b => (b, lit(true))): DataFrame = {
+    val docs = Tables.documents(s, d)
+      .filter(size(tokens(col("text"))) >= 4)
+      .select(col("doc_id"),
+        array_distinct(graft.functions.Hash32.shingleHashes(col("text"))).as("hs"))
+    val (benchSh, keep) = prep(docs.filter(col("doc_id") % 97 === 0)
+      .select(explode(col("hs")).as("h")).distinct())
+    docs.filter(col("doc_id") % 97 =!= 0)
+      .select(col("doc_id"), explode(col("hs")).as("h"))
+      .filter(keep)
+      .join(broadcast(benchSh), "h")
+      .groupBy("doc_id")
+      .agg(count(lit(1)).as("n_shared_shingles"))
+      .orderBy("doc_id")
+  }
 
   /** Shared by q72 and its bloom-prefiltered twin q86 (the bloom is a
     * pure prefilter whose false positives are removed by the exact
@@ -256,7 +268,7 @@ object Training {
     */
   private[queries] def decontamOracle: String =
     s"""WITH ${Pipeline.shingleCte},
-      th AS (SELECT DISTINCT doc_id, CAST('0x' || substr(md5(s), 1, 8) AS BIGINT) AS h FROM sh),
+      th AS (SELECT DISTINCT doc_id, ${Sql.h32("s")} AS h FROM sh),
       bench AS (SELECT DISTINCT h FROM th WHERE doc_id % 97 = 0)
       SELECT t.doc_id, count(*) AS n_shared_shingles
       FROM th t JOIN bench b ON t.h = b.h
@@ -646,7 +658,7 @@ object Training {
         .orderBy("doc_id")
     },
     Some(s"""WITH ${Pipeline.shingleCte},
-      th AS (SELECT DISTINCT doc_id, CAST('0x' || substr(md5(s), 1, 8) AS BIGINT) AS h FROM sh),
+      th AS (SELECT DISTINCT doc_id, ${Sql.h32("s")} AS h FROM sh),
       params(i, a, b) AS (VALUES ${Pipeline.mhParamsSqlValues}),
       mh AS (SELECT doc_id, i, min((a * h + b) % 2147483647) AS mh
              FROM th CROSS JOIN params GROUP BY 1, 2),
@@ -717,7 +729,7 @@ object Training {
           .orderBy("doc_id"), root)
     },
     Some(s"""WITH ${Pipeline.shingleCte},
-      th AS (SELECT DISTINCT doc_id, CAST('0x' || substr(md5(s), 1, 8) AS BIGINT) AS h FROM sh),
+      th AS (SELECT DISTINCT doc_id, ${Sql.h32("s")} AS h FROM sh),
       params(i, a, b) AS (VALUES ${Pipeline.mhParamsSqlValues}),
       mh AS (SELECT doc_id, i, min((a * h + b) % 2147483647) AS mh
              FROM th CROSS JOIN params GROUP BY 1, 2),
@@ -883,7 +895,7 @@ object Training {
         .orderBy("split_lo", "split_hi")
     },
     Some(s"""WITH ${Pipeline.shingleCte},
-      th AS (SELECT DISTINCT doc_id, CAST('0x' || substr(md5(s), 1, 8) AS BIGINT) AS h FROM sh),
+      th AS (SELECT DISTINCT doc_id, ${Sql.h32("s")} AS h FROM sh),
       params(i, a, b) AS (VALUES ${Pipeline.mhParamsSqlValues}),
       mh AS (SELECT doc_id, i, min((a * h + b) % 2147483647) AS mh
              FROM th CROSS JOIN params GROUP BY 1, 2),
@@ -894,11 +906,11 @@ object Training {
              FROM bands n JOIN bands o
                ON n.band = o.band AND n.sig = o.sig AND n.doc_id < o.doc_id),
       sp AS (SELECT a_id, b_id,
-          CASE WHEN CAST('0x' || substr(md5(CAST(a_id AS VARCHAR)), 1, 8) AS BIGINT) % 100 < 80 THEN 'train'
-               WHEN CAST('0x' || substr(md5(CAST(a_id AS VARCHAR)), 1, 8) AS BIGINT) % 100 < 90 THEN 'val'
+          CASE WHEN ${Sql.h32("CAST(a_id AS VARCHAR)")} % 100 < 80 THEN 'train'
+               WHEN ${Sql.h32("CAST(a_id AS VARCHAR)")} % 100 < 90 THEN 'val'
                ELSE 'test' END AS sa,
-          CASE WHEN CAST('0x' || substr(md5(CAST(b_id AS VARCHAR)), 1, 8) AS BIGINT) % 100 < 80 THEN 'train'
-               WHEN CAST('0x' || substr(md5(CAST(b_id AS VARCHAR)), 1, 8) AS BIGINT) % 100 < 90 THEN 'val'
+          CASE WHEN ${Sql.h32("CAST(b_id AS VARCHAR)")} % 100 < 80 THEN 'train'
+               WHEN ${Sql.h32("CAST(b_id AS VARCHAR)")} % 100 < 90 THEN 'val'
                ELSE 'test' END AS sb
         FROM pr)
       SELECT LEAST(sa, sb) AS split_lo, GREATEST(sa, sb) AS split_hi,
@@ -967,7 +979,7 @@ object Training {
           FROM nodes n LEFT JOIN ct$r ON n.id = ct$r.id)"""
       }.mkString(",\n      ")
       s"""WITH ue AS (SELECT user_id,
-          2000000000 + CAST('0x' || substr(md5(event_type), 1, 8) AS BIGINT)
+          2000000000 + ${Sql.h32("event_type")}
             % 1000000000 AS tid,
           count(*) AS w
         FROM events GROUP BY 1, 2),
@@ -1023,14 +1035,14 @@ object Training {
           (col("max_run") >= 3L).as("contaminated"))
         .orderBy("doc_id")
     },
-    Some("""WITH ws AS (SELECT doc_id, string_split(text, ' ') AS w
+    Some(s"""WITH ws AS (SELECT doc_id, string_split(text, ' ') AS w
         FROM documents),
       pos AS (SELECT doc_id, CAST(unnest(range(1, len(w) - 2)) AS BIGINT)
           AS p, w FROM ws),
       sh AS (SELECT doc_id, p,
           concat_ws(' ', w[p], w[p+1], w[p+2], w[p+3]) AS s FROM pos),
       th AS (SELECT doc_id, p,
-          CAST('0x' || substr(md5(s), 1, 8) AS BIGINT) AS h FROM sh),
+          ${Sql.h32("s")} AS h FROM sh),
       bench AS (SELECT DISTINCT h FROM th WHERE doc_id % 97 = 0),
       hits AS (SELECT t.doc_id, t.p FROM th t JOIN bench b USING (h)
         WHERE t.doc_id % 97 <> 0),

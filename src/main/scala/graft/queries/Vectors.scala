@@ -75,13 +75,12 @@ object Vectors {
           col("col").as("proj"))
         .orderBy("vec_id", "out_dim")
     },
-    Some("""WITH el AS (SELECT vec_id,
+    Some(s"""WITH el AS (SELECT vec_id,
           CAST(generate_subscripts(embedding, 1) - 1 AS INT) AS i,
           CAST(floor(CAST(unnest(embedding) AS DOUBLE) * 1000000) AS BIGINT) AS qv
         FROM embeddings),
       sg AS (SELECT d.i, t.j,
-          CASE WHEN CAST('0x' || substr(md5('rp:' || CAST(d.i AS VARCHAR)
-              || ':' || CAST(t.j AS VARCHAR)), 1, 8) AS BIGINT) % 2 = 0
+          CASE WHEN ${Sql.h32("'rp:' || CAST(d.i AS VARCHAR) || ':' || CAST(t.j AS VARCHAR)")} % 2 = 0
             THEN 1 ELSE -1 END AS sgn
         FROM (SELECT DISTINCT i FROM el) d, range(16) t(j))
       SELECT e.vec_id, CAST(s.j AS INT) AS out_dim,
@@ -366,14 +365,7 @@ object Vectors {
         .withColumn("rn", row_number().over(wq)).filter(col("rn") <= 10)
         .select("qid", "vec_id")
       val md = Ivf.adaptiveMod(Tables.embeddings(s, d).count())
-      val cents = vecs.filter(col("vec_id") % md === 1)
-        .select(col("vec_id").as("cid"), col("v").as("cv"))
-      val probes = cents.crossJoin(broadcast(qs))
-        .select(col("qid"), col("cid"), cos6(col("qv"), col("cv")).as("cs"))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy("qid").orderBy(col("cs").desc, col("cid"))))
-        .filter(col("rn") <= 4)
-        .select(col("qid"), col("cid").as("cell"))
+      val probes = Ivf.probes(Ivf.centroids(Tables.embeddings(s, d), md), qs, nprobe = 4)
       val ivf = Ivf.assignments(Tables.embeddings(s, d), md)
         .join(broadcast(probes), "cell")
         .filter(col("vec_id") =!= col("qid"))
@@ -407,12 +399,9 @@ object Vectors {
       truth AS (SELECT qid, vid FROM (SELECT qid, vid,
           row_number() OVER (PARTITION BY qid
             ORDER BY cos_sim DESC, vid) AS rn FROM csq) t WHERE rn <= 10),
-      probes AS (SELECT vid AS qid, cid AS cell FROM (
-          SELECT vid, cid, row_number() OVER (PARTITION BY vid
-            ORDER BY cs DESC, cid) AS rn
-          FROM sims WHERE vid IN (SELECT qid FROM q)) t WHERE rn <= 4),
+      ${Sql.ivfProbeCte("vid IN (SELECT qid FROM q)")},
       cand AS (SELECT p.qid, a.vid FROM assign a
-        JOIN probes p ON a.cell = p.cell WHERE a.vid <> p.qid),
+        JOIN qprobe p ON a.cell = p.cell WHERE a.vid <> p.qid),
       ivf AS (SELECT qid, vid FROM (SELECT c.qid, c.vid,
           row_number() OVER (PARTITION BY c.qid
             ORDER BY cs.cos_sim DESC, c.vid) AS rn
@@ -760,8 +749,7 @@ object Vectors {
       val md = graft.search.Ivf.adaptiveMod(e.count())
       graft.search.Ivf.assignments(e, md)
         .write.mode("overwrite").partitionBy("cell").parquet(s"$root/assign")
-      e.filter(col("vec_id") % md === 1)
-        .select(col("vec_id").as("cid"), toDouble(col("embedding")).as("cv"))
+      graft.search.Ivf.centroids(e, md)
         .write.mode("overwrite").parquet(s"$root/cent")
       e.select(col("vec_id"), toDouble(col("embedding")).as("v"))
         .write.mode("overwrite").parquet(s"$root/payload")
@@ -770,15 +758,13 @@ object Vectors {
       val cent = s.read.parquet(s"$root/cent")
       val payload = s.read.parquet(s"$root/payload")
       val q = payload.filter(col("vec_id") === 0L)
-        .select(col("v").as("qv"))
+        .select(col("vec_id").as("qid"), col("v").as("qv"))
       // centroid ranking collects the nprobe winners to the driver (4
       // rows; the codebook side is ≤2^16 by construction) so the cell
       // predicate is a PLANNING-TIME literal the scan can prune on —
       // a join would row-filter after listing every directory
-      val probedCells = cent.crossJoin(broadcast(q))
-        .select(col("cid"), cos6(col("cv"), col("qv")).as("cs"))
-        .orderBy(col("cs").desc, col("cid")).limit(4)
-        .collect().map(_.getLong(0))
+      val probedCells = graft.search.Ivf.probes(cent, q, nprobe = 4)
+        .collect().map(_.getLong(1))
       val cand = assign.filter(col("cell").isin(probedCells: _*))
         .filter(col("vec_id") =!= 0L)
       require(
@@ -798,9 +784,7 @@ object Vectors {
         .transform(df => Scratch.sealAndClean(df, root))
     },
     Some(s"""WITH ${Sql.ivfAssignCtes()},
-      qprobe AS (SELECT cid AS cell FROM (
-          SELECT cid, row_number() OVER (ORDER BY cs DESC, cid) AS rn
-          FROM sims WHERE vid = 0) t WHERE rn <= 4),
+      ${Sql.ivfProbeCte("vid = 0")},
       cand AS (SELECT vid FROM assign JOIN qprobe USING (cell) WHERE vid <> 0),
       qel AS (SELECT i, x FROM el WHERE vec_id = 0),
       qn AS (SELECT n2 AS qn2 FROM nrm WHERE vec_id = 0),
@@ -1051,10 +1035,7 @@ object Vectors {
       val indexed = emb.filter(col("vec_id") % 10 < 8)
       val cb = graft.search.Ivf.codebook(indexed,
         graft.search.Ivf.adaptiveMod(indexed.count()))
-      val tagged = emb.select(col("vec_id"),
-          graft.functions.IvfOps.nearestCol(toDouble(col("embedding")), cb)
-            .as("cell"))
-        .filter(col("cell").isNotNull)
+      val tagged = graft.search.Ivf.assign(emb, cb)
         .withColumn("in_a", col("vec_id") % 10 < 8)
       val pc = tagged.groupBy("cell").agg(
         sum(when(col("in_a"), 1L).otherwise(0L)).as("n_a"),

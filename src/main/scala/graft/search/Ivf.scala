@@ -1,6 +1,7 @@
 package graft.search
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.{IvfCodebook, IvfOps}
 import graft.functions.Portable.{cos6, toDouble}
@@ -9,22 +10,33 @@ import graft.functions.Portable.{cos6, toDouble}
   * scale path beside the exact brute-force baseline (q26), standing in
   * for the reference's Annoy index (PICO_search.py:28-86).
   *
-  * Training-free deterministic flavor: coarse centroids are a fixed
-  * sample of the corpus (`vec_id % centroidMod == 1`), collected once
-  * into a driver-side codebook (C ≈ √N rows — the IVF "train" step);
-  * every vector is assigned to its nearest centroid map-side by one
-  * codegen'd argmax pass (`NearestCentroid`) — a pure projection with
-  * no join and no exchange; a query probes its `nprobe` nearest cells
-  * and reranks only those cells' vectors exactly.
+  * Training-free deterministic flavor. Each index rule has one
+  * definition here, and every ANN path (the searches, IVF-PQ, k-means
+  * seeds, the staleness monitor, the streamed and persisted probes)
+  * uses it:
+  *  - Sample ([[sample]]): the coarse centroids are the vectors with
+  *    `vec_id % mod == 1 % mod` (every vector when mod is 1), fetched
+  *    ascending by cid into a driver-side codebook of at most
+  *    [[MaxCentroids]] rows (C ≈ √N — the IVF "train" step).
+  *  - Assignment ([[assignments]]): every vector goes to its nearest
+  *    centroid map-side by one codegen'd argmax pass
+  *    (`NearestCentroid`) — a pure projection with no join and no
+  *    exchange.
+  *  - Probe ([[probes]]): a query probes the `nprobe` centroids with
+  *    the highest 6-decimal cosine, ties to the smallest cid.
+  *  - Candidates ([[candidates]]): one projection over the corpus
+  *    computes each vector's cell and keeps the probed cells' vectors,
+  *    which are reranked exactly ([[search]], [[Pq.searchIvf]]).
   *
-  * Scale shape: the expensive side (N vectors) never shuffles for
-  * assignment. Each request assigns all N vectors again: no cell is
-  * stored, so probing cannot prune to the probed cells' vectors
-  * (ROADMAP direction 1 stores the cell at merge time).
+  * Scale shape: the expensive side (N vectors) never shuffles. Each
+  * request assigns all N vectors again: no cell is stored, so probing
+  * cannot prune to the probed cells' vectors (ROADMAP direction 1
+  * stores the cell at merge time).
   *
   * Plan/oracle determinism: similarities are rounded to 6 decimals and
-  * tie-broken by centroid id before the argmax, so assignment is
-  * reproducible across engines.
+  * tie-broken by centroid id, so assignment and probing are
+  * reproducible across engines (`Sql.ivfAssignCtes`/`ivfProbeCte` are
+  * the DuckDB twins).
   */
 object Ivf {
 
@@ -56,26 +68,44 @@ object Ivf {
     math.max(1L, n / c).toInt
   }
 
+  /** The centroid sample: the rows of `df` whose `vec_id % mod` equals
+    * `1 % mod`. `1 % mod`, not the literal 1, so that mod 1 — a corpus
+    * smaller than the minimum cell count — samples every vector instead
+    * of none; for every mod >= 2 the two are the same.
+    */
+  def sample(df: DataFrame, mod: Long): DataFrame =
+    df.filter(col("vec_id") % mod === lit(1L % mod))
+
+  /** The sampled centroids of the embeddings `e` as (cid, cv), `cv` the
+    * embedding as array<double>.
+    */
+  def centroids(e: DataFrame, mod: Long): DataFrame =
+    sample(e, mod).select(col("vec_id").as("cid"), toDouble(col("embedding")).as("cv"))
+
+  /** The [[sample]] of `df` on the driver, ascending by vec_id, at most
+    * `cap` rows: the fetch is a TakeOrdered of `cap + 1` rows, and an
+    * overflow fails loudly with the knob to turn.
+    */
+  private[search] def fetchSample(df: DataFrame, mod: Long, cap: Int,
+      what: String): Array[Row] = {
+    val rows = sample(df, mod).orderBy(col("vec_id")).limit(cap + 1).collect()
+    require(rows.length <= cap,
+      s"$what codebook exceeds the $cap-centroid cap: raise centroidMod " +
+        "so the sample stays ~sqrt(N)")
+    rows
+  }
+
   /** Coarse codebook: the sampled centroids, collected once on the
     * driver (C ≈ √N rows — the standard IVF train step; a 100 TB
     * corpus still has a codebook of a few tens of MB). Kept ascending
     * by cid so the expression's strict-`>` argmax breaks ties on the
-    * smallest id, matching the old window's `order by cs desc, cid`.
-    * Cardinality is capped by construction (see [[MaxCentroids]]).
+    * smallest id. Cardinality is capped by construction (see
+    * [[MaxCentroids]]).
     */
   def codebook(e: DataFrame, centroidMod: Int,
       cap: Int = MaxCentroids): IvfCodebook = {
-    // `1 % mod` (not the literal 1) so mod=1 — a corpus smaller than
-    // the minimum cell count, every vector its own centroid — selects
-    // everything instead of nothing; identical for every mod >= 2.
-    val rows = e.filter(col("vec_id") % centroidMod === lit(1L % centroidMod))
-      .select(col("vec_id"), toDouble(col("embedding")).as("cv"))
-      .orderBy(col("vec_id"))
-      .limit(cap + 1)
-      .collect()
-    require(rows.length <= cap,
-      s"IVF codebook exceeds the $cap-centroid cap: raise centroidMod " +
-        "so the sample stays ~sqrt(N)")
+    val rows = fetchSample(
+      e.select(col("vec_id"), toDouble(col("embedding")).as("cv")), centroidMod, cap, "IVF")
     val cids = rows.map(_.getLong(0))
     val raw = rows.map(r => if (r.isNullAt(1)) null else r.getSeq[Any](1))
     val valid = raw.map(s => s != null && s.forall(_ != null))
@@ -98,34 +128,60 @@ object Ivf {
     * centroid (zero norm, length mismatch) falls back to the smallest
     * sampled cid — the all-null window ordering's pick.
     */
-  def assignments(e: DataFrame, centroidMod: Int): DataFrame = {
-    val cb = codebook(e, centroidMod)
+  def assignments(e: DataFrame, centroidMod: Int): DataFrame =
+    assign(e, codebook(e, centroidMod))
+
+  /** [[assignments]] of the embeddings `e` against a given codebook. */
+  def assign(e: DataFrame, cb: IvfCodebook): DataFrame =
     e.select(col("vec_id"),
       IvfOps.nearestCol(toDouble(col("embedding")), cb).as("cell"))
       .filter(col("cell").isNotNull)
+
+  /** The probe step: for each query (qid, qv) of `queries`, the
+    * `nprobe` centroids (cid, cv) of `centroids` with the highest
+    * `cos6`, ranked `cs DESC, cid` per qid, as (qid, cell). The
+    * queries are broadcast against the centroids.
+    */
+  def probes(centroids: DataFrame, queries: DataFrame, nprobe: Int): DataFrame =
+    centroids.crossJoin(broadcast(queries))
+      .select(col("qid"), col("cid"), cos6(col("qv"), col("cv")).as("cs"))
+      .withColumn("rn", row_number().over(
+        Window.partitionBy("qid").orderBy(col("cs").desc, col("cid"))))
+      .filter(col("rn") <= nprobe)
+      .select(col("qid"), col("cid").as("cell"))
+
+  /** The query `queryId` of the embeddings `e` as (qid, qv). */
+  private[search] def query(e: DataFrame, queryId: Long): DataFrame =
+    e.filter(col("vec_id") === queryId)
+      .select(col("vec_id").as("qid"), toDouble(col("embedding")).as("qv"))
+
+  /** The candidates of one query `q` (qid, qv): (vec_id, v) of every
+    * vector whose cell is one of the query's `nprobe` probed cells, the
+    * query's own vector included. One projection over `e` computes
+    * each vector's cell against the codebook; the probed cells arrive
+    * as a broadcast.
+    */
+  private[search] def candidates(e: DataFrame, q: DataFrame, centroidMod: Int,
+      nprobe: Int): DataFrame = {
+    val cb = codebook(e, centroidMod)
+    val cells = probes(centroids(e, centroidMod), q, nprobe).select("cell")
+    e.select(col("vec_id"), toDouble(col("embedding")).as("v"))
+      .select(col("vec_id"), col("v"), IvfOps.nearestCol(col("v"), cb).as("cell"))
+      .join(broadcast(cells), "cell")
+      .select(col("vec_id"), col("v"))
   }
 
-  /** Top-k by exact cosine among the vectors in the query's `nprobe`
-    * nearest cells (query = `queryId`, excluded from results).
+  /** Top-k by exact cosine among the [[candidates]] of `queryId`, the
+    * query itself excluded. The exclusion (`vec_id <> qid`) sits in the
+    * rerank join so that the join keeps both query columns: its query
+    * broadcast is then the probe's, and the plan broadcasts it once.
     */
   def search(spark: SparkSession, e: DataFrame, queryId: Long,
       centroidMod: Int, nprobe: Int, k: Int): DataFrame = {
-    val vecs = e.select(col("vec_id"), toDouble(col("embedding")).as("v"))
-    val cents = vecs.filter(col("vec_id") % centroidMod === lit(1L % centroidMod))
-      .select(col("vec_id").as("cid"), col("v").as("cv"))
-    val qv = vecs.filter(col("vec_id") === queryId).select(col("v").as("qv"))
-
-    val probes = cents.crossJoin(broadcast(qv))
-      .select(col("cid"), cos6(col("qv"), col("cv")).as("cs"))
-      .orderBy(col("cs").desc, col("cid"))
-      .limit(nprobe)
-      .select(col("cid").as("cell"))
-
-    assignments(e, centroidMod)
-      .join(broadcast(probes), "cell")
-      .filter(col("vec_id") =!= queryId)
-      .join(vecs, "vec_id")
-      .crossJoin(broadcast(qv))
+    val q = query(e, queryId)
+    candidates(e, q, centroidMod, nprobe)
+      .crossJoin(broadcast(q))
+      .filter(col("vec_id") =!= col("qid"))
       .select(col("vec_id"), cos6(col("v"), col("qv")).as("cos_sim"))
       .orderBy(col("cos_sim").desc, col("vec_id"))
       .limit(k)

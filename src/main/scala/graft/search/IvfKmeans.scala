@@ -37,9 +37,11 @@ object IvfKmeans {
 
   /** Quantized vectors: (vec_id, q array<long>). */
   def quantize(e: DataFrame): DataFrame =
-    e.select(col("vec_id"),
-      transform(toDouble(col("embedding")), x => floor(x * lit(1e6)).cast("long"))
-        .as("q"))
+    e.select(col("vec_id"), quantized(toDouble(col("embedding"))).as("q"))
+
+  /** An array<double> column quantized to integers, `floor(x * 1e6)`. */
+  private[search] def quantized(v: Column): Column =
+    transform(v, x => floor(x * lit(1e6)).cast("long"))
 
   /** Production-shaped build parameters for [[train]]: K ≈ √N (the
     * [[Ivf.adaptiveMod]] clamp, 16..4096) and a TRAIN SAMPLE bounded
@@ -47,8 +49,8 @@ object IvfKmeans {
     * where full-N Lloyd pays O(N·K·D) passes a sampled trainer never
     * needs (standard IVF practice: train on a bounded sample, assign
     * the full corpus once with the frozen codebook — the [[Ivf]]
-    * serving seam). Returns (seedMod, sampleMod): seeds are
-    * vec_id % seedMod == 1 (≈K of them), the train set is
+    * serving seam). Returns (seedMod, sampleMod): seeds are the
+    * [[Ivf.sample]] at seedMod (≈K of them), the train set is
     * vec_id % sampleMod == 0 (≈32·K rows).
     */
   def adaptiveParams(n: Long): (Long, Long) = {
@@ -57,7 +59,7 @@ object IvfKmeans {
   }
 
   /** `iters` Lloyd iterations from sampled seeds
-    * (vec_id % centroidMod == 1, at most `maxK` of them — the codebook
+    * ([[Ivf.sample]] at centroidMod, at most `maxK` of them — the codebook
     * size is CAPPED, as in any real IVF build: per-iteration cost is
     * O(S·K·D) and K must stay ~√N / fixed, not grow with the corpus).
     * With `sampleMod` > 1 the assignment/update loop runs over the
@@ -81,18 +83,21 @@ object IvfKmeans {
 
     // seeds, ascending by vec_id so the argmin tie-break is the
     // smallest centroid id; the id bound keeps the seed predicate a
-    // pure scan filter (oracle-mirrorable), no limit/order needed
+    // pure scan filter (oracle-mirrorable), no limit needed: the
+    // first maxK sampled ids (ids are non-negative) lie below
+    // centroidMod·maxK + 1 % centroidMod — 1, mod+1, … for mod >= 2,
+    // and 0, 1, … for mod 1.
     // centroidMod is Long end-to-end: adaptiveParams' seedMod is
     // N/K, and truncating it through Int past N > K·2^31 would
     // silently diverge the Spark seed set from the oracle's
     // prm-derived seedmod (a wrong answer, not an error). Saturate
     // the bound instead of overflowing it.
     val seedBound = {
-      val p = BigInt(centroidMod) * maxK + 1
+      val p = BigInt(centroidMod) * maxK + 1L % centroidMod
       if (p > Long.MaxValue) Long.MaxValue else p.toLong
     }
-    val seeds = qAll.filter(col("vec_id") % centroidMod === 1 &&
-        col("vec_id") < seedBound)
+    val seeds = Ivf.sample(qAll, centroidMod)
+      .filter(col("vec_id") < seedBound)
       .orderBy(col("vec_id"))
       .collect()
     var cids = seeds.map(_.getLong(0))

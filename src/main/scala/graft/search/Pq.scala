@@ -24,8 +24,8 @@ import graft.functions.{KmeansOps, LongCodebook}
   */
 object Pq {
 
-  /** Driver-side PQ model: sampled sub-codebooks (`vec_id % centroidMod
-    * == 1`, the [[Ivf]] seam) over M subspaces of `sub` dims each.
+  /** Driver-side PQ model: sub-codebooks from [[Ivf.sample]] (the IVF
+    * centroid sample) over M subspaces of `sub` dims each.
     */
   final case class Model(
       cids: Array[Long], full: Array[Array[Long]], m: Int, sub: Int) {
@@ -41,11 +41,7 @@ object Pq {
 
   def model(quantized: DataFrame, centroidMod: Int, m: Int,
       cap: Int = MaxCentroids): Model = {
-    val seeds = quantized.filter(col("vec_id") % centroidMod === 1)
-      .orderBy(col("vec_id")).limit(cap + 1).collect()
-    require(seeds.length <= cap,
-      s"PQ codebook exceeds the $cap-centroid cap: raise centroidMod " +
-        "so the sample stays ~sqrt(N)")
+    val seeds = Ivf.fetchSample(quantized, centroidMod, cap, "PQ")
     val cids = seeds.map(_.getLong(0))
     val full = seeds.map(_.getSeq[Long](1).toArray)
     val dims = full.headOption.map(_.length).getOrElse(0)
@@ -81,57 +77,31 @@ object Pq {
 
   /** Top-k by ADC distance for `queryId` (excluded from results). */
   def search(e: DataFrame, queryId: Long, centroidMod: Int, m: Int,
-      k: Int): DataFrame = {
-    val q = IvfKmeans.quantize(e)
-    val mdl = model(q, centroidMod, m)
-    val qv = q.filter(col("vec_id") === queryId).head().getSeq[Long](1).toArray
-    q.select((col("vec_id") +: encodeCols(mdl)): _*)
-      .filter(col("vec_id") =!= queryId)
-      .select(col("vec_id"), adcCol(mdl, qv).as("adc_d2"))
-      .orderBy(col("adc_d2"), col("vec_id"))
-      .limit(k)
-  }
+      k: Int): DataFrame =
+    adcTopK(e, queryId, centroidMod, m, k)(identity)
 
   /** IVF-PQ: [[Ivf]]'s coarse cell pruning composed with the ADC
     * ranking — the composition a production vector index actually
-    * ships. Cell assignment, integer quantization, and the M subspace
-    * codes are all computed in ONE map-side projection pass over the
-    * corpus (no join, no exchange on the N-row side — codebooks ride
-    * the plan); the nprobe probed cells arrive as a broadcast, so only
-    * their CODES continue to the ADC top-k. At cluster scale the
-    * encoded table is persisted bucketed by cell and the probe join
-    * becomes partition pruning. Probing reuses [[Ivf.search]]'s exact
-    * semantics (cosine-nearest sampled centroids, rounded 6dp, ties to
-    * the smallest cid).
+    * ships. The candidates are [[Ivf.search]]'s (one map-side
+    * projection computes each vector's cell and keeps the probed
+    * cells; no join or exchange on the N-row side), and only their
+    * quantized CODES continue to the ADC top-k.
     */
   def searchIvf(e: DataFrame, queryId: Long, centroidMod: Int,
-      nprobe: Int, m: Int, k: Int): DataFrame = {
-    import graft.functions.Portable.{cos6, toDouble}
-    val vecs = e.select(col("vec_id"), toDouble(col("embedding")).as("v"))
-    val cents = vecs.filter(col("vec_id") % centroidMod === 1)
-      .select(col("vec_id").as("cid"), col("v").as("cv"))
-    val qvd = vecs.filter(col("vec_id") === queryId).select(col("v").as("qv"))
-    val probes = cents.crossJoin(broadcast(qvd))
-      .select(col("cid"), cos6(col("qv"), col("cv")).as("cs"))
-      .orderBy(col("cs").desc, col("cid"))
-      .limit(nprobe)
-      .select(col("cid").as("cell"))
+      nprobe: Int, m: Int, k: Int): DataFrame =
+    adcTopK(e, queryId, centroidMod, m, k)(_ =>
+      Ivf.candidates(e, Ivf.query(e, queryId), centroidMod, nprobe)
+        .select(col("vec_id"), IvfKmeans.quantized(col("v")).as("q")))
 
+  /** Both searches' ADC top-k over the (vec_id, q) rows that `rows`
+    * picks from the quantized corpus. */
+  private def adcTopK(e: DataFrame, queryId: Long, centroidMod: Int, m: Int,
+      k: Int)(rows: DataFrame => DataFrame): DataFrame = {
     val q = IvfKmeans.quantize(e)
     val mdl = model(q, centroidMod, m)
-    val cb = Ivf.codebook(e, centroidMod)
     val qv = q.filter(col("vec_id") === queryId).head().getSeq[Long](1).toArray
-    // one pass: cell + quantized vector + M codes, all map-side
-    val encoded = e
-      .select(col("vec_id"), toDouble(col("embedding")).as("v"))
-      .select(col("vec_id"),
-        graft.functions.IvfOps.nearestCol(col("v"), cb).as("cell"),
-        transform(col("v"), x => floor(x * lit(1e6)).cast("long")).as("q"))
-      .filter(col("cell").isNotNull)
-      .select((col("vec_id") +: col("cell") +: encodeCols(mdl)): _*)
-    encoded
-      .join(broadcast(probes), "cell")
-      .filter(col("vec_id") =!= queryId)
+    rows(q).filter(col("vec_id") =!= queryId)
+      .select((col("vec_id") +: encodeCols(mdl)): _*)
       .select(col("vec_id"), adcCol(mdl, qv).as("adc_d2"))
       .orderBy(col("adc_d2"), col("vec_id"))
       .limit(k)

@@ -34,11 +34,8 @@ object StreamStaleness {
     // mod=1 loads EVERY persisted row: the centroid table was already
     // sampled (adaptively) at build time, so re-filtering here would
     // double-sample and drop most of the frozen codebook.
-    val cb = graft.search.Ivf.codebook(
-      df.sparkSession.read.parquet(centsDir), 1)
-    df.select(graft.functions.IvfOps.nearestCol(
-        graft.functions.Portable.toDouble(col("embedding")), cb).as("cell"))
-      .filter(col("cell").isNotNull)
+    graft.search.Ivf.assign(df,
+      graft.search.Ivf.codebook(df.sparkSession.read.parquet(centsDir), 1))
   }
 
   /** Batch id that built the frozen baseline, or None before any
@@ -74,7 +71,7 @@ object StreamStaleness {
       // and makes every later window's assignment pass quadratic, the
       // exact class the round-9 sf1 sweep measured in the batch twins.
       val md = graft.search.Ivf.adaptiveMod(batch.count())
-      batch.filter(col("vec_id") % md === lit(1L % md))
+      graft.search.Ivf.sample(batch, md)
         .coalesce(1).write.mode("overwrite").parquet(centsDir)
       cellsOf(batch, centsDir).groupBy("cell").agg(count(lit(1)).as("c"))
         .coalesce(1).write.mode("overwrite").parquet(refHistDir)

@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 
 /** The ONE local-mode session builder for every harness main (Bench,
-  * Verify, VerifySome, Plans, StageProfile), the
+  * Verify, Plans, StageProfile), the
   * repository benchmark (perfbench.Main) and the test suite
   * (TestSpark). These confs are HARNESS-ONLY
   * local-mode compensations — `graft.SparkEntry`, the library

@@ -57,4 +57,54 @@ class IvfSpec extends AnyFunSuite {
       .filter(col("vec_id") === col("cell")).count()
     assert(self === 12)
   }
+
+  /** Cosines as IvfOps and `cos6` compute them, unrounded. */
+  private def rawCos(q: Seq[Double], v: Seq[Double]): Double =
+    q.zip(v).map { case (a, b) => a * b }.sum /
+      math.sqrt(q.map(x => x * x).sum * v.map(x => x * x).sum)
+
+  private def round6(x: Double): Double =
+    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+
+  /** Each case: centroids in ascending cid order whose best two rounded
+    * cosines to the query tie, and the cid every path must pick.
+    */
+  private val tieCases: Seq[(String, Seq[(Long, Seq[Double])], Long)] = {
+    def at(c: Double) = Seq(c, math.sqrt(1 - c * c))
+    Seq(
+      // raw cosines 0.8000001 < 0.8000004: the larger cid has the higher
+      // raw cosine, but both round to 0.800000, so the smaller cid wins
+      ("raw cosines within 1e-6",
+        Seq(1L -> at(0.5), 2L -> at(0.8000001), 7L -> at(0.8000004)), 2L),
+      // one direction at two lengths: equal after rounding
+      ("one direction at two lengths",
+        Seq(4L -> Seq(0.6, 0.8), 6L -> Seq(0.3, 0.4), 9L -> at(0.1)), 4L))
+  }
+
+  test("rounded-cosine ties go to the smallest cid in nearest, top2 and probes") {
+    import graft.functions.{IvfCodebook, IvfOps}
+    val q = Seq(1.0, 0.0)
+    for ((name, cents, want) <- tieCases) {
+      val Seq((cidA, csA), (cidB, csB)) =
+        cents.map { case (cid, v) => cid -> rawCos(q, v) }.sortBy(-_._2).take(2)
+      assert(round6(csA) == round6(csB) && math.abs(csA - csB) < 1e-6,
+        s"$name: the case must plant a rounded tie")
+      assert(Set(cidA, cidB).min == want)
+
+      val cb = new IvfCodebook(cents.map(_._1).toArray,
+        cents.map(_._2.toArray).toArray, Array.fill(cents.size)(true))
+      val qArr = org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(q.toArray)
+      assert(IvfOps.nearest(qArr, cb) == want, s"$name: nearest (interpreted)")
+      val qs = Seq((0L, q)).toDF("qid", "qv")
+      val r = qs.select(IvfOps.nearestCol(col("qv"), cb).as("cell"),
+        IvfOps.top2Col(col("qv"), cb).as("t")).head()
+      assert(r.getLong(0) == want, s"$name: nearest")
+      assert(r.getStruct(1).getLong(0) == want, s"$name: top2.cell")
+      assert(r.getStruct(1).getDouble(1) == r.getStruct(1).getDouble(2),
+        s"$name: top2's two cosines tie")
+      val probed = Ivf.probes(cents.toDF("cid", "cv"), qs, nprobe = 1)
+        .collect().map(_.getLong(1))
+      assert(probed.toSeq == Seq(want), s"$name: first probed cell")
+    }
+  }
 }

@@ -152,4 +152,19 @@ class KmeansSpec extends AnyFunSuite {
     // cell 11 retained its (identical) centroid values
     assert(byCell(11L).forall(_.getLong(2) === 1000000L))
   }
+
+  test("a corpus under 32 vectors (seed mod 1) seeds at most maxK cells") {
+    val rnd = new scala.util.Random(17)
+    val e = (0 until 20).map(i => (i.toLong, Seq.fill(4)(rnd.nextGaussian().toFloat)))
+      .toDF("vec_id", "embedding")
+    val (seedMod, _) = IvfKmeans.adaptiveParams(20)
+    assert(seedMod == 1L)
+    def cells(maxK: Int) = IvfKmeans.train(e, seedMod, iters = 1, maxK = maxK)
+      .select("cell").distinct().as[Long].collect().sorted.toSeq
+    assert(cells(5) == (0L until 5L))
+    assert(cells(Int.MaxValue) == (0L until 20L))
+    // the same bound at mod 3: ids 1, 4, 7, 10
+    assert(IvfKmeans.train(e, 3L, iters = 1, maxK = 4)
+      .select("cell").distinct().as[Long].collect().sorted.toSeq == Seq(1L, 4L, 7L, 10L))
+  }
 }

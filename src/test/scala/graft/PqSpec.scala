@@ -53,4 +53,32 @@ class PqSpec extends AnyFunSuite {
     assert(top.toSet === (1L until 30L).filter(_ % 3 == 0).toSet,
       "nearest by ADC must be the query's own planted cluster")
   }
+
+  /** 20 random vectors: under 32, so [[graft.search.Ivf.adaptiveMod]]
+    * is 1 and every vector is sampled.
+    */
+  private def small() = {
+    import spark.implicits._
+    val rnd = new scala.util.Random(13)
+    val e = (0L until 20L).map(id => (id, Seq.fill(16)(rnd.nextGaussian().toFloat)))
+      .toDF("vec_id", "embedding")
+    val mod = graft.search.Ivf.adaptiveMod(20)
+    assert(mod == 1)
+    (e, mod)
+  }
+
+  test("a corpus under 32 vectors: Pq.search returns k scored rows") {
+    val (e, mod) = small()
+    val top = Pq.search(e, queryId = 0L, centroidMod = mod, m = 4, k = 5).collect()
+    assert(top.length == 5 && top.forall(!_.isNullAt(1)), top.toSeq)
+  }
+
+  test("a corpus under 32 vectors: Pq.searchIvf returns k scored rows") {
+    val (e, mod) = small()
+    // every vector is its own cell, so the 4 probed cells hold the
+    // query and its 3 nearest vectors
+    val top = Pq.searchIvf(e, queryId = 0L, centroidMod = mod, nprobe = 4, m = 4, k = 3)
+      .collect()
+    assert(top.length == 3 && top.forall(!_.isNullAt(1)), top.toSeq)
+  }
 }
